@@ -107,10 +107,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-  /** Distinct (id, shingle) pairs. */
-  def shingleSet(df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
-    df.select(id.as("doc_id"), explode(TextOps.shingles(text, n)).as("sh")).distinct()
-
   /** One-shuffle per-doc dedup stage: MinHash signature AND the sorted
     * distinct shingle-hash array from a single `groupBy(doc_id)` over the
     * raw (non-distinct) shingle stream — `min` is duplicate-insensitive
@@ -226,17 +222,26 @@ object Dedup {
       .distinct()
   }
 
-  /** (doc_id, band, bh) band rows for a (doc_id, sig) frame — the LSH
-    * join currency shared by [[lshCandidatePairs]] and
-    * [[incrementalDedup]]. Band hashing is pure per-row arithmetic over
-    * the signature, so band rows of a stored index are a narrow
-    * projection over its scan, never a shuffle. */
-  private[graft] def bandedSignatures(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+  /** The `bands` LSH band hashes of a k-long signature column: band
+    * `bd` hashes signature rows [bd·k/bands, (bd+1)·k/bands) with the band
+    * number. The ONE place the banding arithmetic lives — the stored
+    * index, [[incrementalDedup]] and the streaming near-dup check all
+    * band through it, because two drifting copies would empty the
+    * candidate join without an error. */
+  private[graft] def bandHashes(sig: Column, k: Int, bands: Int): Seq[Column] = {
     val rows = k / bands
-    val bandCols = (0 until bands).map { bd =>
-      struct(lit(bd).as("band"),
-        xxhash64(((bd * rows) until ((bd + 1) * rows)).map(j => col("sig")(j)) :+ lit(bd): _*)
-          .as("bh"))
+    (0 until bands).map(bd =>
+      xxhash64(((bd * rows) until ((bd + 1) * rows)).map(j => sig(j)) :+ lit(bd): _*))
+  }
+
+  /** (doc_id, band, bh) band rows for a (doc_id, sig) frame — the LSH
+    * join currency shared by [[lshCandidatePairs]] and [[indexPairs]].
+    * Band hashing is pure per-row arithmetic over the signature, so band
+    * rows of a stored index are a narrow projection over its scan, never
+    * a shuffle. */
+  private[graft] def bandedSignatures(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+    val bandCols = bandHashes(col("sig"), k, bands).zipWithIndex.map { case (bh, bd) =>
+      struct(lit(bd).as("band"), bh.as("bh"))
     }
     sig
       .select(col("doc_id"), explode(array(bandCols: _*)).as("b"))
@@ -567,10 +572,19 @@ object Dedup {
     // banding and verification both read the persisted docs-sized frame —
     // at cluster scale this is the stage you would checkpoint to object
     // storage. (Released by session cache teardown or caller unpersist.)
-    val stage = memoPersist(docSignatures(df, id, text, n, k))
-    val pairs = lshCandidatePairs(stage.select(col("doc_id"), col("sig")), k, bands)
-    jaccardForPairsOnArrays(pairs, stage).filter(col("jaccard") >= threshold)
+    verifiedPairs(memoPersist(docSignatures(df, id, text, n, k)), k, bands, threshold)
   }
+
+  /** Verified near-dup pairs within one [[docSignatures]] frame: LSH
+    * candidates from its `sig`, exact Jaccard from its `hs`, kept at
+    * `threshold`. Reads `sigs` twice, so callers persist it — each with
+    * its own lifecycle ([[minhashDedup]] and [[incrementalDedup]] memo,
+    * the registered pair stage unpersists after one materialization). */
+  private[graft] def verifiedPairs(sigs: DataFrame, k: Int, bands: Int,
+      threshold: Double): DataFrame =
+    jaccardForPairsOnArrays(
+      lshCandidatePairs(sigs.select(col("doc_id"), col("sig")), k, bands), sigs)
+      .filter(col("jaccard") >= threshold)
 
   // ---------------------------------------------- incremental dedup index
 
@@ -691,11 +705,19 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     requireIndexParams(spark, indexTable, "incrementalDedup", k, n)
     val deltaSig = memoPersist(docSignatures(delta, id, text, n, k))
-    val index = spark.table(indexTable)
-    val intra = jaccardForPairsOnArrays(
-      lshCandidatePairs(deltaSig.select(col("doc_id"), col("sig")), k, bands),
-      deltaSig)
-      .filter(col("jaccard") >= threshold)
+    verifiedPairs(deltaSig, k, bands, threshold)
+      .unionByName(indexPairs(spark.table(indexTable), deltaSig, k, bands, threshold))
+  }
+
+  /** Verified near-dup pairs between a [[docSignatures]] delta frame and
+    * the stored signature index (the cross half of [[incrementalDedup]],
+    * and each micro-batch of the streaming foreachBatch sink). The delta's
+    * band rows broadcast into the index's band projection, so candidate
+    * generation is one BroadcastHashJoin over the index scan, and the
+    * (candidate ids ⋈ delta hash-set) frame broadcasts again into
+    * [[verifyIndexPairs]]. Reads `deltaSig` twice, so callers persist it. */
+  private[graft] def indexPairs(index: DataFrame, deltaSig: DataFrame, k: Int,
+      bands: Int, threshold: Double): DataFrame = {
     val idxBands = bandedSignatures(index.select(col("doc_id"), col("sig")), k, bands)
     val dBands = bandedSignatures(deltaSig.select(col("doc_id"), col("sig")), k, bands)
     val cand = idxBands.as("x")
@@ -706,8 +728,19 @@ object Dedup {
     val withDelta = cand.join(
       deltaSig.select(col("doc_id").as("delta_id"), col("hs").as("hs_d")),
       "delta_id")
-    val crossPairs = index.select(col("doc_id").as("idx_id"), col("hs").as("hs_i"))
-      .join(broadcast(withDelta), "idx_id")
+    verifyIndexPairs(index, broadcast(withDelta), threshold)
+  }
+
+  /** Exact Jaccard of (idx_id, delta_id, hs_d) candidates against the
+    * index's stored hash sets, projected to the ordered
+    * `(doc_a, doc_b, inter, na, nb, jaccard)` pair shape of
+    * [[jaccardForPairsOnArrays]] and kept at `threshold`. Shared by
+    * [[indexPairs]] and the stateless streaming check, which brings its
+    * own exactly-once candidates. */
+  private[graft] def verifyIndexPairs(index: DataFrame, cand: DataFrame,
+      threshold: Double): DataFrame =
+    index.select(col("doc_id").as("idx_id"), col("hs").as("hs_i"))
+      .join(cand, "idx_id")
       .select(col("idx_id"), col("delta_id"),
         graft.functions.SortedLongIntersectCount(col("hs_i"), col("hs_d")).as("inter"),
         size(col("hs_i")).cast("long").as("ni"),
@@ -721,8 +754,6 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
-    intra.unionByName(crossPairs)
-  }
 
   // --------------------------------------------------- near-dup clustering
 

@@ -63,11 +63,12 @@ object Graph {
     for (_ <- 1 to iters) {
       // explicit width-derived repartition BEFORE the groupBy: the agg
       // reuses it (same key ⇒ no second exchange), so the round's
-      // shuffle is ⌈n/256Ki⌉ wide instead of the session default — the
-      // checkpoint/probe actions run on the no-AQE RDD path, where
-      // nothing else coalesces these node-sized exchanges (r15)
+      // shuffle is ⌈m/256Ki⌉ wide instead of the session default (the
+      // exchange carries one row per edge, so the edge count bounds it)
+      // — the checkpoint/probe actions run on the no-AQE RDD path, where
+      // nothing else coalesces these exchanges (r15)
       val contrib = Spread.shrinkKeyed(
-        ranks.join(normS, col("node") === col("src")), n, col("dst"))
+        ranks.join(normS, col("node") === col("src")), m, col("dst"))
         .groupBy(col("dst")).agg(sum(col("rank") * col("p")).as("in_mass"))
       // dangling mass = Σ rank over out-edge-less nodes, folded in as a
       // 1-row broadcast — NO driver action inside the loop (an earlier
@@ -169,7 +170,7 @@ object Graph {
       // width-derived repartition shared by the groupBy — see
       // [[pageRank]]'s contrib note
       val contrib = Spread.shrinkKeyed(
-        ranks.join(eN, col("node") === col("src")), n, col("dst"))
+        ranks.join(eN, col("node") === col("src")), m, col("dst"))
         .groupBy(col("dst"))
         .agg(sum(expr("(rank * w) div wout")).as("in_mass"))
       val dang = ranks.join(srcs, Seq("node"), "left_anti")
@@ -294,10 +295,11 @@ object Graph {
     val bad = e.filter(col("w") <= 0 || col("w").isNull).limit(1).collect()
     require(bad.isEmpty,
       s"ssspFixed needs positive integer weights; got ${bad.mkString}")
-    // distance frames hold ≤ distinct-node ≤ edge-count rows: checkpoint
-    // them at a width derived from that bound (Spread.shrinkTo), not the
-    // session shuffle width — the count is one cheap job on the already-
-    // cached edge frame, repaid every round
+    // checkpoint distance frames at a width derived from the directed
+    // edge count (Spread.shrinkTo), not the session shuffle width — the
+    // count is one cheap job on the already-cached edge frame, repaid
+    // every round. The bound is approximate: seeds outside the edge set
+    // add distance rows beyond it, so it only steers partition rounding
     val eBound = e.count()
     // narrow the per-round edge-cache scans too (pageRank cache-width
     // note): the cache materializes at session width on the no-AQE path

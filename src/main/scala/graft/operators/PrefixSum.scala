@@ -41,13 +41,9 @@ object PrefixSum {
     // calibration sweep otherwise schedules 32 near-empty tasks in all
     // three phase jobs. Unknown bound (-1) keeps the session width.
     val ranged =
-      if (rowBound >= 0L) {
-        val n = df.sparkSession.sessionState.conf.numShufflePartitions
-        val rowsPerPartition = 1L << 18
-        val p = math.max(1L, math.min(n.toLong,
-          (rowBound + rowsPerPartition - 1) / rowsPerPartition)).toInt
-        df.repartitionByRange(p, order: _*)
-      } else df.repartitionByRange(order: _*)
+      if (rowBound >= 0L)
+        df.repartitionByRange(Spread.derivedWidth(df.sparkSession, rowBound), order: _*)
+      else df.repartitionByRange(order: _*)
     val meta = Dedup.memoPersist(
       ranged.withColumn("__pid", spark_partition_id()))
     val within = Window.partitionBy(col("__pid")).orderBy(order: _*)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, LeafNode, LogicalPlan, Project, SubqueryAlias}
 
@@ -68,13 +68,8 @@ object Spread {
     * pass a row BOUND they already hold (a convergence-probe count, the
     * node count) — exact integer arithmetic downstream is
     * partition-order-free, so oracle hashes are unchanged. */
-  def shrinkTo(df: DataFrame, rowBound: Long): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val rowsPerPartition = 1L << 18
-    val p = math.max(1L, math.min(n.toLong,
-      (math.max(rowBound, 0L) + rowsPerPartition - 1) / rowsPerPartition)).toInt
-    df.coalesce(p)
-  }
+  def shrinkTo(df: DataFrame, rowBound: Long): DataFrame =
+    df.coalesce(derivedWidth(df.sparkSession, rowBound))
 
   /** [[shrinkTo]]'s keyed sibling: hash-repartition on `keys` at the
     * same row-count-derived width, placed immediately before a
@@ -83,12 +78,17 @@ object Spread {
     * own session-wide one. For iterative operators whose actions run on
     * the RDD path, where AQE coalescing never fires. */
   def shrinkKeyed(df: DataFrame, rowBound: Long,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+      keys: org.apache.spark.sql.Column*): DataFrame =
+    df.repartition(derivedWidth(df.sparkSession, rowBound), keys: _*)
+
+  /** The row-count-derived width shared by [[shrinkTo]], [[shrinkKeyed]]
+    * and [[PrefixSum.runningSums]]: ⌈rowBound / 256 Ki⌉ clamped to
+    * [1, session shuffle parallelism] (a negative bound counts as 0). */
+  private[graft] def derivedWidth(spark: SparkSession, rowBound: Long): Int = {
+    val n = spark.sessionState.conf.numShufflePartitions
     val rowsPerPartition = 1L << 18
-    val p = math.max(1L, math.min(n.toLong,
+    math.max(1L, math.min(n.toLong,
       (math.max(rowBound, 0L) + rowsPerPartition - 1) / rowsPerPartition)).toInt
-    df.repartition(p, keys: _*)
   }
 
   /** True iff the analyzed plan is a Project/Filter/alias chain over a

@@ -158,10 +158,7 @@ object LlmOps {
         // smaller) verified pairs, nothing else.
         val docs = Tables.documents(spark, dir)
         val stage = Dedup.docSignatures(docs, col("doc_id"), col("text"), 3, 64).persist()
-        val pairs = Dedup.jaccardForPairsOnArrays(
-            Dedup.lshCandidatePairs(stage.select(col("doc_id"), col("sig")), 64, 16), stage)
-          .filter(col("jaccard") >= 0.8)
-          .persist()
+        val pairs = Dedup.verifiedPairs(stage, 64, 16, 0.8).persist()
         pairs.count() // materialize through the stage while it is cached
         stage.unpersist()
         pairs

@@ -153,7 +153,9 @@ object Typed {
     * bottom-k-by-hash sample is a pure function of (salt, data) where
     * every sketch (incl. [[approxPct]]) is merge-order-dependent.
     * [[exactPct]] is the exactness anchor; the spec bounds the rank
-    * error. */
+    * error. The row key `l_orderkey|l_linenumber` is not unique, so
+    * rows with equal hashes rank by value (the `struct(h, v)` order),
+    * and the oracle orders by the same two keys. */
   def quantileSample(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Sampling.sampleQuantiles(
       Tables.lineitem(spark, dir), col("l_returnflag"),
@@ -166,7 +168,7 @@ object Typed {
       |  SELECT l_returnflag AS grp, l_extendedprice AS v,
       |    row_number() OVER (PARTITION BY l_returnflag
       |      ORDER BY md5('graft' || CAST(l_orderkey AS VARCHAR) || '|' ||
-      |                   CAST(l_linenumber AS VARCHAR))) AS rn
+      |                   CAST(l_linenumber AS VARCHAR)), l_extendedprice) AS rn
       |  FROM lineitem),
       |t AS (SELECT grp, list(v ORDER BY v) AS vs
       |      FROM s WHERE rn <= 512 GROUP BY grp)

@@ -22,13 +22,4 @@ object Manifest {
         s"map_keys(from_json(to_json(jobs.$job.files), 'map<string,struct<size:long>>'))"))
         .as("file"))
       .orderBy("file")
-
-  /** The file names resolved against the dump directory — ready for
-    * [[WikiXml.read]], minus any already-ingested outputs via
-    * [[Sink.incrementalSkip]]'s anti-join upstream. Driver-side (the list
-    * is catalog-sized, thousands at most). */
-  def inputPaths(spark: SparkSession, manifestPath: String, baseDir: String,
-      job: String = "metahistory7zdump"): Seq[String] =
-    fileList(spark, manifestPath, job).collect()
-      .map(r => s"${baseDir.stripSuffix("/")}/${r.getString(0)}").toSeq
 }

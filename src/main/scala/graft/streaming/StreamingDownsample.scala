@@ -378,8 +378,8 @@ object StreamingDownsample {
     *  - MinHash signature: `sig[i] = array_min(transform(hs, h →
     *    xxhash64(h, i)))` — identical values to the batch `groupBy.min`
     *    because min is duplicate-insensitive;
-    *  - LSH bands: the same band-hash arithmetic as the stored index
-    *    (per-row, exploded);
+    *  - LSH bands: [[graft.operators.Dedup.bandHashes]], the banding the
+    *    stored index was built with (per-row, exploded);
     *  - candidate generation: stream–static equi-join on (band, bh)
     *    against the index's band projection — stateless;
     *  - **exactly-once per pair without state**: a pair colliding in
@@ -389,23 +389,13 @@ object StreamingDownsample {
     *    one — a pure per-row filter over two fixed-width arrays (the
     *    k-long signatures themselves never ship past the banding
     *    projection);
-    *  - verification: second stream–static join pulls the index doc's
-    *    stored hash set; the codegen'd `SortedLongIntersectCount`
-    *    merge-walks the exact Jaccard per-row.
+    *  - verification: [[graft.operators.Dedup.verifyIndexPairs]], the
+    *    batch kernel's stream–static join against the index doc's stored
+    *    hash set, exact Jaccard and ordered pair projection.
     *
     * Pairs *within* the stream are deliberately out of scope here: that
     * is the batch step of the loop (dedupe the accumulated batch, then
     * [[graft.operators.Dedup.appendToSignatureIndex]] folds it in). */
-  /** Band-hash array shared by [[nearDupStream]] and
-    * [[nearDupPairsBatch]] (and identical to the stored index's banding
-    * arithmetic — a drifted copy would silently empty the candidate
-    * join). */
-  private def bandHashesOf(sig: Column, k: Int, bands: Int): Column = {
-    val rows = k / bands
-    array((0 until bands).map(bd =>
-      xxhash64(((bd * rows) until ((bd + 1) * rows)).map(j => sig(j)) :+ lit(bd): _*)): _*)
-  }
-
   def nearDupStream(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
       indexTable: String, n: Int = 3, k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
@@ -415,7 +405,7 @@ object StreamingDownsample {
     // parameters — see [[Dedup.requireIndexParams]] for why a mismatch
     // on either silently drops candidates instead of erroring.
     Dedup.requireIndexParams(spark, indexTable, "nearDupStream", k, n)
-    def bandHashes(sig: Column): Column = bandHashesOf(sig, k, bands)
+    def bandArray(sig: Column): Column = array(Dedup.bandHashes(sig, k, bands): _*)
     // Band rows carry (delta_id, hss, bhs_d): the full 64-long signature
     // collapses to its 16 band hashes BEFORE the explode, so each of the
     // `bands` rows ships a fixed 16-long array instead of the k-long
@@ -430,7 +420,7 @@ object StreamingDownsample {
       .withColumn("sig", array((0 until k).map(i =>
         array_min(transform(col("hss"), h => xxhash64(h, lit(i))))): _*))
       .select(col("doc_id").as("delta_id"), col("hss"),
-        bandHashes(col("sig")).as("bhs_d"))
+        bandArray(col("sig")).as("bhs_d"))
     val streamBands = withSig
       .select(col("delta_id"), col("hss"), col("bhs_d"),
         posexplode(col("bhs_d")).as(Seq("band", "bh")))
@@ -438,7 +428,7 @@ object StreamingDownsample {
     // scan — no bandedSignatures-then-rejoin round trip (the band-hash
     // array is per-row arithmetic, so the sig_i it replaced never ships)
     val idxBands = index
-      .select(col("doc_id").as("idx_id"), bandHashes(col("sig")).as("bhs_i"))
+      .select(col("doc_id").as("idx_id"), bandArray(col("sig")).as("bhs_i"))
       .select(col("idx_id"), col("bhs_i"),
         posexplode(col("bhs_i")).as(Seq("band", "bh")))
     val minCollidingBand = array_min(
@@ -447,98 +437,31 @@ object StreamingDownsample {
           bd).otherwise(lit(bands))))
     val cand = streamBands.join(idxBands, Seq("band", "bh"))
       .filter(col("band") === minCollidingBand)
-      .select(col("delta_id"), col("idx_id"), col("hss"))
-    cand
-      .join(index.select(col("doc_id").as("idx_id"), col("hs").as("hs_i")), "idx_id")
-      .select(col("delta_id"), col("idx_id"),
-        graft.functions.SortedLongIntersectCount(col("hs_i"), col("hss")).as("inter"),
-        size(col("hs_i")).cast("long").as("ni"),
-        size(col("hss")).cast("long").as("nd"))
-      .select(
-        least(col("idx_id"), col("delta_id")).as("doc_a"),
-        greatest(col("idx_id"), col("delta_id")).as("doc_b"),
-        col("inter"),
-        when(col("idx_id") < col("delta_id"), col("ni")).otherwise(col("nd")).as("na"),
-        when(col("idx_id") < col("delta_id"), col("nd")).otherwise(col("ni")).as("nb"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+      .select(col("delta_id"), col("idx_id"), col("hss").as("hs_d"))
+    Dedup.verifyIndexPairs(index, cand, threshold)
   }
 
-  /** The **foreachBatch formulation** of [[nearDupStream]]: identical
-    * pair set (StreamingSpec asserts it), but the band rows ship ONLY
-    * `(delta_id, bhs, band, bh)` — the per-doc shingle-hash array `hss`
-    * is re-joined AFTER the min-colliding-band filter, against the
-    * batch-local shingle frame on `delta_id`. A stateless streaming plan
-    * cannot do that (re-attaching the payload is a stream–stream
-    * self-join, which append mode forbids without a state store), but
-    * inside `foreachBatch` the micro-batch is an ordinary DataFrame, so
-    * the join is legal and the per-batch candidate shuffle narrows
-    * `bands`-fold for wide documents: `hss` is duplicated-token-mass
-    * sized per doc and was riding every one of the 16 band rows. The
-    * join-back side recomputes only the shingle array (column pruning
-    * drops the 64-minhash projection from that subtree), and the
-    * survivors joining it are candidate-sized, not batch-sized.
-    *
-    * Use [[nearDupForeachBatch]] to mount it as a sink, or call directly
-    * per micro-batch; the stateless [[nearDupStream]] stays the right
-    * form for pure-append pipelines that want pairs as a live stream. */
-  def nearDupPairsBatch(docs: DataFrame,
-      spark: org.apache.spark.sql.SparkSession, indexTable: String,
-      n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    import graft.operators.Dedup
-    val index = spark.table(indexTable)
-    Dedup.requireIndexParams(spark, indexTable, "nearDupPairsBatch", k, n)
-    val sigs = Dedup.shingleHashes(docs, col("doc_id"), col("text"), n)
-      .withColumn("hss", sort_array(array_distinct(col("hs"))))
-      .withColumn("sig", array((0 until k).map(i =>
-        array_min(transform(col("hss"), h => xxhash64(h, lit(i))))): _*))
-      .select(col("doc_id").as("delta_id"), col("hss"),
-        bandHashesOf(col("sig"), k, bands).as("bhs_d"))
-    val streamBands = sigs // narrow: no hss on the exploded rows
-      .select(col("delta_id"), col("bhs_d"),
-        posexplode(col("bhs_d")).as(Seq("band", "bh")))
-    val idxBands = index
-      .select(col("doc_id").as("idx_id"),
-        bandHashesOf(col("sig"), k, bands).as("bhs_i"))
-      .select(col("idx_id"), col("bhs_i"),
-        posexplode(col("bhs_i")).as(Seq("band", "bh")))
-    val minCollidingBand = array_min(
-      transform(sequence(lit(0), lit(bands - 1)), bd =>
-        when(element_at(col("bhs_d"), bd + 1) === element_at(col("bhs_i"), bd + 1),
-          bd).otherwise(lit(bands))))
-    val cand = streamBands.join(idxBands, Seq("band", "bh"))
-      .filter(col("band") === minCollidingBand)
-      .select(col("delta_id"), col("idx_id"))
-    cand
-      .join(sigs.select(col("delta_id"), col("hss")), "delta_id")
-      .join(index.select(col("doc_id").as("idx_id"), col("hs").as("hs_i")), "idx_id")
-      .select(col("delta_id"), col("idx_id"),
-        graft.functions.SortedLongIntersectCount(col("hs_i"), col("hss")).as("inter"),
-        size(col("hs_i")).cast("long").as("ni"),
-        size(col("hss")).cast("long").as("nd"))
-      .select(
-        least(col("idx_id"), col("delta_id")).as("doc_a"),
-        greatest(col("idx_id"), col("delta_id")).as("doc_b"),
-        col("inter"),
-        when(col("idx_id") < col("delta_id"), col("ni")).otherwise(col("nd")).as("na"),
-        when(col("idx_id") < col("delta_id"), col("nd")).otherwise(col("ni")).as("nb"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** [[nearDupPairsBatch]] mounted as a `foreachBatch` sink body:
-    * appends each micro-batch's verified pairs (plus the batch id) as
-    * parquet under `outPath`. */
+  /** `foreachBatch` sink body for the same check: each micro-batch is an
+    * ordinary DataFrame, so it runs the batch kernel
+    * ([[graft.operators.Dedup.indexPairs]], the cross half of
+    * `incrementalDedup`) instead of the stateless form — the shingle
+    * hash-set stays off the band rows, and the `distinct` over
+    * candidates needs no state store. Appends each micro-batch's
+    * verified pairs (plus the batch id) as parquet under `outPath`. The
+    * batch's signatures are persisted for that batch only and released
+    * before the next one. */
   def nearDupForeachBatch(spark: org.apache.spark.sql.SparkSession,
       indexTable: String, outPath: String, n: Int = 3, k: Int = 64,
       bands: Int = 16, threshold: Double = 0.8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      nearDupPairsBatch(batch, spark, indexTable, n, k, bands, threshold)
+    (batch: DataFrame, batchId: Long) => {
+      import graft.operators.Dedup
+      Dedup.requireIndexParams(spark, indexTable, "nearDupForeachBatch", k, n)
+      val sigs = Dedup.docSignatures(batch, col("doc_id"), col("text"), n, k).persist()
+      try Dedup.indexPairs(spark.table(indexTable), sigs, k, bands, threshold)
         .withColumn("batch_id", lit(batchId))
         .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+      finally sigs.unpersist()
+    }
 
   /** One closed SCD2 interval emitted by [[scd2Stream]]. */
   final case class Scd2Closed(user_id: Long, state: String,

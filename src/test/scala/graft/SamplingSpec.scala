@@ -248,6 +248,33 @@ class SamplingSpec extends SparkTestBase {
     }
   }
 
+  test("sampleQuantiles: rows sharing a sample key rank by value") {
+    // repeated keys tie on md5(salt ‖ key); the sample keeps the smaller
+    // values first, the order the quantile_sample oracle also uses
+    val rows = Seq(
+      ("g", "dup", 9.0), ("g", "dup", 4.0), ("g", "dup", 7.0),
+      ("g", "dup", 1.0), ("g", "dup", 6.0),
+      ("h", "x", 5.0), ("h", "x", 2.0), ("h", "y", 8.0), ("h", "y", 3.0),
+      ("h", "z", 0.5))
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    val k = 3
+    val want = rows.groupBy(_._1).view.mapValues { rs =>
+      val vs = rs.sortBy(r => (md5hex("graft" + r._2), r._3)).take(k)
+        .map(_._3).sorted
+      (vs.length.toLong, vs((500 * vs.length + 999) / 1000 - 1),
+        vs((900 * vs.length + 999) / 1000 - 1))
+    }.toMap
+    val got = Sampling.sampleQuantiles(rows.toDF("grp", "key", "v"),
+        col("grp"), col("key"), col("v"), k = k, Seq(500, 900))
+      .collect().map(r => (r.getString(0),
+        (r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
+    assert(got == want)
+    // the all-tied group keeps exactly its k smallest values
+    assert(want("g") == ((3L, 4.0, 6.0)))
+  }
+
   test("grouped split: zero cross-split near-dup pairs; doc-level split leaks") {
     // the demonstration the corpus_split_grouped scaladoc promises: on
     // the same verified near-dup pair stage, the document-keyed split

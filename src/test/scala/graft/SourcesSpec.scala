@@ -132,7 +132,7 @@ class SourcesSpec extends SparkTestBase {
     }
   }
 
-  test("Manifest.fileList extracts a job's dump files; inputPaths resolves them") {
+  test("Manifest.fileList extracts a job's dump files") {
     // the reference's dumpstatus.json shape: {"jobs": {"f1": {...}, ...}}
     val dir = Files.createTempDirectory("graftmanifest").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/manifest.json"),
@@ -140,7 +140,5 @@ class SourcesSpec extends SparkTestBase {
     val files = graft.sources.Manifest.fileList(spark, s"$dir/manifest.json")
       .collect().map(_.getString(0)).toSeq
     assert(files == Seq("enwiki-p1.7z", "enwiki-p2.7z"))
-    val paths = graft.sources.Manifest.inputPaths(spark, s"$dir/manifest.json", "/dumps/")
-    assert(paths == Seq("/dumps/enwiki-p1.7z", "/dumps/enwiki-p2.7z"))
   }
 }

@@ -791,7 +791,7 @@ class StreamingSpec extends SparkTestBase {
     assert(emitted.toSet == expected)
   }
 
-  test("nearDupPairsBatch equals nearDupStream and shuffles fewer bytes on wide docs") {
+  test("foreachBatch near-dup sink equals nearDupStream and shuffles fewer bytes on wide docs") {
     // wide-doc fixture: 600-token documents (hss is hundreds of longs per
     // doc — the payload the stateless variant must ride on all 16 band
     // rows), odd ids = near-dup copies of even ids
@@ -811,6 +811,10 @@ class StreamingSpec extends SparkTestBase {
       idx.toDF("doc_id", "text"), col("doc_id"), col("text"),
       table = "graft_sig_index_widefb")
     val deltaDf = delta.toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("graftndfb").toString
+    def pairsAt(path: String): Array[(Long, Long, Long)] =
+      spark.read.parquet(path)
+        .select("doc_a", "doc_b", "inter").as[(Long, Long, Long)].collect()
 
     def shuffleBytes(run: => Unit): Long = {
       import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
@@ -837,18 +841,18 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
       var aRows: Set[(Long, Long, Long)] = Set.empty
-      var bRows: Set[(Long, Long, Long)] = Set.empty
       val statelessBytes = shuffleBytes {
         aRows = StreamingDownsample.nearDupStream(deltaDf, spark, "graft_sig_index_widefb")
           .select("doc_a", "doc_b", "inter").as[(Long, Long, Long)].collect().toSet
       }
-      val batchBytes = shuffleBytes {
-        bRows = StreamingDownsample.nearDupPairsBatch(deltaDf, spark, "graft_sig_index_widefb")
-          .select("doc_a", "doc_b", "inter").as[(Long, Long, Long)].collect().toSet
+      // the sink body on the whole delta as one batch: the shared kernel
+      val sinkBytes = shuffleBytes {
+        StreamingDownsample.nearDupForeachBatch(
+          spark, "graft_sig_index_widefb", s"$tmp/direct")(deltaDf, 0L)
       }
-      assert(aRows.nonEmpty && aRows == bRows)
-      assert(batchBytes < statelessBytes / 2,
-        s"foreachBatch form shuffled $batchBytes B vs stateless $statelessBytes B")
+      assert(aRows.nonEmpty && pairsAt(s"$tmp/direct").toSet == aRows)
+      assert(sinkBytes < statelessBytes / 2,
+        s"foreachBatch sink shuffled $sinkBytes B vs stateless $statelessBytes B")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
       aqe match {
@@ -859,25 +863,53 @@ class StreamingSpec extends SparkTestBase {
       }
     }
 
-    // end-to-end through a real foreachBatch sink: identical pair set
+    // end-to-end through a real foreachBatch sink: the batch cross pairs
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graftndfb").toString + "/pairs"
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("doc_id", "text")
       .writeStream
       .foreachBatch(StreamingDownsample.nearDupForeachBatch(
-        spark, "graft_sig_index_widefb", out))
+        spark, "graft_sig_index_widefb", s"$tmp/pairs"))
       .outputMode("update").start()
     mem.addData(delta.take(10)); q.processAllAvailable()
     mem.addData(delta.drop(10)); q.processAllAvailable()
     q.stop()
-    val sunk = spark.read.parquet(out)
-      .select("doc_a", "doc_b", "inter").as[(Long, Long, Long)].collect()
+    val sunk = pairsAt(s"$tmp/pairs")
     assert(sunk.length == sunk.toSet.size)
-    val expected = StreamingDownsample
-      .nearDupPairsBatch(deltaDf, spark, "graft_sig_index_widefb")
+    val expected = graft.operators.Dedup.incrementalDedup(
+        spark, "graft_sig_index_widefb", deltaDf, col("doc_id"), col("text"))
+      .filter((col("doc_a") % 2 === 0) =!= (col("doc_b") % 2 === 0))
       .select("doc_a", "doc_b", "inter").as[(Long, Long, Long)].collect().toSet
-    assert(sunk.toSet == expected)
+    graft.operators.Dedup.releaseCaches()
+    assert(expected.nonEmpty && sunk.toSet == expected)
+  }
+
+  test("foreachBatch near-dup sink leaves no cached micro-batch behind") {
+    // the sink persists each batch's signatures for that batch only: the
+    // process-wide memo registry would pin every batch until releaseCaches
+    val words = (0 until 300).map(i => s"t$i")
+    val idx = (0 until 8).map(i =>
+      (2L * i, words.slice(30 * i, 30 * i + 60).mkString(" ")))
+    val delta = idx.map { case (id, t) => (id + 1, t + " tail") }
+    graft.operators.Dedup.writeSignatureIndex(
+      idx.toDF("doc_id", "text"), col("doc_id"), col("text"),
+      table = "graft_sig_index_leak")
+    val out = java.nio.file.Files.createTempDirectory("graftndleak").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = mem.toDF().toDF("doc_id", "text")
+      .writeStream
+      .foreachBatch(StreamingDownsample.nearDupForeachBatch(
+        spark, "graft_sig_index_leak", out))
+      .outputMode("update").start()
+    mem.addData(delta.take(4)); q.processAllAvailable()
+    mem.addData(delta.drop(4)); q.processAllAvailable()
+    q.stop()
+    // ids, not sizes: an unrelated persisted RDD may be GC'd meanwhile
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left by the sink: $leaked")
+    assert(spark.read.parquet(out).select("batch_id").distinct().count() == 2)
   }
 
   test("streaming clean stage equals the batch projection (normalize -> gopher -> scrub)") {
