@@ -791,7 +791,7 @@ class StreamingSpec extends SparkTestBase {
     assert(emitted.toSet == expected)
   }
 
-  test("foreachBatch near-dup sink equals nearDupStream and shuffles fewer bytes on wide docs") {
+  test("foreachBatch near-dup sink equals nearDupStream and shuffles less on wide docs") {
     // wide-doc fixture: 600-token documents (hss is hundreds of longs per
     // doc — the payload the stateless variant must ride on all 16 band
     // rows), odd ids = near-dup copies of even ids
