@@ -1,69 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. A warm-up pass at
-  * sf0.001 first exercises the codegen/JIT/parquet-reader paths so the
-  * timed numbers measure throughput, not one-time JVM compilation (the
-  * first cold query otherwise absorbs ~5 s of warm-up noise). */
+  * SPARK_GRAFT_SF_DIR and prints one JSON line, after the sf0.001
+  * warm-up pass of [[Harness.warmUp]]. Every run, warm-up included,
+  * starts from [[Harness.clearState]]. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
     // "local[*]" is a valid master but a bare "*" is not valid JSON —
     // quote non-numeric values so the bench artifact always parses
     val cpusJson = cpus.toIntOption.map(_.toString).getOrElse("\"" + cpus + "\"")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Noop sink, not count(): under a bare count() Catalyst prunes every
-    // unreferenced projection and drops sorts, so map-heavy queries would
-    // measure little beyond the scan. The noop v2 sink consumes every row
-    // with all output columns materialized.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-
-    // Every run (warm-up included) starts cold: memoized pair stages and
-    // per-query persists are dropped first, so no query is timed against
-    // another query's (or its own first run's) warm cache — cross-query
-    // cache reuse would otherwise understate real per-query cost.
-    def clearState(): Unit = {
-      graft.queries.LlmOps.clearPairCache()
-      graft.operators.Dedup.releaseCaches()
-      spark.catalog.clearCache()
-    }
-
-    // Local-iteration escape hatch, mirroring Verify's: GRAFT_ONLY=q1,q2
-    // benches a subset. The driver never sets it.
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
-    // Sorted by name, not Map iteration order: the fuzzy_match_k2 (r12)
-    // and sparse_cosine (r13) drift adjudications both traced in-suite
-    // per-query movement to REGISTRY-ORDER CHURN — a query's slot (and
-    // therefore how much JIT/codegen state precedes it) reshuffled every
-    // time the registry grew. Name order pins each query's slot so
-    // round-over-round comparisons see stable warm-up context; additions
-    // still shift alphabetical neighbors, but only those. ONE binding
-    // feeds both the warm-up and the timed loop so their orders can
-    // never desynchronize.
-    val picked = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .toSeq.sortBy(_._1)
-
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      picked.foreach { case (_, fn) =>
-        clearState()
-        try exec(fn(spark, warmDir))
-        catch { case _: Throwable => () }
-      }
-    }
+    val spark = Harness.session()
+    // ONE binding feeds both the warm-up and the timed loop so their
+    // orders can never desynchronize.
+    val picked = Harness.queries
+    Harness.warmUp(spark, picked)
 
     // Two timed cold runs per query. Headline = min (the standard
     // throughput estimator under external noise — wall-clock on this box
@@ -137,10 +89,10 @@ object Bench {
       var err: Option[String] = None
       val qStat0 = procStat()
       val samples = Seq.fill(2) {
-        clearState()
+        Harness.clearState(spark)
         val c0 = osBean.map(_.getProcessCpuTime).getOrElse(0L)
         val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)) }
+        try { Harness.exec(fn(spark, sfDir)) }
         catch { case e: Throwable =>
           err = Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
         }

@@ -315,13 +315,7 @@ object GraftExtensions {
         "graft_ann: method must be lsh|ivf|ivf_fp|pq_fp|sq_fp|bq_fp|pca_fp|" +
           s"filtered_fp|indexed_fp|bq_indexed_fp|exact, got '$o'")
     }
-    // live-session twin of GraftExtensions' injectPlannerStrategy (the
-    // AsOfJoin.apply precedent): register()-path sessions plan the node
-    if (!spark.experimental.extraStrategies.contains(
-        graft.plans.DeferredRelationStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.DeferredRelationStrategy
-    }
+    installDeferredStrategy(spark)
     // the declared schema is a contract the thunk enforces by cast: ids
     // are bigint (every graft vector surface keys on long vec_id), rank
     // is row_number's int
@@ -335,6 +329,16 @@ object GraftExtensions {
         col("cand_id").cast(LongType).as("cand_id"),
         col("rank").cast(IntegerType).as("rank")))
   }
+
+  /** Live-session twin of GraftExtensions' injectPlannerStrategy (the
+    * AsOfJoin.apply precedent): sessions on the register() path plan
+    * [[graft.plans.DeferredRelation]] too. Idempotent. */
+  private def installDeferredStrategy(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(
+        graft.plans.DeferredRelationStrategy)) {
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.DeferredRelationStrategy
+    }
 
   /** SQL surface for [[graft.operators.Upsert.versions]] — the version
     * HISTORY of a versioned sink as a table, completing the time-travel
@@ -380,11 +384,7 @@ object GraftExtensions {
     // plan time if either is missing
     spark.table(table)
     spark.table(s"${table}__centroids")
-    if (!spark.experimental.extraStrategies.contains(
-        graft.plans.DeferredRelationStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.DeferredRelationStrategy
-    }
+    installDeferredStrategy(spark)
     val longCols = Seq("n_rows", "total_rows", "n_cells", "max_rows",
       "min_rows", "share_x10000", "imbalance_x1000", "delta_rows")
     val output = AttributeReference("cell", IntegerType)() +:

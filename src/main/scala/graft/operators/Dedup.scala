@@ -16,82 +16,88 @@ object Dedup {
 
   // ----------------------------------------------- persist/memo lifecycle
 
-  /** Session-scoped registry of persisted intermediate frames, keyed by
-    * the *canonicalized plan* they compute ([[LogicalPlan.sameResult]]):
-    * two constructions of the same operator over the same input share ONE
-    * persisted stage instead of stacking a new copy per call — the leak
-    * the round-3 audit flagged on the ad-hoc entry points. Lookup is a
-    * linear scan over a handful of entries (plan comparison, no job).
-    * [[releaseCaches]] is the caller-release contract: unpersists
-    * everything and empties the registry; the bench/verify harnesses call
-    * it between runs alongside `spark.catalog.clearCache()` (which would
-    * otherwise drop the cache but leave the registry returning
-    * no-longer-cached handles). */
-  private val persistRegistry = scala.collection.mutable.ArrayBuffer
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
+  /** The engine's one cross-query cache: entries keyed by session, a kind
+    * tag and the *canonicalized plan* they derive from
+    * ([[LogicalPlan.sameResult]]), so two constructions of the same
+    * operator over the same input share ONE persisted stage or ONE
+    * measurement instead of stacking a copy per call. The kind keeps a
+    * persisted frame and a gate measurement over the same plan apart
+    * ([[ngramJaccardAuto]] both persists and gates its shingle set).
+    * Lookup is a linear scan over a handful of entries (plan comparison,
+    * no job). Each entry builds once, under its own lock: callers of the
+    * same key wait for that build instead of repeating it, and no other
+    * key waits. (A build racing outside the lock could not undo a losing
+    * copy: Spark's cache is keyed by plan too, so unpersisting the loser
+    * would drop the winner's cached data.) [[releaseCaches]] is the
+    * caller-release contract. */
+  private final class MemoEntry(val session: org.apache.spark.sql.SparkSession,
+      val kind: String, val plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) {
+    var value: Option[Any] = None // guarded by this, as is released
+    var released = false
+  }
+  private val registry = scala.collection.mutable.ArrayBuffer.empty[MemoEntry]
 
-  private[graft] def memoPersist(df: DataFrame): DataFrame =
-    persistRegistry.synchronized {
-      val plan = df.queryExecution.analyzed
-      persistRegistry.collectFirst {
-        case (s, p, cached) if (s eq df.sparkSession) && p.sameResult(plan) =>
-          cached
-      }.getOrElse {
-        val c = df.persist()
-        persistRegistry += ((df.sparkSession, plan, c))
-        c
-      }
-    }
-
-  /** Measure-then-dispatch results ([[ngramJaccardAuto]]'s Σdf² aggregate,
-    * [[connectedComponentsAuto]]'s edge probe → labels) memoized the same
-    * way: repeated construction of the same query launches the planning
-    * job once per session, not once per construction. */
-  private val gateRegistry = scala.collection.mutable.ArrayBuffer
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Any)]
-
-  /** Diagnostic counter for specs: how many gate measurements were
-    * INSERTED into the memo (one per distinct key under single-threaded
-    * use; a losing thread in the measure-outside-the-lock race runs its
-    * thunk but doesn't count — the registry still holds one entry). */
-  private[graft] var gateMeasurements: Long = 0L
-
-  private[graft] def memoGate[T](df: DataFrame)(measure: => T): T = {
+  private def memo[T](kind: String, df: DataFrame)(build: => T): T = {
     val plan = df.queryExecution.analyzed
-    def lookup: Option[T] = gateRegistry.collectFirst {
-      case (s, p, v) if (s eq df.sparkSession) && p.sameResult(plan) =>
-        v.asInstanceOf[T]
-    }
-    // measure runs OUTSIDE the registry lock: gate thunks range from one
-    // bounded aggregate to Bpe.train's whole merge loop, and holding the
-    // global monitor for the duration would serialize every other gated
-    // operator in the JVM behind it. The cost is a benign race — two
-    // threads may measure the same key concurrently; the second insert
-    // is skipped and determinism makes both results identical.
-    gateRegistry.synchronized(lookup).getOrElse {
-      val v = measure
-      gateRegistry.synchronized {
-        lookup.getOrElse {
-          gateMeasurements += 1
-          gateRegistry += ((df.sparkSession, plan, v))
-          v
-        }
+    val e = registry.synchronized {
+      registry.find(e => (e.session eq df.sparkSession) && e.kind == kind &&
+        e.plan.sameResult(plan)).getOrElse {
+        val fresh = new MemoEntry(df.sparkSession, kind, plan)
+        registry += fresh
+        fresh
       }
     }
+    val v = e.synchronized {
+      if (e.released) None
+      else e.value.orElse {
+        e.value = Some(build)
+        if (kind == "gate") gates.incrementAndGet()
+        e.value
+      }
+    }
+    // released between lookup and build: a value stored now would outlive
+    // the release, so look up (and register) afresh
+    v.getOrElse(memo(kind, df)(build)).asInstanceOf[T]
   }
 
-  /** Release every persisted stage and memoized gate measurement this
-    * object holds (all sessions). Call between benchmark runs or when a
-    * composed pipeline is done with its dedup stages — the cluster-scale
-    * analogue of dropping checkpointed intermediates. */
+  /** `df` persisted once per (session, plan). */
+  private[graft] def memoPersist(df: DataFrame): DataFrame =
+    memo("persist", df)(df.persist())
+
+  /** [[memoPersist]] with the caller's build, which must return `df`
+    * persisted — e.g. materialized through a stage cached only for that
+    * build, so the registry holds the (smaller) result alone. */
+  private[graft] def memoPersist(df: DataFrame, build: => DataFrame): DataFrame =
+    memo("persist", df)(build)
+
+  /** Measure-then-dispatch results ([[ngramJaccardAuto]]'s Σdf² aggregate,
+    * [[connectedComponentsAuto]]'s edge probe → labels): repeated
+    * construction of the same query launches the planning job once per
+    * session, not once per construction. */
+  private[graft] def memoGate[T](df: DataFrame)(measure: => T): T =
+    memo("gate", df)(measure)
+
+  /** Diagnostic counter for specs: how many gate measurements were
+    * stored (one per distinct key and session until [[releaseCaches]]). */
+  private[graft] def gateMeasurements: Long = gates.get
+  private val gates = new java.util.concurrent.atomic.AtomicLong
+
+  /** Release every entry this object holds (all sessions), unpersisting
+    * each persisted frame. Call between benchmark runs or when a composed
+    * pipeline is done with its dedup stages — the cluster-scale analogue
+    * of dropping checkpointed intermediates. An entry still building is
+    * released once its build ends. */
   def releaseCaches(): Unit = {
-    persistRegistry.synchronized {
-      persistRegistry.foreach(_._3.unpersist())
-      persistRegistry.clear()
+    val entries = registry.synchronized {
+      val all = registry.toList
+      registry.clear()
+      all
     }
-    gateRegistry.synchronized(gateRegistry.clear())
+    entries.foreach(e => e.synchronized {
+      if (e.kind == "persist") e.value.foreach(_.asInstanceOf[DataFrame].unpersist())
+      e.value = None
+      e.released = true
+    })
   }
 
   // ---------------------------------------------------------------- exact

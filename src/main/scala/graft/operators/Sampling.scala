@@ -347,7 +347,7 @@ object Sampling {
     //      up to fanout−1 extra rounds, each a fresh
     //      active×(fanout−1)-expression aggregate whose new literals
     //      force a new codegen class (Janino compile per round, never
-    //      JIT-hot). A bracket with span ≤ fanout now ENUMERATES every
+    //      JIT-hot). A bracket with span < fanout now ENUMERATES every
     //      value in [lo, hi) and converges in exactly one round;
     //  (b) wide brackets multiply before dividing (span·k/fanout), so
     //      spacing never degenerates at any span.
@@ -389,7 +389,7 @@ object Sampling {
         // double encoding produces)
         val span = BigInt(t.hi) - BigInt(t.lo)
         val cuts =
-          if (span <= effFanout) (t.lo until t.hi).toSeq
+          if (span < effFanout) (t.lo until t.hi).toSeq
           else (1 until effFanout)
             .map(k => (BigInt(t.lo) + span * k / effFanout).toLong)
             .distinct.filter(c => c >= t.lo && c < t.hi)

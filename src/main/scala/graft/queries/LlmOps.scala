@@ -138,40 +138,32 @@ object LlmOps {
       |ORDER BY w.doc_id""".stripMargin
 
   /** Verified MinHash near-dup pairs at j≥0.8 — the stage shared by
-    * `dedup_minhash`, `dedup_clusters` and `llm_clean_corpus`. Memoized
-    * and persisted per (session, dir) so composed pipelines pay the
-    * shingle→signature→LSH→verify cost once instead of recomputing the
-    * identical sub-pipeline per query; the cluster-scale analogue is
-    * checkpointing this stage to object storage. */
-  private val pairsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private def verifiedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.synchronized {
-      // synchronized (not TrieMap.getOrElseUpdate) so a concurrent first
-      // call cannot build-and-persist the stage twice, leaking one copy
-      pairsMemo.getOrElseUpdate((spark, dir), {
-        // Staged build with explicit lifecycle: ONE shuffle computes the
-        // per-doc stage (MinHash signature + sorted hash set); banding and
-        // verification read it from cache for the one eager
-        // materialization, then it is released — the memo holds the (much
-        // smaller) verified pairs, nothing else.
-        val docs = Tables.documents(spark, dir)
-        val stage = Dedup.docSignatures(docs, col("doc_id"), col("text"), 3, 64).persist()
-        val pairs = Dedup.verifiedPairs(stage, 64, 16, 0.8).persist()
-        pairs.count() // materialize through the stage while it is cached
-        stage.unpersist()
-        pairs
-      })
-    }
-
-  /** Release the memoized pair stages (harness teardown / between timed
-    * bench runs). The cluster-scale analogue of dropping a checkpointed
-    * intermediate from object storage. */
-  def clearPairCache(): Unit = pairsMemo.synchronized {
-    pairsMemo.values.foreach(_.unpersist())
-    pairsMemo.clear()
+    * `dedup_minhash`, `dedup_clusters` and `llm_clean_corpus`. Persisted
+    * once per session and plan in [[Dedup.memoPersist]]'s registry, so
+    * composed pipelines pay the shingle→signature→LSH→verify cost once
+    * instead of recomputing the identical sub-pipeline per query; the
+    * cluster-scale analogue is checkpointing this stage to object
+    * storage. */
+  private def verifiedMinhashPairs(spark: SparkSession, dir: String): DataFrame = {
+    val stage = Dedup.docSignatures(Tables.documents(spark, dir),
+      col("doc_id"), col("text"), 3, 64)
+    val pairs = Dedup.verifiedPairs(stage, 64, 16, 0.8)
+    // Staged build with explicit lifecycle: ONE shuffle computes the
+    // per-doc stage (MinHash signature + sorted hash set); banding and
+    // verification read it from cache for the one eager materialization,
+    // then it is released — the registry holds the (much smaller)
+    // verified pairs, nothing else.
+    Dedup.memoPersist(pairs, {
+      stage.persist()
+      pairs.persist().count() // materialize through the stage while it is cached
+      stage.unpersist()
+      pairs
+    })
   }
+
+  /** [[Dedup.releaseCaches]], whose registry holds the pair stage; kept
+    * under this name for the benchmark harness (`perfbench/`). */
+  def clearPairCache(): Unit = Dedup.releaseCaches()
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
     verifiedMinhashPairs(spark, dir).orderBy("doc_a", "doc_b")

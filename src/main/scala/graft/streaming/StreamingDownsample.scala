@@ -421,16 +421,22 @@ object StreamingDownsample {
         array_min(transform(col("hss"), h => xxhash64(h, lit(i))))): _*))
       .select(col("doc_id").as("delta_id"), col("hss"),
         bandArray(col("sig")).as("bhs_d"))
+    // posexplode_outer (here and on the index side): the plain form lets
+    // Spark infer `size(bhs_d) > 0` and push it through the projections,
+    // recomputing the whole MinHash signature in a filter over the scan
+    // (sf0.001 split, batch form, local[2]: ~30 s against ~1.2 s). Rows
+    // are identical: the band arrays are built by array(...) of `bands`
+    // hashes, never null or empty.
     val streamBands = withSig
       .select(col("delta_id"), col("hss"), col("bhs_d"),
-        posexplode(col("bhs_d")).as(Seq("band", "bh")))
+        posexplode_outer(col("bhs_d")).as(Seq("band", "bh")))
     // index band rows: one narrow projection + explode over the bucketed
     // scan — no bandedSignatures-then-rejoin round trip (the band-hash
     // array is per-row arithmetic, so the sig_i it replaced never ships)
     val idxBands = index
       .select(col("doc_id").as("idx_id"), bandArray(col("sig")).as("bhs_i"))
       .select(col("idx_id"), col("bhs_i"),
-        posexplode(col("bhs_i")).as(Seq("band", "bh")))
+        posexplode_outer(col("bhs_i")).as(Seq("band", "bh")))
     val minCollidingBand = array_min(
       transform(sequence(lit(0), lit(bands - 1)), bd =>
         when(element_at(col("bhs_d"), bd + 1) === element_at(col("bhs_i"), bd + 1),

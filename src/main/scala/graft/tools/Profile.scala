@@ -1,12 +1,12 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query stage profiler for the optimization rounds: runs named
-  * registered queries under the same harness shape as [[graft.Bench]]
-  * (noop sink, cold caches, `$SPARK_GRAFT_SF_DIR` / `$SPARK_GRAFT_CPUS`)
-  * but with a [[SparkListener]] that attributes wall/CPU to STAGES, so
+  * registered queries under the same harness as [[graft.Bench]]
+  * ([[graft.Harness]]: noop sink, cold caches, `$SPARK_GRAFT_SF_DIR` /
+  * `$SPARK_GRAFT_CPUS`) but with a [[SparkListener]] that attributes
+  * wall/CPU to STAGES, so
   * a slow query says WHICH exchange/scan/loop round is slow instead of
   * just how slow it is (guide §1: measure first, then optimize that one
   * thing). Also dumps `.explain("formatted")` per query when an output
@@ -24,16 +24,8 @@ object Profile {
       .split(",").toSeq
     val explainDir = args.lift(1)
     val suffix = args.lift(2).getOrElse("before")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Harness.sfDir
+    val spark = graft.Harness.session()
 
     final case class StageRow(id: Int, attempt: Int, name: String,
       tasks: Int, runMs: Long, cpuMs: Long, shufReadMB: Double,
@@ -57,27 +49,15 @@ object Profile {
         }
     }
 
-    def clearState(): Unit = {
-      graft.queries.LlmOps.clearPairCache()
-      graft.operators.Dedup.releaseCaches()
-      spark.catalog.clearCache()
-    }
-
     // one warm-up pass (codegen/JIT), mirroring Bench
-    val warmDir = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      graft.SparkEntry.queries.get(n).foreach { fn =>
-        clearState()
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      }
-    }
+    graft.Harness.warmUp(spark,
+      names.flatMap(n => graft.SparkEntry.queries.get(n).map(n -> _)))
 
     spark.sparkContext.addSparkListener(listener)
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
-      clearState()
+      graft.Harness.clearState(spark)
       stages.synchronized(stages.clear()); jobs.set(0)
       spark.sparkContext.setJobDescription(s"profile:$n")
       // construction INSIDE the timed window: iterative operators
@@ -85,7 +65,7 @@ object Profile {
       // at DataFrame-construction time, exactly as Bench times them
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
-      df.write.mode("overwrite").format("noop").save()
+      graft.Harness.exec(df)
       val wall = (System.nanoTime() - t0) / 1e9
       explainDir.foreach { d =>
         val dir = new java.io.File(d); dir.mkdirs()

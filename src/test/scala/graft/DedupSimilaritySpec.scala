@@ -1259,6 +1259,26 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(plan.contains("might_contain"))
   }
 
+  test("minhash pair stage is persisted once and dropped by one releaseCaches") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Dedup.releaseCaches()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def newIds = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // two concurrent first calls build the stage once, and its per-doc
+    // signature stage is released after the build
+    Await.result(Future.sequence(Seq.fill(2)(Future(
+      SparkEntry.queries("dedup_minhash")(spark, sf0001)))), 5.minutes)
+    val pairIds = newIds
+    assert(pairIds.size == 1, s"pair stage persisted as RDDs $pairIds")
+    SparkEntry.queries("dedup_clusters")(spark, sf0001).collect()
+    assert(pairIds.subsetOf(newIds), "dedup_clusters rebuilt the pair stage")
+    // ids, not sizes: an unrelated persisted RDD may be GC'd meanwhile
+    Dedup.releaseCaches()
+    assert(newIds.isEmpty, s"persistent RDDs left after releaseCaches: $newIds")
+  }
+
   test("split leakage is exactly the minhash pairs crossing the split") {
     import graft.queries.LlmOps
     val pairs = LlmOps.dedupMinhash(spark, sf0001)

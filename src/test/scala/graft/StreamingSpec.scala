@@ -767,6 +767,15 @@ class StreamingSpec extends SparkTestBase {
     graft.operators.Dedup.writeSignatureIndex(
       docs.filter(col("doc_id") % 10 =!= 0), col("doc_id"), col("text"),
       table = "graft_sig_index_stream")
+    // no filter inferred from the band explodes recomputes the signature
+    // (checked on the batch form: a streaming plan cannot be optimized
+    // outside a running query)
+    val sigFilters = StreamingDownsample.nearDupStream(delta, spark, "graft_sig_index_stream")
+      .queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter if f.condition.exists(
+            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64]) => f
+      }
+    assert(sigFilters.isEmpty, s"signature recomputed in a filter: $sigFilters")
     val mem = MemoryStream[(Long, String)]
     val q = StreamingDownsample.nearDupStream(
         mem.toDF().toDF("doc_id", "text"), spark, "graft_sig_index_stream")
