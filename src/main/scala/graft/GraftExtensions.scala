@@ -173,7 +173,7 @@ object GraftExtensions {
     (FunctionIdentifier("graft_ann"),
       info("graft_ann",
         "graft_ann(queries, candidates, k[, method]) - top-k neighbor join of two (vec_id, embedding) tables; " +
-          "method: lsh (default) | ivf | ivf_fp | pq_fp | sq_fp | bq_fp | pca_fp | exact; indexed_fp / " +
+          "method: lsh (default) | ivf (fixed-point IVF, nprobe 8) | ivf_fp | pq_fp | sq_fp | bq_fp | pca_fp | exact; indexed_fp / " +
           "bq_indexed_fp (candidates then names a persisted writeIvfIndexFp / writeBqIndexFp table); " +
           "filtered_fp (5th arg = SQL predicate over candidate columns, e.g. 'label = 3'). " +
           "Analysis resolves tables and validates arguments but runs no jobs; " +
@@ -187,7 +187,7 @@ object GraftExtensions {
     (FunctionIdentifier("graft_index_stats"),
       info("graft_index_stats",
         "graft_index_stats(index) - per-cell occupancy/drift report of a persisted " +
-          "graft IVF index (writeIvfIndex / writeIvfIndexFp table): n_rows, run frame " +
+          "graft IVF index (writeIvfIndexFp table): n_rows, run frame " +
           "(total/n_cells/max/min), share_x10000, imbalance_x1000, delta_rows. " +
           "Analysis resolves the index tables and runs no jobs; the report executes with the query"),
       (exprs: Seq[Expression]) => indexStatsPlan(exprs)))
@@ -283,7 +283,7 @@ object GraftExtensions {
     // live — is deferred into the thunk
     val mk: () => org.apache.spark.sql.DataFrame = method match {
       case "lsh" => () => Similarity.annTopK(q, c, k)
-      case "ivf" => () => Similarity.ivfTopK(q, c, k)
+      case "ivf" => () => Similarity.ivfFpTopK(q, c, k, nprobe = 8)
       case "ivf_fp" => () => Similarity.ivfFpTopK(q, c, k)
       case "pq_fp" => () => Similarity.ivfPqFpTopK(q, c, k)
       case "sq_fp" => () => Similarity.ivfSqFpTopK(q, c, k)

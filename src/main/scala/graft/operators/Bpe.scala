@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * table (Heaps'-law small — the only full-corpus shuffle), which is then
   * COLLECTED and the whole merge loop runs driver-side over the in-memory
   * table with incremental pair-count maintenance (the Sennrich reference
-  * implementation's own design; same bounded-collect discipline as
-  * [[KMeansLite]]'s trainer, guarded by an explicit row cap). One Spark
-  * job total, regardless of nMerges — a real 32k-merge vocabulary costs
+  * implementation's own design; same bounded-collect discipline as the
+  * IVF training sample, guarded by an explicit row cap). One Spark job
+  * total, regardless of nMerges — a real 32k-merge vocabulary costs
   * O(nMerges × pairs) driver work over a table Heaps' law keeps in the
   * single-digit-millions, not nMerges² cluster jobs. The per-merge
   * distributed formulation it replaced (one pair-count job + one argmax
@@ -30,7 +30,7 @@ object Bpe {
     * law puts real web-corpus vocabularies in the low millions (English
     * CommonCrawl: ~10⁶–10⁷ distinct pre-tokens); 2²³ ≈ 8.4 M rows of
     * (count, short symbol array) is a few hundred MB of driver heap —
-    * the same order [[KMeansLite]]'s sample collect allows. Corpora past
+    * the same order the IVF training-sample collect allows. Corpora past
     * the cap fail loudly rather than silently OOMing the driver. */
   private val MaxVocabRows = 1 << 23
 

@@ -1267,10 +1267,11 @@ object Dedup {
     * Cells come from **seeded medoids**, not iterated k-means: the
     * `nCells` vectors with the smallest md5(salt‖id) are the cell centers,
     * and every vector is assigned to its max-cosine seed (ties → lowest
-    * seed id). Data-adaptive centroids ([[KMeansLite]], the IVF trainer)
-    * would tighten the cells, but medoid seeding keeps the whole operator
-    * a deterministic function of the data that an external SQL engine can
-    * reproduce row for row — which is what makes it oracle-checkable. The
+    * seed id). Iterated centroids ([[Similarity.kMeansFp]], the IVF
+    * trainer) would tighten the cells at the price of an unrolled Lloyd
+    * replay in the oracle; medoid seeding keeps the whole operator one
+    * assignment pass that an external SQL engine reproduces row for row
+    * — which is what makes it cheaply oracle-checkable. The
     * argmax fold and the pair filter reuse the exact IEEE chains the
     * proven queries use (cos = dot/(‖a‖‖b‖) for ranking, dot ≥ t·‖a‖‖b‖
     * for the threshold), so both engines agree bitwise.

@@ -1,8 +1,9 @@
 package graft.operators
 
-/** Driver-side Lloyd's k-means for IVF centroid training. The training
-  * set is already capped at a few thousand vectors (sampled in one Spark
-  * pass — see [[Similarity.ivfTopK]]), at which size a tight local loop
+/** Driver-side Lloyd's k-means for the float IVF-PQ coarse cells and
+  * subspace codebooks. The training set is already capped at a few
+  * thousand vectors (sampled in one Spark pass — see
+  * [[Similarity.ivfPqTopK]]), at which size a tight local loop
   * beats any distributed fit: zero scheduler round-trips, deterministic
   * for a fixed seed, ~10⁷ flops for 4096×64×16×10.
   *

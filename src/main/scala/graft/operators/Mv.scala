@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * base+delta, so the driver gate proves ⊕ ≡ recompute on real data
   * (the `scd2_merge` discipline: incremental path answers the batch
   * SQL). Sibling of [[Upsert.upsert]] (plain rows), [[Temporal
-  * .scd2Merge]] (interval runs), and [[Similarity.appendToIvfIndex]]
+  * .scd2Merge]] (interval runs), and [[Similarity.appendToIvfIndexFp]]
   * (ANN buckets) — the same delta-shaped-work contract, here for
   * aggregates. */
 object Mv {

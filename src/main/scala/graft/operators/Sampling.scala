@@ -118,10 +118,11 @@ object Sampling {
     * `lm_unigram`, one notch wider (sqrt IS in the deterministic set).
     *
     * Scale shape: one #strata-row aggregate collected to the driver
-    * (the bounded-collect discipline of KMeansLite / hashedFreq); the
-    * normalizer folds over strata in SORTED-name order — the exact
-    * sequence the oracle's running-sum window evaluates, so double
-    * addition order can never diverge. Selection is the map-side
+    * (the bounded-collect discipline of the IVF training sample /
+    * hashedFreq); the normalizer folds over strata in SORTED-name
+    * order — the exact sequence the oracle's running-sum window
+    * evaluates, so double addition order can never diverge.
+    * Selection is the map-side
     * partial BoundedTopK capped at max quota, quotas joined back by
     * broadcast. Undersized strata (n_i < q_i) contribute everything —
     * sampling is without replacement; epoch-level repetition of small

@@ -252,10 +252,11 @@ object Similarity {
     array_sort(transform(typedLit(cents.map(_.toSeq).toSeq), (cent, i) =>
       struct(graft.functions.LongVecL2(qv, cent).as("d"), i.as("cell"))))
 
-  /** Fixed-point cell assignment of the whole corpus — [[assignCells]]'
-    * hash-checkable twin: every step ([[ivfFpCentroids]] training +
-    * this integer argmin) is exact arithmetic a DuckDB oracle replays,
-    * so downstream mixture reports gate fully instead of rows-only. */
+  /** Fixed-point cell assignment of the whole corpus — the IVF routing
+    * step exposed for corpus analysis (`corpus_clusters_fp`): every step
+    * ([[ivfFpCentroids]] training + this integer argmin) is exact
+    * arithmetic a DuckDB oracle replays, so downstream mixture reports
+    * gate fully instead of rows-only. */
   def assignCellsFp(df: DataFrame, nCells: Int = 16, iters: Int = 10,
       sampleCap: Int = 4096): DataFrame = {
     val cents = ivfFpCentroids(df, nCells, iters, sampleCap)
@@ -264,17 +265,6 @@ object Similarity {
         fpCellScores(cents)(col("__qv")).getItem(0).getField("cell").as("cell"))
   }
 
-  /** **Fixed-point IVF top-k** — the HASH-CHECKABLE member of the IVF
-    * family: training sample (md5-rank bottom-`sampleCap` ids), seeds
-    * (the sample's first `nCells` vectors), the unrolled integer Lloyd
-    * ([[kMeansFp]]), corpus cell assignment, and query probe routing are
-    * ALL exact integer arithmetic a DuckDB oracle replays; only the
-    * final rank-only cosine re-rank is float, and rank-only float
-    * ordering is the long-proven `vector_topk` gate shape. The float
-    * [[ivfTopK]] stays the production path (k-means++ on real-valued
-    * coordinates converges better); this twin exists so the driver gate
-    * covers the IVF ROUTE-THEN-SCORE shape end to end — the same
-    * adjudicator role `graph_pagerank_fp` plays for PageRank. */
   /** The deterministic, oracle-replayable training sample every fp
     * trainer shares: the bottom-`cap` quantized vectors by
     * (md5("graftivffp"‖id) rank, id). ONE definition — the coarse
@@ -288,6 +278,22 @@ object Similarity {
       .select(col("qv")).collect()
       .map(_.getSeq[Long](0).toArray)
 
+  /** **IVF (inverted-file) top-k** over fixed-point k-means cells:
+    * centroids partition the corpus into cells and each query scores
+    * only the `nprobe` cells whose centroids it is closest to.
+    * Data-adaptive (unlike random hyperplanes), so recall holds even on
+    * near-uniform corpora; the cell join is an equi-join on cell id —
+    * hash-partitionable, with the centroid matrix (nCells × dim longs)
+    * riding as one literal. Training sample (md5-rank bottom-`sampleCap`
+    * ids, one TakeOrdered pass), seeds (the sample's first `nCells`
+    * vectors), the unrolled integer Lloyd ([[kMeansFp]]), corpus cell
+    * assignment and query probe routing are ALL exact integer arithmetic
+    * a DuckDB oracle replays; only the final rank-only cosine re-rank is
+    * float, the long-proven `vector_topk` gate shape. At nprobe 8 of 16
+    * cells the recall against exact top-5 is 0.82 on sf0.001 and 0.84 on
+    * sf0.01 (20 queries); the default nprobe 4 is the gated geometry
+    * every `vector_ivf*_fp` oracle replays. The persisted form is
+    * [[writeIvfIndexFp]] → [[ivfTopKIndexedFp]]. */
   def ivfFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
       nCells: Int = 16, nprobe: Int = 4, iters: Int = 10,
       sampleCap: Int = 4096): DataFrame = {
@@ -320,27 +326,18 @@ object Similarity {
     kMeansFp(sample, sample.take(nCells), iters)
   }
 
-  /** IVF (inverted-file) approximate top-k: k-means centroids partition
-    * the corpus into cells; each query scores only the `nprobe` cells
-    * whose centroids it is closest to. Data-adaptive (unlike random
-    * hyperplanes), so recall holds even on near-uniform corpora; the
-    * cell join is an equi-join on centroid id — the same
-    * hash-partitionable shape, with the centroid list (nCells × dim
-    * floats) broadcast. Training samples the candidate set; seed fixed
-    * for determinism. This is the 100 TB route: train on a sample,
-    * assign in one pass, store cell id as a partition/cluster column. */
-  /** Max vectors the k-means trainer sees: centroid quality saturates at a
-    * few hundred points per cell, and an unbounded fit would run a
-    * 10-iteration clustering job over the full corpus inside the query. */
+  /** Max vectors the float k-means trainer of [[ivfPqTopK]] sees:
+    * centroid quality saturates at a few hundred points per cell, and an
+    * unbounded fit would run a 10-iteration clustering job over the full
+    * corpus inside the query. */
   private val IvfTrainCap = 4096
 
-  /** Training sample in ONE pass — the cap-many smallest xxhash64(id)
-    * rows, i.e. a deterministic uniform sample that needs no prior
-    * count(): TakeOrderedAndProject keeps a bounded heap per partition,
-    * so this is the query's only construction-time job (round-2 verdict:
-    * construction ran an eager full count + 10 mllib fit jobs).
-    * Centroids then come from a driver-side Lloyd on ≤4096×dim doubles —
-    * microseconds, seeded, no executor round-trips. */
+  /** [[ivfPqTopK]]'s training sample in ONE pass — the cap-many smallest
+    * xxhash64(id) rows, i.e. a deterministic uniform sample that needs no
+    * prior count(): TakeOrderedAndProject keeps a bounded heap per
+    * partition. The coarse centroids and subspace codebooks then come
+    * from a driver-side [[KMeansLite]] on ≤4096×dim doubles — seeded, no
+    * executor round-trips. */
   private def trainSample(c0: DataFrame): Array[Array[Double]] =
     c0.orderBy(xxhash64(col("cand_id"))).limit(IvfTrainCap)
       .select(col("cv")).collect()
@@ -362,23 +359,6 @@ object Similarity {
     slice(array_sort(scored), 1, n).getField("cell")
   }
 
-  /** Public cell assignment — every vector's nearest k-means centroid
-    * (the IVF routing step exposed for corpus analysis): one bounded
-    * TakeOrdered sample, driver Lloyd, then a per-row codegen'd argmin
-    * over the nCells centroid literals. The literal form is right for
-    * routing-scale nCells (≤ low hundreds — the same codegen bound
-    * [[Dedup.semanticDedup]] documents); past that, switch to its
-    * broadcast-seeds + window-argmax assignment. */
-  def assignCells(df: DataFrame, nCells: Int = 16): DataFrame = {
-    val c0 = df.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
-    val sample = trainSample(c0)
-    val cents = KMeansLite.fit(sample, nCells, iters = 10, seed = 42L)
-      .map(_.map(_.toFloat)).zipWithIndex
-    val nearestCells = nearestCellsOf(cents) _
-    c0.select(col("cand_id").as("vec_id"),
-      nearestCells(col("cv"), 1).getItem(0).as("cell"))
-  }
-
   /** Shared tail of the IVF paths: score probed (query, candidate) rows
     * and keep each query's top k. */
   private def scoreCells(qAssigned: DataFrame, cAssigned: DataFrame,
@@ -394,90 +374,23 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 8): DataFrame = {
-    val c0 = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
-    val sample = trainSample(c0)
-    val cents = KMeansLite.fit(sample, nCells, iters = 10, seed = 42L)
-      .map(_.map(_.toFloat)).zipWithIndex
-    ivfTopKWithCentroids(queries, candidates, cents, k, nprobe)
-  }
-
-  /** Inline IVF routing + scoring under EXPLICIT centroids — the math
-    * [[ivfTopK]] runs after training, factored out so index maintenance
-    * can be proven against it: serving from a base+delta index must
-    * equal this inline computation over the unioned corpus under the
-    * SAME centroids (DedupSimilaritySpec), isolating the append path
-    * from k-means nondeterminism across differently-sampled corpora. */
-  private[graft] def ivfTopKWithCentroids(queries: DataFrame,
-      candidates: DataFrame, cents: Seq[(Array[Float], Int)], k: Int,
-      nprobe: Int = 8): DataFrame = {
-    val c0 = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
-    val nearestCells = nearestCellsOf(cents) _
-    val cAssigned = c0
-      .withColumn("cn", VectorOps.norm(col("cv")))
-      .withColumn("cell", nearestCells(col("cv"), 1).getItem(0))
-    val qAssigned = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-      .withColumn("cell", explode(nearestCells(col("qv"), nprobe)))
-    scoreCells(qAssigned, cAssigned, k)
-  }
-
   // ------------------------------------------------- persisted IVF index
 
-  /** Build the **persisted IVF index** — the vector-database pattern
-    * (train once, assign once, serve many query batches), mirroring the
-    * dedup signature index's cross-run loop. The corpus is assigned to
-    * its k-means cell ONCE and written bucketed+sorted BY CELL; the
-    * centroid table (nCells rows) rides in a `<table>__centroids` side
-    * table so later sessions route queries without retraining. Bucketing
-    * by cell is what makes serving cheap: a query batch's probed cells
-    * become an `IN` filter the scan turns into BUCKET PRUNING — only the
-    * probed cells' files are read, ~nprobe/nCells of the index
-    * (spec-asserted via SelectedBucketsCount). */
-  def writeIvfIndex(candidates: DataFrame, table: String,
-      nCells: Int = 16, buckets: Int = 8): Unit = {
-    val spark = candidates.sparkSession
-    val c0 = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
-    val sample = trainSample(c0)
-    val cents = KMeansLite.fit(sample, nCells, iters = 10, seed = 42L)
-      .map(_.map(_.toFloat)).zipWithIndex
-    val nearestCells = nearestCellsOf(cents) _
-    Joins.writeBucketed(
-      c0.withColumn("cn", VectorOps.norm(col("cv")))
-        .withColumn("cell", nearestCells(col("cv"), 1).getItem(0)),
-      table, "cell", buckets)
-    import spark.implicits._
-    // base_rows: the corpus size the centroids were trained against,
-    // read back from the just-written table (parquet footer count — a
-    // metadata read, not a second corpus scan). [[ivfDriftFraction]]
-    // compares the live count against it to time compaction.
-    val baseRows = spark.table(table).count()
-    val centRows = cents.toSeq.map { case (c, i) => (i, c.toSeq, baseRows) }
-      .toDF("cell", "centroid", "base_rows")
-    // same cross-JVM idempotence dance as the bucketed main table
-    Joins.dropTableAndLocation(spark, s"${table}__centroids")
-    centRows.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}__centroids")
-  }
-
   /** Fraction of the index appended since its centroids were trained —
-    * the [[compactIvfIndex]] cadence trigger: `(live − base) / base`,
+    * the [[compactIvfIndexFp]] cadence trigger: `(live − base) / base`,
     * where `base` rides in the centroid side table from the last
-    * [[writeIvfIndex]]/compaction and `live` is a parquet-metadata
+    * [[writeIvfIndexFp]]/compaction and `live` is a parquet-metadata
     * count. A maintenance job compacts when this passes its threshold
-    * (0.2–0.5 is the usual band), exactly as [[Upsert.vacuum]] runs on
-    * a version-count cadence. Both counts are footer reads — safe to
-    * poll on every ingest tick. */
+    * (0.2–0.5 is the usual band; [[maintainIvfIndexFp]] is that policy),
+    * exactly as [[Upsert.vacuum]] runs on a version-count cadence. Both
+    * counts are footer reads — safe to poll on every ingest tick. */
   def ivfDriftFraction(spark: org.apache.spark.sql.SparkSession,
       table: String): Double = {
     val cents = spark.table(s"${table}__centroids")
     require(cents.columns.contains("base_rows"),
       s"ivfDriftFraction: '$table' predates drift tracking (no base_rows " +
-        "in its centroid table) — rebuild via writeIvfIndex or " +
-        "compactIvfIndex to stamp it")
+        "in its centroid table) — rebuild via writeIvfIndexFp or " +
+        "compactIvfIndexFp to stamp it")
     val row = cents.agg(max(col("base_rows"))).head
     require(!row.isNullAt(0),
       s"ivfDriftFraction: empty centroid table for '$table'")
@@ -488,7 +401,7 @@ object Similarity {
   }
 
   /** **Index observability report** over a persisted IVF index
-    * ([[writeIvfIndex]] or [[writeIvfIndexFp]]): one row per occupied
+    * ([[writeIvfIndexFp]]): one row per occupied
     * cell with the occupancy facts an operator watches before they
     * become incidents — `n_rows` (this cell), `total_rows` / `n_cells` /
     * `max_rows` / `min_rows` (the run-wide frame), `share_x10000`
@@ -520,8 +433,8 @@ object Similarity {
     val cents = spark.table(s"${table}__centroids")
     require(cents.columns.contains("base_rows"),
       s"ivfIndexStats: '$table' predates drift tracking (no base_rows " +
-        "in its centroid table) — rebuild via writeIvfIndex or " +
-        "compactIvfIndex to stamp it")
+        "in its centroid table) — rebuild via writeIvfIndexFp or " +
+        "compactIvfIndexFp to stamp it")
     val row = cents.agg(max(col("base_rows"))).head
     require(!row.isNullAt(0),
       s"ivfIndexStats: empty centroid table for '$table'")
@@ -541,43 +454,8 @@ object Similarity {
       .withColumn("delta_rows", col("total_rows") - lit(base))
   }
 
-  /** Serve approximate top-k from a [[writeIvfIndex]] table. Routing
-    * loads the bounded centroid side table (nCells rows); the probed
-    * cells of THIS query batch (≤ |queries|·nprobe ints — ANN serving is
-    * small-batch by contract, like the brute-force query side) collapse
-    * to an `IN` filter on the bucket column, so the index scan reads
-    * only the probed cells' buckets. No retrain, no re-assignment, no
-    * full-index pass — the query-time work is proportional to the probed
-    * fraction. */
-  /** The nCells-row centroid side table of a [[writeIvfIndex]] index —
-    * a bounded driver-side read (routing metadata, the reference's own
-    * driver-side work-list shape). */
-  private[graft] def readCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String): Seq[(Array[Float], Int)] =
-    spark.table(s"${table}__centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .map(r => (r.getSeq[Float](1).toArray, r.getInt(0)))
-      .sortBy(_._2).toSeq
-
-  /** **Incremental IVF index maintenance** — [[Dedup.incrementalDedup]]'s
-    * contract applied to ANN: a delta of new vectors joins the persisted
-    * index WITHOUT a rebuild. The delta is assigned to the index's
-    * EXISTING centroids (read from the side table — no retrain: centroid
-    * identity is exactly what keeps old and new entries in comparable
-    * cells) and appended to the bucketed table under the same bucket
-    * spec, so later [[ivfTopKIndexed]] serves base+delta with the same
-    * bucket-pruned scan and ZERO Exchange on the index side. Work is
-    * proportional to |delta| — one per-row assignment map over the delta
-    * and a bucketed append; the base index is never read, re-shuffled,
-    * or rewritten. The approximation contract is the standard IVF one:
-    * centroids slowly drift from optimal as the corpus distribution
-    * shifts; recall against a same-centroid rebuild is IDENTICAL by
-    * construction (spec-proven), and a periodic [[writeIvfIndex]]
-    * retrain is the compaction step, exactly as the dedup signature
-    * index re-buckets on its own cadence. */
   /** The catalog bucket count of an IVF index table — the shared
-    * layout lookup of [[appendToIvfIndex]] and [[compactIvfIndex]];
+    * layout lookup of [[appendToIvfIndexFp]] and [[compactIvfIndexFp]];
     * refuses loudly on a non-bucketed table. */
   private def bucketCountOf(spark: org.apache.spark.sql.SparkSession,
       table: String, caller: String): Int =
@@ -587,83 +465,17 @@ object Similarity {
       .getOrElse(throw new IllegalArgumentException(
         s"$caller: '$table' is not a bucketed IVF index"))
 
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, delta: DataFrame): Unit = {
-    val cents = readCentroids(spark, table)
-    require(cents.nonEmpty, s"appendToIvfIndex: empty centroid table for '$table'")
-    val buckets = bucketCountOf(spark, table, "appendToIvfIndex")
-    val nearestCells = nearestCellsOf(cents) _
-    delta.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-      .withColumn("cell", nearestCells(col("cv"), 1).getItem(0))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .saveAsTable(table)
-  }
-
-  /** **IVF compaction/retrain** — the [[Upsert.vacuum]] analogue for the
-    * ANN index, closing the maintenance loop [[appendToIvfIndex]]'s
-    * cadence contract promises: after many deltas the centroids (trained
-    * on the original base) drift from the corpus distribution and recall
-    * degrades SILENTLY — cells get lopsided, nprobe probes the wrong
-    * regions. Compaction re-trains on the CURRENT base+delta contents
-    * and rebuilds the bucketed layout in one pass: stage the current
-    * rows (generation copy — the rewrite is inherently a full copy, the
-    * same accounting as `Upsert.vacuum`'s fold-to-one-version), then
-    * [[writeIvfIndex]] from the stage (fresh seeded sample → Lloyd →
-    * assignment → bucketed write + new centroid side table), then drop
-    * the stage. Work ∝ corpus size, run on a cadence (e.g. when
-    * |appended| exceeds a fraction of |base|); SERVE cost is unchanged —
-    * [[ivfTopKIndexed]] still reads only probed buckets. Recall of
-    * (drifted index) vs (compacted index) vs exact is spec-measured
-    * (DedupSimilaritySpec).
-    *
-    * Geometry is PRESERVED by default: `nCells`/`buckets` default to
-    * the index's own layout (centroid-table row count / catalog
-    * bucketSpec — the [[appendToIvfIndex]] discipline), so compacting
-    * an index built with non-default parameters never silently changes
-    * its cell count or bucket width; pass explicit values only to
-    * deliberately re-shape.
-    *
-    * **Crash-safe by generation swap**: the new index (bucketed main
-    * table + centroid side table) is built in full under the
-    * `<table>__compact_next` name while the LIVE index stays intact and
-    * servable — [[trainSample]] orders by xxhash64(id), so training from
-    * the live table reads the same sample a staged copy would — and only
-    * metadata-level renames touch the live name at the very end. The
-    * `__compact_next__centroids` table is written last by
-    * [[writeIvfIndex]], so its existence is the rebuild-complete marker:
-    * a re-run after a crash mid-swap FINISHES the swap instead of
-    * rebuilding, and a crash mid-rebuild leaves the live index untouched
-    * (the partial `__compact_next` is dropped by the next run's
-    * writeBucketed). No window exists where the data survives only in a
-    * stage table. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, nCells: Option[Int] = None,
-      buckets: Option[Int] = None): Unit =
-    compactGenerationSwap(spark, table) { next =>
-      val cells = nCells.getOrElse {
-        val n = readCentroids(spark, table).size
-        require(n > 0, s"compactIvfIndex: empty centroid table for '$table'")
-        n
-      }
-      val nBuckets = buckets.getOrElse(
-        bucketCountOf(spark, table, "compactIvfIndex"))
-      writeIvfIndex(
-        spark.table(table).select(col("cand_id").as("vec_id"),
-          col("cv").as("embedding")),
-        next, cells, nBuckets)
-    }
-
-  /** The crash-safe generation-swap skeleton shared by [[compactIvfIndex]]
-    * and [[compactIvfIndexFp]]: `rebuild(next)` must build the full new
+  /** **Crash-safe generation swap**, the skeleton of
+    * [[compactIvfIndexFp]]: `rebuild(next)` builds the full new
     * generation (bucketed main table, then its `__centroids` side table
-    * LAST — that table's existence is the rebuild-complete marker), and
-    * the swap itself is metadata-only renames. A re-run after a crash
-    * mid-swap finishes the swap instead of rebuilding; a crash
-    * mid-rebuild leaves the live index untouched. */
+    * LAST) under the `<table>__compact_next` name while the LIVE index
+    * stays intact and servable, and only metadata-level renames touch
+    * the live name at the very end. The `__compact_next__centroids`
+    * table is therefore the rebuild-complete marker: a re-run after a
+    * crash mid-swap FINISHES the swap instead of rebuilding, and a crash
+    * mid-rebuild leaves the live index untouched (the partial
+    * `__compact_next` is dropped by the next run's writeBucketed). No
+    * window exists where the data survives only in a stage table. */
   private def compactGenerationSwap(spark: org.apache.spark.sql.SparkSession,
       table: String)(rebuild: String => Unit): Unit = {
     val next = s"${table}__compact_next"
@@ -687,30 +499,6 @@ object Similarity {
     finishSwap()
   }
 
-  def ivfTopKIndexed(queries: DataFrame,
-      spark: org.apache.spark.sql.SparkSession, table: String, k: Int,
-      nprobe: Int = 8): DataFrame = {
-    val cents = readCentroids(spark, table)
-    require(cents.nonEmpty, s"ivfTopKIndexed: empty centroid table for '$table'")
-    val nearestCells = nearestCellsOf(cents) _
-    // persisted: the routed query batch feeds the probe-list collect AND
-    // the scoring join — without the memo the query-side pipeline (scan,
-    // norms, nCells distance sort, explode) would run twice per call
-    val qAssigned = Dedup.memoPersist(queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-      .withColumn("cell", explode(nearestCells(col("qv"), nprobe))))
-    // bounded collect: the probe list for one serving batch
-    val probed = qAssigned.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val cAssigned = spark.table(table)
-      .filter(col("cell").isin(probed: _*))
-      .select(col("cell"), col("cand_id"), col("cv"), col("cn"))
-    scoreCells(qAssigned, cAssigned, k)
-  }
-
-  // ------------------------------- fixed-point persisted IVF (hash-gated)
-
   /** The fp-index centroid side table: `centroid_fp` is the integer
     * (⌊x·10⁶⌋-space) centroid [[kMeansFp]] trained — stored as longs so
     * the persisted index carries EXACTLY the arithmetic the DuckDB
@@ -732,12 +520,18 @@ object Similarity {
   private def fpCellOf(cents: Array[Array[Long]])(cv: Column): Column =
     fpCellScores(cents)(quantized(cv)).getItem(0).getField("cell")
 
-  /** [[writeIvfIndex]]'s hash-gated twin: md5-rank sample → integer
-    * Lloyd ([[ivfFpCentroids]]) → integer-L2 assignment → bucketed-by-
-    * cell write, with the integer centroids + base_rows in the side
-    * table. Every construction step is exact arithmetic the driver's
-    * DuckDB oracle unrolls, so "served from the persisted index ≡
-    * inline [[ivfFpTopK]]" stops being spec-only. */
+  /** Build the **persisted IVF index** — the vector-database pattern
+    * (train once, assign once, serve many query batches), mirroring the
+    * dedup signature index's cross-run loop: md5-rank sample → integer
+    * Lloyd ([[ivfFpCentroids]]) → integer-L2 assignment → write
+    * bucketed+sorted BY CELL, with the integer centroids + base_rows in
+    * a `<table>__centroids` side table so later sessions route queries
+    * without retraining. Bucketing by cell is what makes serving cheap:
+    * a query batch's probed cells become an `IN` filter the scan turns
+    * into BUCKET PRUNING (spec-asserted via SelectedBucketsCount). Every
+    * construction step is exact arithmetic the driver's DuckDB oracle
+    * unrolls, so "served from the persisted index ≡ inline
+    * [[ivfFpTopK]]" is a driver hash equality. */
   def writeIvfIndexFp(candidates: DataFrame, table: String,
       nCells: Int = 16, buckets: Int = 8, iters: Int = 10,
       sampleCap: Int = 4096): Unit = {
@@ -760,12 +554,19 @@ object Similarity {
       .saveAsTable(s"${table}__centroids")
   }
 
-  /** [[appendToIvfIndex]]'s hash-gated twin: the delta is assigned to the
-    * index's EXISTING integer centroids and appended under the same
-    * bucket spec — work ∝ |delta|, base never read — and because the
-    * assignment is the same integer argmin the oracle replays, the
-    * maintenance law (base+delta served ≡ inline over the union under
-    * base-trained centroids) is driver-hash-checked, not spec-only. */
+  /** **Incremental IVF index maintenance** — [[Dedup.incrementalDedup]]'s
+    * contract applied to ANN: a delta of new vectors joins the persisted
+    * index WITHOUT a rebuild. The delta is assigned to the index's
+    * EXISTING integer centroids (read from the side table — no retrain:
+    * centroid identity is what keeps old and new entries in comparable
+    * cells) and appended under the same bucket spec, so later
+    * [[ivfTopKIndexedFp]] serves base+delta with the same bucket-pruned
+    * scan and ZERO Exchange on the index side. Work ∝ |delta|; the base
+    * is never read, re-shuffled or rewritten. Because the assignment is
+    * the same integer argmin the oracle replays, the maintenance law
+    * (base+delta served ≡ inline over the union under base-trained
+    * centroids) is driver-hash-checked. Centroids drift from optimal as
+    * the corpus shifts; [[compactIvfIndexFp]] is the retrain step. */
   def appendToIvfIndexFp(spark: org.apache.spark.sql.SparkSession,
       table: String, delta: DataFrame): Unit = {
     val cents = readCentroidsFp(spark, table)
@@ -791,12 +592,17 @@ object Similarity {
     spark.catalog.refreshTable(table)
   }
 
-  /** [[compactIvfIndex]]'s hash-gated twin: retrain on the CURRENT
-    * contents and rebuild under the same crash-safe generation swap.
-    * [[ivfFpCentroids]]' md5-rank sample is keyed by id alone, so
-    * retraining on base+delta contents draws exactly the sample a fresh
-    * build over the union would — "compacted ≡ fresh rebuild" becomes a
-    * driver hash equality instead of a spec assertion. */
+  /** **IVF compaction/retrain** — the [[Upsert.vacuum]] analogue for the
+    * ANN index: after many deltas the centroids (trained on the original
+    * base) drift from the corpus distribution and recall degrades
+    * SILENTLY. Compaction retrains on the CURRENT contents and rebuilds
+    * the bucketed layout under [[compactGenerationSwap]]; work ∝ corpus,
+    * run on a cadence ([[maintainIvfIndexFp]]), and serve cost is
+    * unchanged. Geometry is preserved: the cell count and bucket width
+    * are read from the index itself. [[ivfFpCentroids]]' md5-rank sample
+    * is keyed by id alone, so retraining on base+delta contents draws
+    * exactly the sample a fresh build over the union would — "compacted
+    * ≡ fresh rebuild" is a driver hash equality. */
   def compactIvfIndexFp(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
     compactGenerationSwap(spark, table) { next =>
@@ -868,8 +674,9 @@ object Similarity {
     val cents = readCentroidsFp(spark, table)
     require(cents.nonEmpty,
       s"ivfTopKIndexedFp: empty centroid table for '$table'")
-    // persisted for the same reason as ivfTopKIndexed: the routed batch
-    // feeds both the probe-list collect and the scoring join
+    // persisted: the routed query batch feeds the probe-list collect AND
+    // the scoring join — without the memo the query-side pipeline (scan,
+    // norms, nCells distance sort, explode) would run twice per call
     val qAssigned = Dedup.memoPersist(queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .withColumn("qn", VectorOps.norm(col("qv")))
@@ -885,8 +692,9 @@ object Similarity {
   }
 
   /** IVF-PQ (Jégou et al., "Product Quantization for Nearest Neighbor
-    * Search", TPAMI 2011): IVF coarse cells route queries exactly as
-    * [[ivfTopK]], but candidates are scored from **product-quantized
+    * Search", TPAMI 2011): float k-means coarse cells ([[KMeansLite]] on
+    * the one-pass [[trainSample]]) route queries as in [[ivfFpTopK]],
+    * but candidates are scored from **product-quantized
     * codes** instead of their raw vectors — the memory-bound regime's
     * answer. The vector splits into `m` subspaces; each subspace gets a
     * `kSub`-centroid codebook (trained on the same one-pass seeded

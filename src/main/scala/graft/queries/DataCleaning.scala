@@ -476,7 +476,7 @@ object DataCleaning {
     * `PartitionFilters`; DataCleaningSpec asserts it and that the
     * pruned-out files are never listed into the scan). This is the
     * directory-level companion of bucket pruning (`bucketed_join` /
-    * `vector_ivf_indexed`) and min/max pruning (`zorder_layout`): at
+    * `vector_ivf_indexed_fp`) and min/max pruning (`zorder_layout`): at
     * 100 TB, lang/day/source partitioning is the first 100× reduction a
     * query sees, before a single row is read. Oracle = the same
     * predicate on the unpartitioned table (layout must not change
@@ -828,42 +828,15 @@ object DataCleaning {
       |WHERE cnt * 1000 >= n * 32
       |ORDER BY item""".stripMargin
 
-  /** **Cluster-mixture report** ([[graft.operators.Similarity
-    * .assignCells]]): k-means cells over the embedding corpus, reported
-    * as per-cluster size, majority label, and purity — the data-mixture
-    * analysis a curation pipeline runs before choosing sampling weights
-    * (which clusters dominate? which are label-pure?). Rows-only by
-    * contract (k-means assignment is engine-specific); the spec pins
-    * determinism, size conservation, and majority/purity arithmetic. */
-  def corpusClusters(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val assigned = graft.operators.Similarity.assignCells(e)
-      .join(e.select("vec_id", "label"), "vec_id")
-    val perLabel = assigned.groupBy(col("cell"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cell"))
-      .orderBy(col("cnt").desc, col("label"))
-    perLabel
-      .withColumn("rk", row_number().over(w))
-      .withColumn("n", sum(col("cnt")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("cell"))))
-      .filter(col("rk") === 1)
-      .select(col("cell"), col("n"),
-        col("label").as("majority_label"),
-        col("cnt").as("n_majority"),
-        (col("cnt").cast("double") / col("n")).as("purity"))
-      .orderBy("cell")
-  }
-
   /** **Cluster-mixture report, HASH-CHECKED** ([[graft.operators
-    * .Similarity.assignCellsFp]]): the same per-cell size / majority
-    * label / purity report as [[corpusClusters]], but over the
-    * FIXED-POINT k-means cells — md5-rank sample/seeds, integer Lloyd,
-    * integer argmin — so the DuckDB oracle re-derives the identical
-    * cell assignment and the whole report gates (purity is one
-    * int÷int IEEE division, determinism rule 3). `corpus_clusters`
-    * stays as the float-production twin, the `graph_pagerank` /
-    * `graph_pagerank_fp` pairing applied to mixtures. */
+    * .Similarity.assignCellsFp]]): k-means cells over the embedding
+    * corpus, reported as per-cluster size, majority label, and purity —
+    * the data-mixture analysis a curation pipeline runs before choosing
+    * sampling weights (which clusters dominate? which are label-pure?).
+    * The cells are FIXED-POINT k-means — md5-rank sample/seeds, integer
+    * Lloyd, integer argmin — so the DuckDB oracle re-derives the
+    * identical cell assignment and the whole report gates (purity is one
+    * int÷int IEEE division, determinism rule 3). */
   def corpusClustersFp(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val assigned = graft.operators.Similarity.assignCellsFp(e)
@@ -1050,8 +1023,7 @@ object DataCleaning {
       |FROM w CROSS JOIN t""".stripMargin
 
   /** **Connected components, hash-checked** — upgrades the CC family
-    * from rows-only (`corpus_clusters`, whose edge set depends on
-    * engine hashing) to a full oracle gate: components of the sparse
+    * to a full oracle gate: components of the sparse
     * part co-occurrence graph, labeled min-node-id per component
     * ([[graft.operators.Dedup.connectedComponentsAuto]] — bounded
     * driver union-find under the gate, distributed min-label
@@ -2037,7 +2009,7 @@ object DataCleaning {
     * value sum, first/last ts) maintained as `old_view ⊕ agg(delta)` —
     * one delta aggregate + one full-outer key join, NO base rescan
     * (work ∝ view + delta; the delta-shaped contract of `scd2_merge` /
-    * `upsert_snapshot` / `vector_ivf_delta`, here for aggregates).
+    * `upsert_snapshot` / `vector_ivf_delta_fp`, here for aggregates).
     * 90% of events build the view, 10% play the delta; the oracle is
     * the full recompute over everything, so the gate proves ⊕ ≡
     * recompute on real data. Sum emitted via DECIMAL → double (SURVEY
@@ -2791,7 +2763,6 @@ object DataCleaning {
     Q("resample_ffill", resampleFfillSql)(resampleFfill),
     Q("resample_interp", resampleInterpSql)(resampleInterp),
     Q.noOracle("hll_rollup")(hllRollup),
-    Q.noOracle("corpus_clusters")(corpusClusters),
     Q("corpus_clusters_fp", corpusClustersFpSql)(corpusClustersFp),
     Q.noOracle("graph_pagerank")(graphPagerank),
     Q("graph_pagerank_fp", graphPagerankFpSql)(graphPagerankFp),

@@ -769,15 +769,6 @@ object LlmOps {
       .orderBy("query_id", "rank")
   }
 
-  /** IVF (k-means cells + nprobe) ANN — the data-adaptive scale path;
-    * rows-only (k-means assignment is engine-specific). */
-  def vectorIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Similarity.ivfTopK(e.filter(col("vec_id") < 20), e, k = 5)
-      .select("query_id", "cand_id", "rank")
-      .orderBy("query_id", "rank")
-  }
-
   /** **Fixed-point IVF, HASH-CHECKED** ([[Similarity.ivfFpTopK]]): the
     * `graph_pagerank_fp` discipline applied to k-means — md5-rank
     * deterministic sample/seeds, quantized ⌊x·10⁶⌋ coordinates, integer
@@ -786,9 +777,10 @@ object LlmOps {
     * Lloyd rounds as materialized CTEs, re-derives the same centroids
     * bit for bit, replays corpus assignment + nprobe routing, and only
     * the final rank-only cosine re-rank is float (the `vector_topk`
-    * gate shape). Breaks the long-standing "k-means assignment is
-    * engine-specific" oracle boundary; the float [[Similarity.ivfTopK]]
-    * stays the production path. */
+    * gate shape). This is the engine's one k-means IVF path: the
+    * persisted-index queries (`vector_ivf_indexed_fp`,
+    * `vector_ivf_delta_fp`, `vector_ivf_compact_fp`) serve the same
+    * kernel from a bucketed index. */
   def vectorIvfFp(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     Similarity.ivfFpTopK(e.filter(col("vec_id") < 20), e, k = 5)
@@ -884,67 +876,6 @@ object LlmOps {
   }
 
   private lazy val vectorIvfFpSql: String = ivfFpServeSql()
-
-  /** Serving from the **persisted IVF index** ([[Similarity
-    * .writeIvfIndex]] / [[Similarity.ivfTopKIndexed]]): build the
-    * bucketed-by-cell index + centroid side table, then answer the query
-    * batch from it — the scan reads only the probed cells' buckets
-    * (bucket pruning, spec-asserted). Rows-only (k-means), anchored by
-    * the spec proving served ≡ inline [[vectorIvf]] results exactly.
-    * The timed query includes the index WRITE, the same deliberate
-    * layout-investment accounting as `bucketed_join` and
-    * `dedup_incremental`. */
-  def vectorIvfIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Similarity.writeIvfIndex(e, "graft_ivf_index")
-    Similarity.ivfTopKIndexed(e.filter(col("vec_id") < 20), spark,
-        "graft_ivf_index", k = 5)
-      .select("query_id", "cand_id", "rank")
-      .orderBy("query_id", "rank")
-  }
-
-  /** **Incremental IVF maintenance** ([[Similarity.appendToIvfIndex]]):
-    * 90% of the corpus builds the persisted index, the other 10% plays
-    * the newly-ingested delta — assigned to the index's EXISTING
-    * centroids and appended to its buckets, work ∝ |delta|, no rebuild —
-    * then the query batch is served from the combined index. Rows-only
-    * (k-means); anchored by the spec proving served base+delta ≡ inline
-    * IVF over the union under the same centroids, with the delta path
-    * planning zero Exchange on the index side. */
-  def vectorIvfDelta(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Similarity.writeIvfIndex(e.filter(col("vec_id") % 10 =!= 0),
-      "graft_ivf_delta_index")
-    Similarity.appendToIvfIndex(spark, "graft_ivf_delta_index",
-      e.filter(col("vec_id") % 10 === 0))
-    Similarity.ivfTopKIndexed(e.filter(col("vec_id") < 20), spark,
-        "graft_ivf_delta_index", k = 5)
-      .select("query_id", "cand_id", "rank")
-      .orderBy("query_id", "rank")
-  }
-
-  /** **IVF compaction** ([[Similarity.compactIvfIndex]]): build the index
-    * on 60% of the corpus, append the other 40% as deltas against the
-    * STALE centroids (maximal drift pressure for this corpus), then
-    * compact — retrain on the full contents and rebuild the buckets —
-    * and serve the query batch from the compacted index. The timed query
-    * includes the compaction itself (layout-investment accounting, like
-    * `vector_ivf_indexed` timing its build); work ∝ corpus, serve cost
-    * unchanged. Rows-only (k-means); anchored by the spec measuring
-    * recall(drifted) ≤ recall(compacted) bounds vs exact top-k and
-    * compacted ≡ fresh-rebuild row identity. */
-  def vectorIvfCompact(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Similarity.writeIvfIndex(e.filter(col("vec_id") % 5 < 3),
-      "graft_ivf_compact_index")
-    Similarity.appendToIvfIndex(spark, "graft_ivf_compact_index",
-      e.filter(col("vec_id") % 5 >= 3))
-    Similarity.compactIvfIndex(spark, "graft_ivf_compact_index")
-    Similarity.ivfTopKIndexed(e.filter(col("vec_id") < 20), spark,
-        "graft_ivf_compact_index", k = 5)
-      .select("query_id", "cand_id", "rank")
-      .orderBy("query_id", "rank")
-  }
 
   /** **Persisted fp-IVF serving, HASH-CHECKED** ([[Similarity
     * .writeIvfIndexFp]] / [[Similarity.ivfTopKIndexedFp]]): build the
@@ -3867,10 +3798,6 @@ object LlmOps {
     Q("mmr_select_fp", mmrSelectFpSql)(mmrSelectFpQ),
     Q.noOracle("vector_pca_route")(vectorPcaRoute),
     Q("vector_pca_route_fp", vectorPcaRouteFpSql)(vectorPcaRouteFp),
-    Q.noOracle("vector_ivf")(vectorIvf),
-    Q.noOracle("vector_ivf_indexed")(vectorIvfIndexed),
-    Q.noOracle("vector_ivf_delta")(vectorIvfDelta),
-    Q.noOracle("vector_ivf_compact")(vectorIvfCompact),
     Q("vector_ivf_indexed_fp", vectorIvfFpSql)(vectorIvfIndexedFp),
     Q("vector_ivf_delta_fp", vectorIvfDeltaFpSql)(vectorIvfDeltaFp),
     Q("vector_ivf_compact_fp", vectorIvfFpSql)(vectorIvfCompactFp),

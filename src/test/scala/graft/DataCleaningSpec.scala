@@ -447,12 +447,12 @@ class DataCleaningSpec extends SparkTestBase {
 
   // --- cluster mixture -----------------------------------------------
 
-  test("corpus_clusters: deterministic, size-conserving, purity arithmetic") {
-    val rep1 = SparkEntry.queries("corpus_clusters")(spark, sf0001)
+  test("corpus_clusters_fp: deterministic, size-conserving, purity arithmetic") {
+    val rep1 = SparkEntry.queries("corpus_clusters_fp")(spark, sf0001)
       .as[(Int, Long, Int, Long, Double)].collect().toSeq
-    val rep2 = SparkEntry.queries("corpus_clusters")(spark, sf0001)
+    val rep2 = SparkEntry.queries("corpus_clusters_fp")(spark, sf0001)
       .as[(Int, Long, Int, Long, Double)].collect().toSeq
-    assert(rep1 == rep2) // seeded sample + seeded Lloyd
+    assert(rep1 == rep2) // md5-rank sample + integer Lloyd
     assert(rep1.map(_._2).sum == Tables.embeddings(spark, sf0001).count())
     assert(rep1.size > 1, "degenerate single cluster")
     rep1.foreach { case (_, n, _, nMaj, purity) =>
@@ -460,7 +460,7 @@ class DataCleaningSpec extends SparkTestBase {
     }
     // majority label is the argmax of the recomputed per-cell label counts
     val e = Tables.embeddings(spark, sf0001)
-    val assigned = graft.operators.Similarity.assignCells(e)
+    val assigned = graft.operators.Similarity.assignCellsFp(e)
       .join(e.select("vec_id", "label"), "vec_id")
       .as[(Long, Int, Int)].collect()
     val byCell = assigned.groupBy(_._2)

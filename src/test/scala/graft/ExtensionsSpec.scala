@@ -322,6 +322,7 @@ class ExtensionsSpec extends SparkTestBase {
     assert(viaSql("lsh") == viaApi(Similarity.annTopK(q, e, 5)))
     assert(viaSql("exact") == viaApi(Similarity.bruteForceTopK(q, e, 5)))
     assert(viaSql("ivf_fp") == viaApi(Similarity.ivfFpTopK(q, e, 5)))
+    assert(viaSql("ivf") == viaApi(Similarity.ivfFpTopK(q, e, 5, nprobe = 8)))
     assert(viaSql("pq_fp") == viaApi(Similarity.ivfPqFpTopK(q, e, 5)))
     assert(viaSql("sq_fp") == viaApi(Similarity.ivfSqFpTopK(q, e, 5)))
     assert(viaSql("bq_fp") == viaApi(Similarity.bqFpTopK(q, e, 5)))

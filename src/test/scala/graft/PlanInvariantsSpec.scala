@@ -12,7 +12,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     *  - sparse_cosine: same shape — the corpus size enters the stop-gram
     *    cutoff as a grouping-free aggregate, provably 1 row, broadcast;
     *  - vector_topk: the exact brute-force baseline — tiny query side
-    *    broadcast against the candidate scan, with annTopK/ivfTopK as the
+    *    broadcast against the candidate scan, with annTopK/ivfFpTopK as the
     *    documented scale paths;
     *  - semantic_dedup: the cell-assignment argmax joins each corpus row
     *    against the BROADCAST nCells-row seeds frame (bounded side ships,

@@ -35,15 +35,10 @@ class QueriesSpec extends SparkTestBase {
       "dsir_weights" -> "dsir_select",
       // float iterative solvers — fixed-point twins gate the shape
       "graph_pagerank" -> "graph_pagerank_fp",
-      "corpus_clusters" -> "corpus_clusters_fp",
       "embedding_pca" -> "vector_pca_route_fp",
       "vector_pca_route" -> "vector_pca_route_fp",
       "mmr_select" -> "mmr_select_fp",
-      // float k-means serving family — fixed-point twins gate each law
-      "vector_ivf" -> "vector_ivf_fp",
-      "vector_ivf_indexed" -> "vector_ivf_indexed_fp",
-      "vector_ivf_delta" -> "vector_ivf_delta_fp",
-      "vector_ivf_compact" -> "vector_ivf_compact_fp",
+      // float IVF-PQ — the fixed-point twin gates the PQ shape
       "vector_pq" -> "vector_pq_fp",
       // zlib deflate bytes are implementation-defined — laws spec-pinned
       "quality_compression" -> "spec:QualityCompressionSpec")
