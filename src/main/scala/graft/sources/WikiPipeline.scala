@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's whole job (/root/reference/main.py `main()`), as one
@@ -19,13 +19,16 @@ import org.apache.spark.sql.functions._
 object WikiPipeline {
 
   /** Process a concrete file list end to end. Returns the number of input
-    * files processed (0 = nothing to do, nothing written). */
+    * files processed (0 = nothing to do, nothing written). `mode` is the
+    * sink's save mode: `Overwrite` replaces the output tree, `Append`
+    * adds to it. */
   def run(spark: SparkSession, inputs: Seq[String], outPath: String,
       wiki: String,
-      epoch: String = graft.operators.Diachronic.DefaultEpoch): Int = {
+      epoch: String = graft.operators.Diachronic.DefaultEpoch,
+      mode: SaveMode = SaveMode.Overwrite): Int = {
     if (inputs.nonEmpty) {
       val snaps = WikiXml.dailySnapshots(WikiXml.read(spark, inputs), epoch)
-      Sink.writeSnapshots(snaps, outPath, wiki)
+      Sink.writeSnapshots(snaps, outPath, wiki, mode)
     }
     inputs.length
   }
@@ -34,7 +37,14 @@ object WikiPipeline {
     * whose outputs `done` already records (the reference's S2 anti-join,
     * keyed `<file>.parquet` like its bucket listing), resolve the rest
     * against `dumpDir`, and run. `done` = a 1-column DataFrame of
-    * already-produced output names; `overwrite` bypasses the skip. */
+    * already-produced output names; `overwrite` bypasses the skip.
+    *
+    * With `done` given and `overwrite = false` the run is incremental:
+    * it appends the remaining files' snapshots to the tree and leaves the
+    * rows already there alone. The contract is the reference's bucket
+    * listing: `done` must name every file whose snapshots are already in
+    * the tree, or those files are ingested again and their rows doubled.
+    * Without `done`, or with `overwrite`, the run replaces the tree. */
   def runFromManifest(spark: SparkSession, manifestPath: String,
       dumpDir: String, outPath: String, wiki: String,
       done: Option[DataFrame] = None, overwrite: Boolean = false,
@@ -47,6 +57,7 @@ object WikiPipeline {
     }
     val files = todo.orderBy("file").collect()
       .map(r => s"${dumpDir.stripSuffix("/")}/${r.getString(0)}").toSeq
-    run(spark, files, outPath, wiki, epoch)
+    val mode = if (done.isDefined && !overwrite) SaveMode.Append else SaveMode.Overwrite
+    run(spark, files, outPath, wiki, epoch, mode)
   }
 }

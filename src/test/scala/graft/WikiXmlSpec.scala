@@ -279,6 +279,138 @@ class WikiXmlSpec extends SparkTestBase {
     assert(spark.read.parquet(out).count() == expected) // untouched
   }
 
+  test("incremental runFromManifest appends: a second run keeps the done file's rows") {
+    import graft.sources.WikiPipeline
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wikiappend").toString
+    val xml = Files.readString(Paths.get(fixture))
+    Files.writeString(Paths.get(s"$dir/a.xml"), xml)
+    Files.writeString(Paths.get(s"$dir/b.xml"), xml.replace("<title>", "<title>B"))
+    def manifest(files: String*): String = {
+      val m = s"$dir/manifest-${files.length}.json"
+      Files.writeString(Paths.get(m), files.map(f => s""""$f":{"size":1}""")
+        .mkString("""{"jobs":{"metahistory7zdump":{"files":{""", ",", "}}}}"))
+      m
+    }
+    val out = s"$dir/out"
+    // the first run knows only file a; the second sees both, with a done
+    assert(WikiPipeline.runFromManifest(spark, manifest("a.xml"), dir, out,
+      wiki = "testwiki", done = Some(Seq.empty[String].toDF("name"))) == 1)
+    assert(WikiPipeline.runFromManifest(spark, manifest("a.xml", "b.xml"), dir, out,
+      wiki = "testwiki", done = Some(Seq("a.xml.parquet").toDF("name"))) == 1)
+    val expected = snapshotRows(
+      WikiXml.dailySnapshots(WikiXml.read(spark, Seq(s"$dir/a.xml", s"$dir/b.xml"))))
+    assert(expected.length == 10)
+    assert(snapshotRows(spark.read.parquet(out)) == expected)
+  }
+
+  /** A snapshot frame's rows, sorted, without the partition columns. */
+  private def snapshotRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("namespace", "title", "timestamp", "text").collect().map(_.toString).sorted.toSeq
+
+  /** Run `body` with the given SQL confs set, restoring the old values. */
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `.parquet` files per `wiki=/month=` directory under `out`. */
+  private def filesPerMonth(out: String): Map[String, Int] = {
+    val root = Paths.get(out)
+    val s = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .groupBy(p => root.relativize(p.getParent).toString).map { case (k, v) => k -> v.size }
+    } finally s.close()
+  }
+
+  /** A snapshot frame of `perPart` rows in each of 4 input partitions,
+    * every row's month from `monthOf(partition, row)`, text of `textLen`
+    * seeded random letters (so shuffle compression cannot shrink it). */
+  private def snapshotFrame(perPart: Int, textLen: Int)(monthOf: (Int, Int) => Option[Int]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(17)
+    val rows = for {
+      p <- 0 until 4; i <- 0 until perPart; m <- monthOf(p, i).toSeq
+    } yield Row("0", s"T$p-$i", java.sql.Timestamp.valueOf(f"2001-$m%02d-${i % 28 + 1}%02d 00:00:00"),
+      rnd.alphanumeric.take(textLen).mkString)
+    val schema = StructType(Seq(StructField("namespace", StringType),
+      StructField("title", StringType), StructField("timestamp", TimestampType),
+      StructField("text", StringType)))
+    // parallelize slices contiguously: partition p holds exactly p's rows
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+  }
+
+  test("writeSnapshots writes one file per wiki/month, however many tasks hold the month") {
+    withConfs("spark.sql.adaptive.enabled" -> "true") {
+      // every input partition holds all 6 months: without clustering the
+      // sink writes 4 files into each month directory
+      val snaps = snapshotFrame(perPart = 30, textLen = 40)((_, i) => Some(i % 6 + 1))
+      assert(snaps.rdd.getNumPartitions == 4)
+      val out = Files.createTempDirectory("wikisink1").toString + "/snaps"
+      Sink.writeSnapshots(snaps, out, wiki = "testwiki")
+      val files = filesPerMonth(out)
+      assert(files.keySet == (1 to 6).map(m => f"wiki=testwiki/month=2001-$m%02d").toSet)
+      assert(files.values.forall(_ == 1), files)
+      assert(snapshotRows(spark.read.parquet(out)) == snapshotRows(snaps))
+    }
+  }
+
+  test("writeSnapshots splits a month larger than the advisory size across files") {
+    withConfs(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled" -> "true",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB") {
+      // month 01 carries 4 × 37 KB from all 4 input partitions; months
+      // 02-04 are one 1 KB row each, all from partition 0, so no split
+      // of a reduce partition they share with month 01 can spread them
+      val snaps = snapshotFrame(perPart = 40, textLen = 1000) { (p, i) =>
+        if (i < 37) Some(1) else if (p == 0) Some(i - 35) else None
+      }
+      val out = Files.createTempDirectory("wikisink2").toString + "/snaps"
+      Sink.writeSnapshots(snaps, out, wiki = "testwiki")
+      val files = filesPerMonth(out)
+      assert(files.keySet == (1 to 4).map(m => f"wiki=testwiki/month=2001-$m%02d").toSet)
+      assert(files("wiki=testwiki/month=2001-01") > 1, files)
+      assert((2 to 4).forall(m => files(f"wiki=testwiki/month=2001-$m%02d") == 1), files)
+      assert(snapshotRows(spark.read.parquet(out)) == snapshotRows(snaps))
+    }
+  }
+
+  test("the snapshot job's write plans one REBALANCE exchange after the downsample's") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = Files.createTempDirectory("wikisink3").toString + "/snaps"
+    val written = scala.concurrent.Promise[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.toString.contains(out)) written.trySuccess(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    withConfs("spark.sql.adaptive.enabled" -> "true") {
+      spark.listenerManager.register(listener)
+      // the listener bus is asynchronous: wait for the write's event
+      val plan = try {
+        Sink.writeSnapshots(WikiXml.dailySnapshots(WikiXml.read(spark, fixture)), out, "testwiki")
+        scala.concurrent.Await.result(written.future,
+          scala.concurrent.duration.Duration(30, "s")).executedPlan
+      } finally spark.listenerManager.unregister(listener)
+      val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case s: ShuffleExchangeExec => s
+      }
+      assert(shuffles.count(_.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL) == 1, plan)
+      // the other is the downsample's (title, day) aggregate exchange
+      assert(shuffles.length == 2, plan)
+    }
+  }
+
   test("dailySnapshots reproduces the reference pipeline on the fixture") {
     val snaps = WikiXml.dailySnapshots(WikiXml.read(spark, fixture))
       .orderBy("title", "timestamp")
