@@ -108,13 +108,12 @@ object Sink {
 
   /** The reference's incremental skip (S2): drop work items whose derived
     * output key already exists. A genuine left-anti join over the key
-    * transform `item + "." + suffix` (main.py:66-68); `overwrite=true`
-    * bypasses, exactly like the reference's flag. */
+    * transform `item + "." + suffix` (main.py:66-68). The reference's
+    * `overwrite=True` is not calling it, as `runFromManifest` does
+    * without `done`. */
   def incrementalSkip(workItems: DataFrame, itemCol: String,
-      existing: DataFrame, existingCol: String,
-      outputSuffix: String, overwrite: Boolean = false): DataFrame =
-    if (overwrite) workItems
-    else workItems.join(
+      existing: DataFrame, existingCol: String, outputSuffix: String): DataFrame =
+    workItems.join(
       existing,
       concat(workItems(itemCol), lit("."), lit(outputSuffix)) === existing(existingCol),
       "left_anti")

@@ -32,8 +32,7 @@ import java.io.InputStream
   * (An XML *comment* between pages could hide a fake `<page` from this
   * byte scan — dump chunks contain no comments, and in-page comments are
   * passed through verbatim to the real parser, so only a comment in the
-  * inter-page gap could confuse the splitter. `splitBz2=false` is the
-  * opt-out for foreign inputs.) */
+  * inter-page gap could confuse the splitter.) */
 object WikiBz2 {
 
   // "BZh" + '1'..'9' + block magic 0x314159265359 (BCD π)

@@ -16,7 +16,7 @@ import java.io.InputStream
   * sequence contains `<` — so byte scanning is exact.
   *
   * Used ONLY when the query does not need `text`
-  * ([[WikiXmlPartitionReader]] picks it when `withText=false`); the StAX
+  * ([[WikiXmlPartitionReader]] picks it when `text` is pruned); the StAX
   * parser ([[WikiXml.parseStream]]) remains the reference semantics, and
   * WikiXmlSpec asserts the two paths emit identical rows on every
   * fixture, including the CDATA/comment/entity robustness cases. */

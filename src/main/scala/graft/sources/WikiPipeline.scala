@@ -37,27 +37,27 @@ object WikiPipeline {
     * whose outputs `done` already records (the reference's S2 anti-join,
     * keyed `<file>.parquet` like its bucket listing), resolve the rest
     * against `dumpDir`, and run. `done` = a 1-column DataFrame of
-    * already-produced output names; `overwrite` bypasses the skip.
+    * already-produced output names.
     *
-    * With `done` given and `overwrite = false` the run is incremental:
-    * it appends the remaining files' snapshots to the tree and leaves the
-    * rows already there alone. The contract is the reference's bucket
-    * listing: `done` must name every file whose snapshots are already in
-    * the tree, or those files are ingested again and their rows doubled.
-    * Without `done`, or with `overwrite`, the run replaces the tree. */
+    * With `done` given the run is incremental: it appends the remaining
+    * files' snapshots to the tree and leaves the rows already there
+    * alone. The contract is the reference's bucket listing: `done` must
+    * name every file whose snapshots are already in the tree, or those
+    * files are ingested again and their rows doubled. Without `done`
+    * (the reference's `overwrite`) the run ingests every file and
+    * replaces the tree. */
   def runFromManifest(spark: SparkSession, manifestPath: String,
       dumpDir: String, outPath: String, wiki: String,
-      done: Option[DataFrame] = None, overwrite: Boolean = false,
+      done: Option[DataFrame] = None,
       epoch: String = graft.operators.Diachronic.DefaultEpoch): Int = {
     val items = Manifest.fileList(spark, manifestPath)
     val todo = done match {
-      case Some(d) => Sink.incrementalSkip(items, "file", d, d.columns.head,
-        outputSuffix = "parquet", overwrite = overwrite)
+      case Some(d) => Sink.incrementalSkip(items, "file", d, d.columns.head, outputSuffix = "parquet")
       case None => items
     }
     val files = todo.orderBy("file").collect()
       .map(r => s"${dumpDir.stripSuffix("/")}/${r.getString(0)}").toSeq
-    val mode = if (done.isDefined && !overwrite) SaveMode.Append else SaveMode.Overwrite
+    val mode = if (done.isDefined) SaveMode.Append else SaveMode.Overwrite
     run(spark, files, outPath, wiki, epoch, mode)
   }
 }

@@ -36,10 +36,10 @@ import org.apache.spark.sql.types._
   *    reference's parse_revision (main.py:151-161).
   *  - **DataSource V2 with column pruning** ([[WikiXmlSource]]): `text`
   *    is ~99% of dump bytes, so a title-only query must never build the
-  *    text strings. The scan pushes required columns down into the
-  *    parser (`withText=false` skips text events without materializing
-  *    characters), and the reader's `close()` releases the stream on
-  *    early termination (`limit`, failure) — no leaked handles.
+  *    text strings. The scan pushes required columns down to the
+  *    reader (without `text` it runs the byte lexer [[WikiLexer]]), and
+  *    the reader's `close()` releases the stream on early termination
+  *    (`limit`, failure) — no leaked handles.
   *
   * Output schema = the reference's frozen 4-column table (main.py:111):
   * namespace/title as raw strings, timestamp as UTC-naive microseconds
@@ -76,16 +76,14 @@ object WikiXml {
     * evaluated; the stream is consumed incrementally and never closed
     * here — the caller owns the stream's lifecycle.
     *
-    * `withText=false` (column pruning) skips `<text>` events without
-    * assembling the string — the payload is ~99% of dump bytes, so a
-    * title-only scan does ~1% of the allocation work. */
-  def parseStream(in: InputStream, withText: Boolean = true,
-      nsFilter: Option[String] = None): Iterator[Revision] = {
+    * `nsFilter` is the pushed-down F1 filter: a filtered page's `<text>`
+    * events are skipped without assembling the string. */
+  def parseStream(in: InputStream, nsFilter: Option[String] = None): Iterator[Revision] = {
     val factory = XMLInputFactory.newInstance()
     // No coalescing: textOf assembles character chunks itself, and a
     // coalescing parser would eagerly buffer each full <text> body (the
-    // ~99% payload) even on the pruned withText=false path where skipElem
-    // discards the chunks unread.
+    // ~99% payload) even on filtered pages, where skipElem discards the
+    // chunks unread.
     factory.setProperty(XMLInputFactory.IS_COALESCING, java.lang.Boolean.FALSE)
     // dumps are untrusted input: no DTDs / external entities
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
@@ -119,7 +117,7 @@ object WikiXml {
       }
 
       /** Consume the current element to its end without materializing
-        * characters — the pruned-`text` path. */
+        * characters — a filtered page's `text`. */
       private def skipElem(r: XMLStreamReader): Unit = {
         var ev = r.next()
         while (ev != XMLStreamConstants.END_ELEMENT) ev = r.next()
@@ -150,7 +148,7 @@ object WikiXml {
                 case "timestamp" if inRevision =>
                   revTs = parseTs(textOf(reader)); advance()
                 case "text" if inRevision =>
-                  if (withText && pageWanted) revText = textOf(reader)
+                  if (pageWanted) revText = textOf(reader)
                   else skipElem(reader)
                   advance()
                 case _ => advance()

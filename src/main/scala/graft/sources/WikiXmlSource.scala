@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, IsNotNull}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,13 +29,14 @@ import org.apache.spark.util.SerializableConfiguration
   * revisions pays full `text` materialization (~99% of dump bytes) even
   * when counting titles. Here [[WikiXmlScanBuilder]] implements
   * `SupportsPushDownRequiredColumns`, so `.select("title")` reaches the
-  * StAX parser as `withText=false` and the payload characters are never
-  * assembled. Plan shape: `BatchScan wikixml ... ReadSchema: [title]`.
+  * reader, whose byte lexer ([[WikiLexer]]) never decodes the payload.
+  * Plan shape: `BatchScan wikixml ... ReadSchema: [title]`.
   *
   * Partitioning keeps the reference's unit of parallelism: one input
   * file = one [[InputPartition]] = one task (main.py:99's per-file Pool
-  * worker) — a page's revisions never straddle partitions, which the
-  * downstream daily-downsample tie-break relies on.
+  * worker), bar large multistream `.bz2` ([[WikiXmlScan]]) — a page's
+  * revisions never straddle partitions, which the downstream
+  * daily-downsample tie-break relies on.
   *
   * Lifecycle: the reader's `close()` (called by Spark on task completion
   * *including* early-exit `limit` and failure paths) closes the decoded
@@ -70,20 +72,19 @@ object WikiXmlSource {
     all
   }
 
-  /** Expand globs / directories to concrete files on the driver, sorted
-    * for deterministic partition ids. */
+  /** Expand globs / directories to concrete files on the driver, as
+    * (path, length in bytes), sorted for deterministic partition ids. */
   private[sources] def listFiles(paths: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] =
+      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] =
     paths.flatMap { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
       val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
       require(matched.nonEmpty, s"wikixml: no input matches $p")
       matched.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath)
-        else Seq(st.getPath)
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
       }
-    }.map(_.toString).distinct.sorted
+    }.map(st => st.getPath.toString -> st.getLen).distinct.sorted
 }
 
 final class WikiXmlTable(paths: Seq[String]) extends Table with SupportsRead {
@@ -92,13 +93,10 @@ final class WikiXmlTable(paths: Seq[String]) extends Table with SupportsRead {
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WikiXmlScanBuilder(paths,
-      splitBz2 = options.getBoolean("splitBz2", true),
-      bz2MinSplitBytes = options.getLong("bz2MinSplitBytes", 32L << 20))
+    new WikiXmlScanBuilder(paths)
 }
 
-final class WikiXmlScanBuilder(paths: Seq[String],
-    splitBz2: Boolean = true, bz2MinSplitBytes: Long = 32L << 20)
+final class WikiXmlScanBuilder(paths: Seq[String])
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = WikiXml.schema
@@ -129,17 +127,24 @@ final class WikiXmlScanBuilder(paths: Seq[String],
 
   override def pushedFilters(): Array[Filter] = pushed
 
+  /** The bz2 split size is the per-core share of the scan's `.bz2`
+    * bytes, capped by `spark.sql.files.maxPartitionBytes` like Spark's
+    * own file sources: one multistream dump reads on every core. */
   override def build(): Scan = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
     val files = WikiXmlSource.listFiles(paths, conf)
-    new WikiXmlScan(files, new SerializableConfiguration(conf), required,
-      pushedNs, splitBz2, bz2MinSplitBytes)
+    val sqlConf = spark.sessionState.conf
+    val cores = sqlConf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val bz2Bytes = files.collect { case (f, len) if f.endsWith(".bz2") => len }.sum
+    new WikiXmlScan(files, new SerializableConfiguration(conf), required, pushedNs,
+      bz2SplitBytes = math.min(sqlConf.filesMaxPartitionBytes, (bz2Bytes + cores - 1) / cores))
   }
 }
 
-final class WikiXmlScan(files: Seq[String], conf: SerializableConfiguration,
-    required: StructType, nsFilter: Option[String],
-    splitBz2: Boolean = true, bz2MinSplitBytes: Long = 32L << 20)
+final class WikiXmlScan(files: Seq[(String, Long)], conf: SerializableConfiguration,
+    required: StructType, nsFilter: Option[String], bz2SplitBytes: Long)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -147,30 +152,27 @@ final class WikiXmlScan(files: Seq[String], conf: SerializableConfiguration,
     s"wikixml ${files.length} files, ReadSchema: [${required.fieldNames.mkString(", ")}]" +
       nsFilter.map(v => s", PushedNsFilter: namespace=$v").getOrElse("")
 
-  /** One partition per file — except multistream `.bz2`, which splits at
-    * bz2 stream boundaries into ranges of ≥ `bz2MinSplitBytes`
-    * ([[WikiBz2]]): the single worst file of a dump (a 100 GB
-    * meta-history multistream) becomes N parallel tasks instead of one
-    * task pinned to one decompressor. The boundary scan is one
-    * sequential driver pass per bz2 file at planning time (Wikimedia's
+  /** One partition per file, except a multistream `.bz2` longer than
+    * `bz2SplitBytes`, which splits at bz2 stream boundaries into ranges
+    * of at least that size ([[WikiBz2]]): the single worst file of a dump
+    * (a 100 GB meta-history multistream) becomes N parallel tasks instead
+    * of one task pinned to one decompressor. The boundary scan is one
+    * sequential driver pass per such file at planning time (Wikimedia's
     * companion index file can replace it; [[WikiBz2.planRanges]] accepts
-    * any offset list). Non-bz2 and single-stream files keep the
-    * one-file-one-task shape — a page's revisions never straddle a
-    * partition either way, which the daily-downsample tie-break relies
-    * on. */
+    * any offset list); a file within one split is planned whole without
+    * it. Non-bz2 and single-stream files keep one task per file either
+    * way. */
   override def planInputPartitions(): Array[InputPartition] =
-    files.flatMap { f =>
+    files.flatMap { case (f, len) =>
       val ranges =
-        if (splitBz2 && f.endsWith(".bz2")) {
+        if (f.endsWith(".bz2") && len > bz2SplitBytes) {
           val path = new Path(f)
-          val fs = path.getFileSystem(conf.value)
-          val len = fs.getFileStatus(path).getLen
-          val in = fs.open(path)
+          val in = path.getFileSystem(conf.value).open(path)
           val starts = try WikiBz2.findStreamStarts(in) finally in.close()
           if (starts.headOption.contains(0L) && starts.length > 1)
-            WikiBz2.planRanges(starts, len, bz2MinSplitBytes)
-          else Seq((0L, -1L)) // single-stream (or foreign) bz2: whole file
-        } else Seq((0L, -1L))
+            WikiBz2.planRanges(starts, len, bz2SplitBytes)
+          else Nil // single-stream (or foreign) bz2: whole file
+        } else Nil
       if (ranges.length <= 1) Seq(WikiXmlInputPartition(f): InputPartition)
       else ranges.map { case (s, e) => WikiXmlInputPartition(f, s, e): InputPartition }
     }.toArray
@@ -199,14 +201,14 @@ final class WikiXmlPartitionReader(part: WikiXmlInputPartition,
     extends PartitionReader[InternalRow] {
 
   private val file = part.file
-  private val withText = required.fieldNames.contains("text")
+  private val textRequired = required.fieldNames.contains("text")
   private var closeAll: () => Unit = () => ()
 
   // text required → StAX (reference semantics); text pruned → the raw
   // byte lexer, which skips the ~99% payload without XML tokenization
   // (WikiXmlSpec asserts both paths emit identical rows)
   private def parse(in: InputStream): Iterator[WikiXml.Revision] =
-    if (withText) WikiXml.parseStream(in, withText = true, nsFilter)
+    if (textRequired) WikiXml.parseStream(in, nsFilter)
     else WikiLexer.scan(in, nsFilter)
 
   private val revisions: Iterator[WikiXml.Revision] = {

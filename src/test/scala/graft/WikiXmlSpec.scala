@@ -30,10 +30,10 @@ class WikiXmlSpec extends SparkTestBase {
 
   test("byte lexer (pruned path) emits rows identical to the StAX parser") {
     import graft.sources.WikiLexer
+    // the reference rows with text blanked: the lexer's pruned contract
     def stax(xml: Array[Byte], nsf: Option[String]) =
-      WikiXml.parseStream(new java.io.ByteArrayInputStream(xml),
-          withText = false, nsFilter = nsf)
-        .map(r => (r.namespace, r.title, r.timestampMicros, r.text, r.revOrd)).toList
+      WikiXml.parseStream(new java.io.ByteArrayInputStream(xml), nsf)
+        .map(r => (r.namespace, r.title, r.timestampMicros, "", r.revOrd)).toList
     def lex(xml: Array[Byte], nsf: Option[String]) =
       WikiLexer.scan(new java.io.ByteArrayInputStream(xml), nsf)
         .map(r => (r.namespace, r.title, r.timestampMicros, r.text, r.revOrd)).toList
@@ -134,14 +134,14 @@ class WikiXmlSpec extends SparkTestBase {
     assert(scans.nonEmpty)
     assert(scans.head.fieldNames.toSeq == Seq("title", "rev_ord"))
     assert(df.count() == 11)
-    // parser-level: pruned parse emits empty text, same row structure
+    // parser-level: the pruned read's lexer emits the StAX rows with text
+    // blanked
     val in = Files.newInputStream(Paths.get(fixture))
     try {
-      val revs = WikiXml.parseStream(in, withText = false).toList
+      val revs = graft.sources.WikiLexer.scan(in).toList
       assert(revs.length == 11 && revs.forall(_.text == ""))
-      assert(revs.map(r => (r.title, r.revOrd)) ==
-        WikiXml.parseStream(Files.newInputStream(Paths.get(fixture)))
-          .map(r => (r.title, r.revOrd)).toList)
+      assert(revs == WikiXml.parseStream(Files.newInputStream(Paths.get(fixture)))
+        .map(_.copy(text = "")).toList)
     } finally in.close()
   }
 
@@ -159,7 +159,7 @@ class WikiXmlSpec extends SparkTestBase {
     // parser level: nsFilter skips filtered pages but keeps rev_ord parity
     val in = Files.newInputStream(Paths.get(fixture))
     try {
-      val only0 = WikiXml.parseStream(in, withText = true, nsFilter = Some("0")).toList
+      val only0 = WikiXml.parseStream(in, nsFilter = Some("0")).toList
       assert(only0.forall(_.namespace == "0"))
       val all = WikiXml.parseStream(Files.newInputStream(Paths.get(fixture))).toList
       assert(only0.map(r => (r.title, r.revOrd)) ==
@@ -169,28 +169,33 @@ class WikiXmlSpec extends SparkTestBase {
 
   test("multistream bz2 splits at stream boundaries; rows equal the single-partition read") {
     import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
-    import graft.sources.WikiBz2
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.{WikiBz2, WikiXmlInputPartition}
 
-    def page(i: Int): String =
+    // seeded random bodies, so each big stream compresses to ~2 KB
+    val rnd = new scala.util.Random(7)
+    def page(i: Int, bodyLen: Int): String =
       s"<page><title>P$i</title><ns>${i % 2}</ns>" +
         (0 until 3).map(j =>
           s"<revision><timestamp>2020-01-${"%02d".format(j + 1)}T0$j:00:00Z</timestamp>" +
-            s"<text>body $i rev $j</text></revision>").mkString + "</page>"
-    val pages = (1 to 12).map(page)
-    // three independent bz2 streams, concatenated byte-aligned — the
-    // multistream dump layout: header rides in the first chunk, the
-    // closing root tag in the last
-    val chunks = Seq(
-      "<mediawiki>\n  <siteinfo><sitename>T</sitename></siteinfo>\n" +
-        pages.take(4).mkString("\n"),
-      pages.slice(4, 8).mkString("\n"),
+            s"<text>body $i rev $j ${rnd.alphanumeric.take(bodyLen).mkString}</text></revision>")
+          .mkString + "</page>"
+    val pages = (1 to 12).map(page(_, 200)) ++ (13 to 14).map(page(_, 0))
+    val header = "<mediawiki>\n  <siteinfo><sitename>T</sitename></siteinfo>\n"
+    // independent bz2 streams, concatenated byte-aligned — the multistream
+    // dump layout: header rides in the first chunk, the closing root tag
+    // in the last. The big file has three streams of four pages, the
+    // small one two streams of one short page.
+    val big = Seq(header + pages.take(4).mkString("\n"), pages.slice(4, 8).mkString("\n"),
       pages.slice(8, 12).mkString("\n") + "\n</mediawiki>\n")
-    val fileBytes = chunks.map { c =>
+    val small = Seq(header + pages(12), pages(13) + "\n</mediawiki>\n")
+    def multistream(chunks: Seq[String]): Array[Byte] = chunks.map { c =>
       val bo = new java.io.ByteArrayOutputStream()
       val bz = new BZip2CompressorOutputStream(bo)
       bz.write(c.getBytes("UTF-8")); bz.close()
       bo.toByteArray
     }.reduce(_ ++ _)
+    val fileBytes = multistream(big)
 
     val starts = WikiBz2.findStreamStarts(new java.io.ByteArrayInputStream(fileBytes))
     assert(starts.length == 3 && starts.head == 0L)
@@ -200,25 +205,35 @@ class WikiXmlSpec extends SparkTestBase {
 
     val dir = Files.createTempDirectory("wikibz2").toString
     Files.write(Paths.get(s"$dir/multi.xml.bz2"), fileBytes)
+    Files.write(Paths.get(s"$dir/small.xml.bz2"), multistream(small))
+    Files.writeString(Paths.get(s"$dir/multi.xml"), big.mkString)
+    Files.writeString(Paths.get(s"$dir/small.xml"), small.mkString)
 
-    val split = spark.read.format(classOf[graft.sources.WikiXmlSource].getName)
-      .option("bz2MinSplitBytes", 1L).load(s"$dir/multi.xml.bz2")
-    val whole = spark.read.format(classOf[graft.sources.WikiXmlSource].getName)
-      .option("splitBz2", false).load(s"$dir/multi.xml.bz2")
-    assert(split.rdd.getNumPartitions == 3)
-    assert(whole.rdd.getNumPartitions == 1)
+    // default settings at local[4]: the split size is a quarter of the
+    // scan's bz2 bytes, which each big stream exceeds and the small file
+    // does not, so the big file plans one partition per stream and the
+    // small one is read whole
+    val split = WikiXml.read(spark, Seq(s"$dir/multi.xml.bz2", s"$dir/small.xml.bz2"))
+    val plain = WikiXml.read(spark, Seq(s"$dir/multi.xml", s"$dir/small.xml"))
+    val planned = split.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.inputPartitions.map(_.asInstanceOf[WikiXmlInputPartition])
+    }.flatten
+    assert(planned.groupBy(_.file.split('/').last)
+      .map { case (f, ps) => f -> ps.length } == Map("multi.xml.bz2" -> 3, "small.xml.bz2" -> 1))
+    assert(planned.count(_.isRange) == 3)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("namespace", "title", "timestamp", "text", "rev_ord")
         .collect().map(_.toSeq).toSet
     val s = rows(split)
-    assert(s.size == 36 && s == rows(whole))
+    assert(s.size == 42 && s == rows(plain))
     // pruned path (byte lexer) agrees across the fragment adapter too
     assert(split.select("title", "rev_ord").collect().toSet ==
-      whole.select("title", "rev_ord").collect().toSet)
+      plain.select("title", "rev_ord").collect().toSet)
     // pushed namespace filter on a split read
-    assert(split.filter(col("namespace") === "0").count() ==
-      whole.filter(col("namespace") === "0").count())
+    val ns0 = split.filter(col("namespace") === "0")
+    assert(ns0.queryExecution.executedPlan.toString.contains("PushedNsFilter: namespace=0"))
+    assert(ns0.collect().toSet == plain.filter(col("namespace") === "0").collect().toSet)
   }
 
   test("reader closes streams on early exit: no fd growth under limit(1)") {
@@ -282,26 +297,52 @@ class WikiXmlSpec extends SparkTestBase {
   test("incremental runFromManifest appends: a second run keeps the done file's rows") {
     import graft.sources.WikiPipeline
     import spark.implicits._
-    val dir = Files.createTempDirectory("wikiappend").toString
-    val xml = Files.readString(Paths.get(fixture))
-    Files.writeString(Paths.get(s"$dir/a.xml"), xml)
-    Files.writeString(Paths.get(s"$dir/b.xml"), xml.replace("<title>", "<title>B"))
-    def manifest(files: String*): String = {
-      val m = s"$dir/manifest-${files.length}.json"
-      Files.writeString(Paths.get(m), files.map(f => s""""$f":{"size":1}""")
-        .mkString("""{"jobs":{"metahistory7zdump":{"files":{""", ",", "}}}}"))
-      m
-    }
+    val dir = twoDumpFiles("wikiappend")
     val out = s"$dir/out"
     // the first run knows only file a; the second sees both, with a done
-    assert(WikiPipeline.runFromManifest(spark, manifest("a.xml"), dir, out,
+    assert(WikiPipeline.runFromManifest(spark, manifest(dir, "a.xml"), dir, out,
       wiki = "testwiki", done = Some(Seq.empty[String].toDF("name"))) == 1)
-    assert(WikiPipeline.runFromManifest(spark, manifest("a.xml", "b.xml"), dir, out,
+    assert(WikiPipeline.runFromManifest(spark, manifest(dir, "a.xml", "b.xml"), dir, out,
       wiki = "testwiki", done = Some(Seq("a.xml.parquet").toDF("name"))) == 1)
     val expected = snapshotRows(
       WikiXml.dailySnapshots(WikiXml.read(spark, Seq(s"$dir/a.xml", s"$dir/b.xml"))))
     assert(expected.length == 10)
     assert(snapshotRows(spark.read.parquet(out)) == expected)
+  }
+
+  test("runFromManifest without done replaces a tree that already holds rows") {
+    import graft.sources.WikiPipeline
+    import spark.implicits._
+    val dir = twoDumpFiles("wikireplace")
+    val out = s"$dir/out"
+    // an incremental run leaves both files' rows in the tree
+    assert(WikiPipeline.runFromManifest(spark, manifest(dir, "a.xml", "b.xml"), dir, out,
+      wiki = "testwiki", done = Some(Seq.empty[String].toDF("name"))) == 2)
+    // without done (the reference's overwrite) every listed file is ingested
+    // again and the tree holds exactly their rows: b's are gone, a's single
+    assert(WikiPipeline.runFromManifest(spark, manifest(dir, "a.xml"), dir, out,
+      wiki = "testwiki") == 1)
+    val expected = snapshotRows(WikiXml.dailySnapshots(WikiXml.read(spark, s"$dir/a.xml")))
+    assert(expected.length == 5)
+    assert(snapshotRows(spark.read.parquet(out)) == expected)
+  }
+
+  /** A temp dir holding the fixture as `a.xml` and, with every title
+    * prefixed `B`, as `b.xml`. */
+  private def twoDumpFiles(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    val xml = Files.readString(Paths.get(fixture))
+    Files.writeString(Paths.get(s"$dir/a.xml"), xml)
+    Files.writeString(Paths.get(s"$dir/b.xml"), xml.replace("<title>", "<title>B"))
+    dir
+  }
+
+  /** A dumpstatus manifest in `dir` listing `files` for the 7z job. */
+  private def manifest(dir: String, files: String*): String = {
+    val m = s"$dir/manifest-${files.length}.json"
+    Files.writeString(Paths.get(m), files.map(f => s""""$f":{"size":1}""")
+      .mkString("""{"jobs":{"metahistory7zdump":{"files":{""", ",", "}}}}"))
+    m
   }
 
   /** A snapshot frame's rows, sorted, without the partition columns. */
@@ -444,7 +485,5 @@ class WikiXmlSpec extends SparkTestBase {
     val todo = Sink.incrementalSkip(work, "item", done, "blob", "parquet")
       .as[String].collect().toSet
     assert(todo == Set("f2"))
-    assert(Sink.incrementalSkip(work, "item", done, "blob", "parquet",
-      overwrite = true).count() == 3)
   }
 }
