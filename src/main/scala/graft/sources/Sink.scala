@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Output-side operators: the reference's Parquet sink + object-store
@@ -22,8 +22,25 @@ import org.apache.spark.sql.functions._
   * gets one file set instead of one file per upstream task per month:
   * the small-file shape [[compact]] repairs after the fact, and the
   * layer that bounded the paper's job (README, "Wiki-ingest
-  * throughput"). */
+  * throughput").
+  *
+  * Local (`file:`) writes carry two Hadoop writer options that select
+  * [[InProcessChmodFs]]: without `libhadoop`, the stock local
+  * filesystem forks a `chmod` process from the JVM for every data file,
+  * `.crc` file and directory it creates, and those forks were most of
+  * the snapshot write's wall time. Writer options reach the Hadoop conf
+  * of the job setup and commit and of every write task; modes and
+  * checksums are those of a stock write. */
 object Sink {
+
+  /** The sink's one writer: zstd Parquet, plus the in-process `chmod`
+    * filesystem when `path` is local and the session has not chosen its
+    * own `file:` implementation. */
+  private def parquetWriter(df: DataFrame, path: String,
+      mode: SaveMode): DataFrameWriter[Row] =
+    df.write.mode(mode).option("compression", "zstd")
+      .options(InProcessChmodFs.writerOptions(path,
+        df.sparkSession.sessionState.newHadoopConf()))
 
   /** Partitioned Parquet write. `partitionBy` plays the reference's
     * `wiki/month/` output layout (conf.py:27-28): at 100 TB, partition
@@ -32,7 +49,7 @@ object Sink {
   def writeParquet(df: DataFrame, path: String,
       partitionCols: Seq[String] = Nil,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = df.write.mode(mode).option("compression", "zstd")
+    val w = parquetWriter(df, path, mode)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
   }
@@ -90,16 +107,14 @@ object Sink {
     // partition's rows in one task; maxRecordsPerFile then splits any
     // oversized partition into ceil(rows/targetRows) files — the
     // deterministic file count the report carries
-    spark.read.parquet(path)
-      .repartition(col(partitionCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
+    val out = path + "__compacted"
+    parquetWriter(spark.read.parquet(path).repartition(col(partitionCol)),
+      out, SaveMode.Overwrite)
       .option("maxRecordsPerFile", targetRows)
       .partitionBy(partitionCol)
-      .parquet(path + "__compacted")
+      .parquet(out)
     before
-      .join(fileStats(path + "__compacted", "files_after", "rows_after"),
-        partitionCol)
+      .join(fileStats(out, "files_after", "rows_after"), partitionCol)
       .select(col(partitionCol).cast("string").as(partitionCol),
         col("files_before"), col("files_after"), col("rows"),
         col("rows_after"))
