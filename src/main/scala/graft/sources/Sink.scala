@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Output-side operators: the reference's Parquet sink + object-store
-  * upload (S6/S7, /root/reference/main.py:177-191) and incremental-skip
-  * anti-join (S2, main.py:56-71), Spark-native.
+  * upload (S6/S7, main.py:177-191), Spark-native, and
+  * the incremental skip (S2, main.py:56-71), on the driver.
   *
   * S6+S7 collapse into a single `.write` against the destination URI
   * (local path here; `gs://`/`s3a://` via the corresponding Hadoop
@@ -122,14 +122,22 @@ object Sink {
   }
 
   /** The reference's incremental skip (S2): drop work items whose derived
-    * output key already exists. A genuine left-anti join over the key
-    * transform `item + "." + suffix` (main.py:66-68). The reference's
-    * `overwrite=True` is not calling it, as `runFromManifest` does
-    * without `done`. */
+    * output key `item + "." + suffix` already exists (main.py:66-68). The
+    * reference's `overwrite=True` is not calling it, as `runFromManifest`
+    * does without `done`.
+    *
+    * Like the reference's listing difference, it runs on the driver: the
+    * listing is KB-sized, so `existing`'s key column is collected (as
+    * strings, in one job) and the work items are filtered against that
+    * set. Over a local relation, such as [[Manifest.fileList]]'s, the
+    * filter folds into a local relation and runs no job. Null semantics
+    * are a left-anti join's: a null work item is kept, and a null key
+    * drops nothing. */
   def incrementalSkip(workItems: DataFrame, itemCol: String,
-      existing: DataFrame, existingCol: String, outputSuffix: String): DataFrame =
-    workItems.join(
-      existing,
-      concat(workItems(itemCol), lit("."), lit(outputSuffix)) === existing(existingCol),
-      "left_anti")
+      existing: DataFrame, existingCol: String, outputSuffix: String): DataFrame = {
+    val keys = existing.select(existing(existingCol).cast("string")).collect()
+      .flatMap(r => Option(r.getString(0))).toSet
+    val key = concat(workItems(itemCol), lit("."), lit(outputSuffix))
+    workItems.filter(key.isNull || !key.isInCollection(keys))
+  }
 }

@@ -1,14 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The reference's whole job (/root/reference/main.py `main()`), as one
-  * library call: manifest scan [S1] → incremental skip [S2] → streaming
-  * decompress + XML event scan [S4/S5, DataSource V2] → ns filter [F1] +
-  * epoch filter [F2] + greedy daily downsample [A1] → wiki/month-
-  * partitioned zstd Parquet [S6/S7]. A user of the reference switches by
-  * pointing this at the same manifest, dump directory, and output tree.
+  * library call: manifest scan [S1] → incremental skip [S2] (both on the
+  * driver) → streaming decompress + XML event scan [S4/S5, DataSource
+  * V2] → ns filter [F1] + epoch filter [F2] + greedy daily downsample
+  * [A1] → wiki/month-partitioned zstd Parquet [S6/S7]. A user of the
+  * reference switches by pointing this at the same manifest, dump
+  * directory, and output tree.
   *
   * Differences from the reference, by design: the downsample is the
   * shuffle aggregate (order-independent, SURVEY §2.4 proof), doneness is
@@ -34,10 +34,12 @@ object WikiPipeline {
   }
 
   /** Manifest-driven variant: extract the job's file list, drop the ones
-    * whose outputs `done` already records (the reference's S2 anti-join,
-    * keyed `<file>.parquet` like its bucket listing), resolve the rest
-    * against `dumpDir`, and run. `done` = a 1-column DataFrame of
-    * already-produced output names.
+    * whose outputs `done` already records (the reference's S2 listing
+    * difference, keyed `<file>.parquet` like its bucket listing), resolve
+    * the rest against `dumpDir`, and run. `done` = a 1-column DataFrame
+    * of already-produced output names. Both steps run on the driver
+    * ([[Manifest]], [[Sink.incrementalSkip]]): collecting `done` is the
+    * one Spark job before the write.
     *
     * With `done` given the run is incremental: it appends the remaining
     * files' snapshots to the tree and leaves the rows already there
@@ -55,7 +57,8 @@ object WikiPipeline {
       case Some(d) => Sink.incrementalSkip(items, "file", d, d.columns.head, outputSuffix = "parquet")
       case None => items
     }
-    val files = todo.orderBy("file").collect()
+    // fileList is sorted and local, so this collect runs no Spark job
+    val files = todo.collect()
       .map(r => s"${dumpDir.stripSuffix("/")}/${r.getString(0)}").toSeq
     val mode = if (done.isDefined) SaveMode.Append else SaveMode.Overwrite
     run(spark, files, outPath, wiki, epoch, mode)

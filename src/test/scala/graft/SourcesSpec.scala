@@ -140,5 +140,25 @@ class SourcesSpec extends SparkTestBase {
     val files = graft.sources.Manifest.fileList(spark, s"$dir/manifest.json")
       .collect().map(_.getString(0)).toSeq
     assert(files == Seq("enwiki-p1.7z", "enwiki-p2.7z"))
+
+    // names are JSON keys, not SQL: commas, quotes and extra dots come back
+    // intact, and the list is sorted whatever the manifest's key order
+    Files.writeString(java.nio.file.Paths.get(s"$dir/odd.json"),
+      """{"jobs":{"metahistory7zdump":{"files":{"z.p1.7z":{"size":1},"a,b.7z":{"size":2},"it's \"q\".7z":{"size":3},"x.y.z.7z":{"size":4}}},""" +
+        """"other":{"files":{"o.7z":{"size":5}}}}}""")
+    val odd = graft.sources.Manifest.fileList(spark, s"$dir/odd.json")
+      .collect().map(_.getString(0)).toSeq
+    assert(odd == Seq("a,b.7z", "it's \"q\".7z", "x.y.z.7z", "z.p1.7z"))
+    assert(graft.sources.Manifest.fileList(spark, s"$dir/odd.json", job = "other")
+      .collect().map(_.getString(0)).toSeq == Seq("o.7z"))
+
+    // a missing job, or a job without a files object, names the job
+    Files.writeString(java.nio.file.Paths.get(s"$dir/nofiles.json"),
+      """{"jobs":{"metahistory7zdump":{"status":"waiting"}}}""")
+    for ((m, job) <- Seq("manifest.json" -> "articlesdump", "nofiles.json" -> "metahistory7zdump")) {
+      val e = intercept[NoSuchElementException](
+        graft.sources.Manifest.fileList(spark, s"$dir/$m", job = job))
+      assert(e.getMessage.contains(job), e.getMessage)
+    }
   }
 }

@@ -485,5 +485,63 @@ class WikiXmlSpec extends SparkTestBase {
     val todo = Sink.incrementalSkip(work, "item", done, "blob", "parquet")
       .as[String].collect().toSet
     assert(todo == Set("f2"))
+
+    // left-anti null semantics: a null work item is kept, and a null in
+    // the listing drops nothing else
+    val withNull = Seq(Some("f1"), None, Some("f2")).toDF("item")
+    assert(Sink.incrementalSkip(withNull, "item", done, "blob", "parquet")
+      .as[Option[String]].collect().toSet == Set(None, Some("f2")))
+    val doneNull = Seq(Some("f1.parquet"), None).toDF("blob")
+    assert(Sink.incrementalSkip(work, "item", doneNull, "blob", "parquet")
+      .as[String].collect().toSet == Set("f2", "f3"))
+    // a non-string key column compares as its string form
+    val ints = Seq(1, 2, 3).toDF("part")
+    val doubles = Seq(1.5, 3.5).toDF("key")
+    assert(Sink.incrementalSkip(ints, "part", doubles, "key", "5")
+      .as[Int].collect().toSet == Set(2))
+  }
+
+  test("the manifest scan and skip run on the driver: one job, collecting done, before the write") {
+    import graft.sources.{Manifest, WikiPipeline}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val dir = twoDumpFiles("wikijobs")
+    val m = manifest(dir, "a.xml", "b.xml")
+    Files.writeString(Paths.get(s"$dir/done.txt"), "a.xml.parquet\n")
+    // "job" per job start, "write" when the sink's write command begins;
+    // listener events arrive in the order they were posted
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_ == "barrier").getOrElse("job"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          events.add("write")
+        case _ =>
+      }
+    }
+    /** Events posted while `body` runs: the ones before a barrier job's. */
+    def recorded(body: => Unit): Seq[String] = {
+      events.clear()
+      body
+      spark.sparkContext.setJobDescription("barrier")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!events.contains("barrier") && System.nanoTime() < deadline) Thread.sleep(20)
+      events.toArray.map(_.toString).toSeq.takeWhile(_ != "barrier")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val listed = recorded(assert(Manifest.fileList(spark, m).collect().length == 2))
+      assert(listed.isEmpty, s"Manifest.fileList ran Spark jobs: $listed")
+      val pass = recorded(assert(WikiPipeline.runFromManifest(spark, m, dir, s"$dir/out",
+        wiki = "testwiki", done = Some(spark.read.text(s"$dir/done.txt"))) == 1))
+      assert(pass.contains("write"), pass)
+      val before = pass.takeWhile(_ != "write")
+      assert(before == Seq("job"), s"jobs before the write: ${before.length}, expected 1 (done)")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
