@@ -32,7 +32,7 @@ object Manifest {
     val in = path.getFileSystem(spark.sessionState.newHadoopConf()).open(path)
     val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     val files = JsonMethods.parse(text) \ "jobs" \ job \ "files" match {
-      case JObject(fields) => fields.map(_._1).distinct.sorted
+      case JObject(fields) => fields.map(_._1).sorted
       case _ => throw new NoSuchElementException(
         s"manifest $manifestPath has no files for job '$job' (jobs.$job.files)")
     }

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
 """Paired A/B of the benchmark: a parent revision against the working tree.
 
-    python3 tools/perfab.py --parent <rev> --workload <name> --seeds 401-410 \
-        [--seconds 6] [--trace 0]
+    python3 tools/perfab.py --parent <rev> --workload <name> --seeds 401-410
 
 Run from the root of the checkout. The parent's committed files are
 extracted (git archive) under .bench_build/perfab/<sha>, so each side
 builds into its own target/ and switching sides recompiles nothing. For
 each seed the script runs perfbench/run.py once per side, alternating
-which side goes first, and prints:
+which side goes first (run length from BENCHMARK.json's run_seconds,
+untraced), and prints:
 
   - each pair's end-to-end metrics, parent -> change;
   - each side's median and quartiles per metric;
@@ -17,8 +17,8 @@ which side goes first, and prints:
     differ by more than the parent's quartile spread), and whether the
     change's median is within the metric's regression bound.
 
-Metric names, directions and bounds come from BENCHMARK.json. Nothing is
-written under perfbench/; the raw result lines go to --log if given.
+Metric names, directions and bounds come from BENCHMARK.json's
+end_to_end list. Nothing is written under perfbench/.
 """
 import argparse
 import json
@@ -51,17 +51,15 @@ def parent_tree(rev):
     return d
 
 
-def run(side, root, a, seed):
-    cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(seed),
-           "--seconds", str(a.seconds), "--trace", str(a.trace)]
+def run(side, root, workload, seconds, seed):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
         sys.exit(f"perfab: {side} seed {seed} exited {p.returncode}")
-    res = json.loads(lines[-1])
-    res["detail"] = json.loads(lines[-2]) if len(lines) > 1 else {}
-    return res
+    return json.loads(lines[-1])
 
 
 def value(res, name):
@@ -81,14 +79,11 @@ def main():
     ap.add_argument("--parent", required=True, help="revision to compare against, e.g. HEAD")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 401-410 or 7,11,13")
-    ap.add_argument("--seconds", type=float, default=6)
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--log", help="append each run's result line (JSON) to this file")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    metrics = bench["end_to_end"] if a.trace == 0 else bench["per_layer"]
+    metrics = bench["end_to_end"]
     sides = {"parent": parent_tree(a.parent), "change": ROOT}
 
     pairs = []
@@ -96,10 +91,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {}
         for side in order:
-            pair[side] = run(side, sides[side], a, seed)
-            if a.log:
-                with open(a.log, "a") as f:
-                    f.write(json.dumps({"side": side, "seed": seed, **pair[side]}) + "\n")
+            pair[side] = run(side, sides[side], a.workload, bench["run_seconds"], seed)
         pairs.append((seed, pair))
         shown = " ".join(
             f"{m['name']}={value(pair['parent'], m['name']):.4g}->{value(pair['change'], m['name']):.4g}"
@@ -109,7 +101,7 @@ def main():
         ok = all(pair[s]["correct"] for s in pair)
         print(f"pair seed={seed} first={order[0]} correct={ok} {shown}", flush=True)
 
-    print(f"\n{len(pairs)} pairs, {a.workload}, --seconds {a.seconds}")
+    print(f"\n{len(pairs)} pairs, {a.workload}, --seconds {bench['run_seconds']}")
     print(f"{'metric':<40} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28}"
           f" {'won':>6} {'gain':>5} {'bound':>6}")
     all_within = True
