@@ -70,7 +70,7 @@ object Mv {
     * "MERGE into aggregate table" loop with the same strictly-append
     * version chain, `_SUCCESS` gating, replay protocol (a redelivered
     * batch id bases on the state before its first application —
-    * [[Upsert.versionPlan]], shared so the two sinks cannot drift) and
+    * [[Upsert.commitVersion]], shared so the sinks cannot drift) and
     * [[Upsert.readLatest]]/[[Upsert.readVersion]]/[[Upsert.vacuum]]
     * surface as the row-level sink. Per batch the work is
     * agg(batch) + one view-sized join — never a history rescan, which
@@ -79,17 +79,11 @@ object Mv {
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil)(
       aggOf: DataFrame => DataFrame): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val (myVersion, baseDir) = Upsert.versionPlan(spark, path, batchId)
       val deltaAgg = aggOf(batch)
-      val merged = baseDir match {
-        case Some(d) =>
-          refresh(spark.read.parquet(d.toString), deltaAgg, keys,
-            sums, mins, maxs)
+      Upsert.commitVersion(batch.sparkSession, path, batchId) {
+        case Some(base) => refresh(base, deltaAgg, keys, sums, mins, maxs)
         case None => deltaAgg
       }
-      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/v=${myVersion}_b=$batchId")
     }
   }
 
@@ -129,22 +123,18 @@ object Mv {
     * batch against the dim — never a view rescan beyond the append.
     * Same strictly-append version chain, `_SUCCESS` gating and replay
     * protocol as [[Upsert.versionedSink]]/[[versionedViewSink]]
-    * (shared [[Upsert.versionPlan]], so the three sinks cannot drift
+    * (shared [[Upsert.commitVersion]], so the sinks cannot drift
     * on replay semantics): a redelivered batch id bases on the state
     * before its first application, giving bitwise-idempotent
     * snapshots under at-least-once delivery. */
   def versionedJoinViewSink(path: String, dim: DataFrame,
       keys: Seq[String]): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val (myVersion, baseDir) = Upsert.versionPlan(spark, path, batchId)
       val appended = broadcast(batch).join(dim, keys)
-      val merged = baseDir match {
-        case Some(d) => spark.read.parquet(d.toString).unionByName(appended)
+      Upsert.commitVersion(batch.sparkSession, path, batchId) {
+        case Some(base) => base.unionByName(appended)
         case None => appended
       }
-      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/v=${myVersion}_b=$batchId")
     }
   }
 }

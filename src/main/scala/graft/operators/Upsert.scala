@@ -66,6 +66,37 @@ object Upsert {
     (fs, vs)
   }
 
+  /** The commit sequence of every versioned sink ([[versionedSink]],
+    * [[changeFeedSink]], [[Mv.versionedViewSink]],
+    * [[Mv.versionedJoinViewSink]]), shared so they cannot drift on
+    * replay semantics. ONE version listing per micro-batch
+    * (listVersions is LIST + N `_SUCCESS` existence probes — on an
+    * object store, re-listing per read is real money) picks the next
+    * version number and the base to fold over, honoring the replay
+    * protocol: a replayed batch id bases on the state strictly BEFORE
+    * its first application, a first delivery on the full committed
+    * chain. `merge` gets the base snapshot (`None` when the batch opens
+    * the log) and its result is written as `v=<version>_b=<batchId>`.
+    * Returns the version, the base directory and the committed
+    * directory, so callers re-read the new snapshot WITHOUT listing
+    * again. */
+  private[operators] def commitVersion(spark: org.apache.spark.sql.SparkSession,
+      path: String, batchId: Long)(merge: Option[DataFrame] => DataFrame)
+      : (Long, Option[org.apache.hadoop.fs.Path], String) = {
+    val (_, versions) = listVersions(spark, path)
+    val myVersion = versions.map(_.version).maxOption.getOrElse(0L) + 1
+    val baseVersions = versions.find(_.batchId == batchId) match {
+      case Some(first) => versions.filter(_.version < first.version)
+      case None => versions
+    }
+    val baseDir = baseVersions.lastOption.map(_.dir)
+    val dir = s"$path/v=${myVersion}_b=$batchId"
+    merge(baseDir.map(d => spark.read.parquet(d.toString)))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(dir)
+    (myVersion, baseDir, dir)
+  }
+
   /** The **streaming half**: a `foreachBatch` body maintaining a
     * VERSIONED parquet snapshot under `path/v=<n>_b=<batchId>` — each
     * micro-batch reads the latest committed version, folds the batch
@@ -80,24 +111,6 @@ object Upsert {
     * in-flight (un-`_SUCCESS`-marked) write, which the restarted stream
     * redelivers; the previously committed chain always survives.
     * Superseded replay versions are [[vacuum]]'s job. */
-  /** The next version number to write and the base version to fold
-    * over, honoring the replay protocol: a replayed batch id bases on
-    * the state strictly BEFORE its first application, a first delivery
-    * on the full committed chain. Shared by [[versionedSink]] and
-    * [[Mv.versionedViewSink]] so the two sinks cannot drift on replay
-    * semantics. */
-  private[operators] def versionPlan(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batchId: Long): (Long, Option[org.apache.hadoop.fs.Path]) = {
-    val (_, versions) = listVersions(spark, path)
-    val myVersion = versions.map(_.version).maxOption.getOrElse(0L) + 1
-    val baseVersions = versions.find(_.batchId == batchId) match {
-      case Some(first) => versions.filter(_.version < first.version)
-      case None => versions
-    }
-    (myVersion, baseVersions.lastOption.map(_.dir))
-  }
-
   def versionedSink(path: String, key: String, order: String, tie: String,
       isTombstone: Column): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) => {
@@ -107,32 +120,21 @@ object Upsert {
   }
 
   /** The shared commit body of [[versionedSink]] and [[changeFeedSink]]:
-    * ONE version listing per micro-batch (listVersions is LIST + N
-    * `_SUCCESS` existence probes — on an object store, re-listing per
-    * read is real money), returning the plan plus the committed
-    * directory so callers re-read the new snapshot WITHOUT listing
-    * again. */
+    * the batch's latest row per key folded through [[upsert]] over the
+    * base version, committed by [[commitVersion]]. */
   private def writeSnapshotVersion(batch: DataFrame, batchId: Long,
       path: String, key: String, order: String, tie: String,
       isTombstone: Column): (Long, Option[org.apache.hadoop.fs.Path], String) = {
-    val spark = batch.sparkSession
-    val (myVersion, baseDir) = versionPlan(spark, path, batchId)
-    val base = baseDir match {
-      case Some(d) => spark.read.parquet(d.toString)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    }
     // within-batch latest-wins: keep the (order, tie)-max row per key
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key)).orderBy(col(order).desc, col(tie).desc)
     val latest = batch
       .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val dir = s"$path/v=${myVersion}_b=$batchId"
-    upsert(base, latest, col(key), isTombstone)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(dir)
-    (myVersion, baseDir, dir)
+    commitVersion(batch.sparkSession, path, batchId) {
+      case Some(base) => upsert(base, latest, col(key), isTombstone)
+      case None => latest.filter(!isTombstone)
+    }
   }
 
   /** Latest committed state of a [[versionedSink]] directory. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -52,10 +52,10 @@ object StreamingDownsample {
     * [[graft.operators.Dedup.exact]]. State is bounded by the watermark
     * (keys older than it are evicted), which is what makes exact dedup
     * viable on an infinite stream: at 100 TB/day you bound the dedup
-    * horizon, not the corpus. */
-  def dedupStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
+    * horizon, not the corpus. The horizon is one hour. */
+  def dedupStream(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming heavy-hitter candidates: per tumbling event-time window,
@@ -87,7 +87,7 @@ object StreamingDownsample {
   /** Streaming per-window quantile estimates from the deterministic
     * bottom-k-by-hash sample ([[graft.operators.Sampling
     * .sampleQuantiles]]'s stream twin): the k smallest
-    * md5(salt ‖ event_id) rows per tumbling window fold incrementally
+    * md5("graft" ‖ event_id) rows per tumbling window fold incrementally
     * through the state store via the mergeable
     * [[graft.functions.BoundedTopK]] partial — O(k) state per open
     * window — and finalize in append mode. Unlike [[frequentStream]]'s
@@ -97,8 +97,9 @@ object StreamingDownsample {
     * the same day (spec-asserted) — approximate in value, exact in
     * reproducibility. */
   def quantileStream(events: DataFrame, k: Int = 512,
-      watermark: String = "1 day", salt: String = "graft"): DataFrame = {
-    val h = md5(concat(lit(salt), col("event_id").cast("string")))
+      watermark: String = "1 day"): DataFrame = {
+    // the salt of the batch operator's default, so the samples agree
+    val h = md5(concat(lit("graft"), col("event_id").cast("string")))
     val qCols = Seq(500, 900, 990).map { q =>
       element_at(col("vs"),
         greatest(lit(1), expr(s"($q * size(vs) + 999) div 1000")).cast("int"))
@@ -147,27 +148,26 @@ object StreamingDownsample {
     * (the rollup law), answering point-frequency queries over arbitrary
     * windows without re-reading the stream. Converged ≡ the identical
     * batch aggregate (CmsSpec). */
-  def cmsStream(events: DataFrame, d: Int = graft.operators.Cms.D,
-      w: Int = graft.operators.Cms.W,
-      watermark: String = "1 day"): DataFrame =
+  def cmsStream(events: DataFrame, watermark: String = "1 day"): DataFrame = {
+    import graft.operators.Cms
     events
       .withWatermark("ts", watermark)
-      .select(col("ts"),
-        graft.operators.Cms.positions(col("user_id"), d, w).as("pos"))
+      .select(col("ts"), Cms.positions(col("user_id")).as("pos"))
       .groupBy(window(col("ts"), "1 day").as("win"))
-      .agg(graft.functions.CmsSketchAgg(col("pos"), d * w).as("cms"))
+      .agg(graft.functions.CmsSketchAgg(col("pos"), Cms.D * Cms.W).as("cms"))
       .select(col("win.start").cast("date").as("day"), col("cms"))
+  }
 
   /** Streaming sessionization: `session_window` dynamic-gap windows — the
     * unbounded-stream twin of the batch gaps-and-islands `sessionize`
-    * query. Sessions merge while events arrive within `gap` of the
+    * query. Sessions merge while events arrive within one hour of the
     * window's end and finalize once the watermark passes; state per open
     * session is one window + the aggregates, evicted at finalize — bounded
     * by (active users × open sessions), not history.
     *
     * Boundary convention (empirically pinned —
     * SessionWindowSemanticsSpec): `session_window` windows MERGE when
-    * they touch, so an event at exactly ts − prev == gap stays
+    * they touch, so an event at exactly ts − prev == 1 hour stays
     * in-session — the SAME convention as the batch formulation's
     * `> gap` break. The one residual divergence vs the batch
     * `sessionize` query is precision: this operator compares
@@ -175,11 +175,10 @@ object StreamingDownsample {
     * truncated epoch SECONDS, so sub-second tails can flip cases within
     * one second of the boundary (`sessionize_native` closes even that
     * by feeding second-truncated timestamps). */
-  def sessions(events: DataFrame, gap: String = "1 hour",
-      watermark: String = "1 day"): DataFrame =
+  def sessions(events: DataFrame, watermark: String = "1 day"): DataFrame =
     events
       .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      .groupBy(col("user_id"), session_window(col("ts"), "1 hour").as("w"))
       .agg(
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
@@ -188,58 +187,47 @@ object StreamingDownsample {
         col("n_events"))
 
   /** **Stream–stream interval join**: each purchase paired with the same
-    * user's clicks from the preceding `lookback` (inclusive of the
-    * purchase instant) — the attribution-window join, continuously. Both
-    * sides carry a watermark and the join condition bounds event-time
+    * user's clicks from the preceding hour (inclusive of the purchase
+    * instant) — the attribution-window join, continuously. Both sides
+    * carry a one-day watermark and the join condition bounds event-time
     * distance, which is what lets the engine EVICT buffered rows: a click
-    * older than (watermark − lookback) can never match a future purchase,
-    * so stream-join state is O(rate × lookback) per side, not unbounded
+    * older than (watermark − 1 hour) can never match a future purchase,
+    * so stream-join state is O(rate × 1 hour) per side, not unbounded
     * history. Inner join ⇒ results emit as soon as both sides arrive (no
     * watermark finalization wait). */
-  def purchaseClickJoin(events: DataFrame, lookback: String = "1 hour",
-      watermark: String = "1 day"): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermark)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    purchases.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr(s"INTERVAL $lookback") &&
-          col("c_ts") <= col("p_ts"))
-      .select(col("purchase_id"), col("user_id"), col("p_ts"),
-        col("click_id"), col("c_ts"))
-  }
+  def purchaseClickJoin(events: DataFrame): DataFrame =
+    attributionJoin(events, "inner")
 
   /** **Left-outer stream–stream attribution join** — [[purchaseClickJoin]]
     * with the unattributed purchases KEPT: a purchase with no click in
-    * its lookback emits exactly once with null click columns, but only
-    * after the watermark proves no matching click can still arrive
-    * (Spark holds outer results until the join state for that event-time
-    * range expires — the outer-null decision is a frontier decision,
-    * same law as [[transitionsStream]]'s pair finalization). Matched
+    * its one-hour lookback emits exactly once with null click columns,
+    * but only after the watermark proves no matching click can still
+    * arrive (Spark holds outer results until the join state for that
+    * event-time range expires — the outer-null decision is a frontier
+    * decision, same law as [[transitionsStream]]'s pair finalization). Matched
     * pairs emit as they meet, exactly like the inner form; the
     * interval condition + both-side watermarks keep the join state
-    * O(rate × lookback), evicted, never history. Converged output ≡ the
+    * O(rate × 1 hour), evicted, never history. Converged output ≡ the
     * batch left join (StreamingSpec), making this the form a marketing
     * pipeline actually runs: attribution AND the unattributed remainder
     * from one operator, no anti-join second pass. */
-  def purchaseClickJoinOuter(events: DataFrame, lookback: String = "1 hour",
-      watermark: String = "1 day"): DataFrame = {
+  def purchaseClickJoinOuter(events: DataFrame): DataFrame =
+    attributionJoin(events, "leftOuter")
+
+  /** The body of both attribution joins; they differ only in `joinType`. */
+  private def attributionJoin(events: DataFrame, joinType: String): DataFrame = {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermark)
+      .withWatermark("p_ts", "1 day")
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
+      .withWatermark("c_ts", "1 day")
     purchases.join(clicks,
         col("user_id") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr(s"INTERVAL $lookback") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 hour") &&
           col("c_ts") <= col("p_ts"),
-        "leftOuter")
+        joinType)
       .select(col("purchase_id"), col("user_id"), col("p_ts"),
         col("click_id"), col("c_ts"))
   }
@@ -336,9 +324,9 @@ object StreamingDownsample {
     * Bloom route ([[graft.operators.Dedup.contaminationBloom]]) is the
     * batch-side fallback. Emits only contaminated documents, with the
     * batch operator's exact columns. */
-  def decontaminateStream(docs: DataFrame, bench: DataFrame,
-      n: Int = 3): DataFrame = {
+  def decontaminateStream(docs: DataFrame, bench: DataFrame): DataFrame = {
     import graft.operators.Dedup
+    val n = 3 // 3-gram shingles, as the registered `decontaminate` query
     // Static side built from the EXPLODED shingle stream (explode fused
     // with the shingle expression — see Dedup.shingleHashes scaladoc for
     // why exploding the projected array form would re-tokenize O(len²)),
@@ -579,6 +567,43 @@ object StreamingDownsample {
     t
   }
 
+  /** The evicting-snapshot skeleton of [[sessionizeStream]],
+    * [[funnelStream]] and [[retentionStream]]: update-mode
+    * `mapGroupsWithState` per user that folds each batch into the key's
+    * state with `fold` and emits `outOf` of the new state. With
+    * `evictAfterSeconds = Some(b)` (watermarked input required — Spark
+    * refuses an event-time timeout without one) the key's timeout is
+    * pinned to its latest event time (`lastUs`) + b, clamped past the
+    * current watermark (Spark rejects a deadline already passed); once
+    * the frontier passes it the key emits `outOf` one final time and its
+    * state is removed. With `None` the timeout is `NoTimeout`. */
+  private def evictingSnapshots[S: Encoder, O: Encoder](events: Dataset[Event],
+      evictAfterSeconds: Option[Long], lastUs: S => Long, outOf: (Long, S) => O)(
+      fold: (Option[S], Iterator[Event]) => S): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val timeoutConf =
+      if (evictAfterSeconds.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    events.groupByKey(_.user_id)
+      .mapGroupsWithState(timeoutConf)(
+        (userId: Long, batch: Iterator[Event], state: GroupState[S]) => {
+          if (state.hasTimedOut) {
+            val out = outOf(userId, state.get)
+            state.remove()
+            out
+          } else {
+            val s = fold(state.getOption, batch)
+            state.update(s)
+            evictAfterSeconds.foreach { b =>
+              state.setTimeoutTimestamp(math.max(
+                Math.floorDiv(lastUs(s), 1000L) + b * 1000L,
+                state.getCurrentWatermarkMs() + 1L))
+            }
+            outOf(userId, s)
+          }
+        })
+  }
+
   /** **Custom-state streaming sessionization** — the `mapGroupsWithState`
     * twin of the batch gaps-and-islands `sessionize` query, correct under
     * ADVERSARIAL arrival (any order, any batch split — the
@@ -588,8 +613,9 @@ object StreamingDownsample {
     * here a late event merges — possibly BRIDGING two existing sessions
     * into one (the interval-merge insert: an event joins every run whose
     * truncated-second span it is within the gap of; all joined runs and
-    * the event fold into one run). Gap semantics are the batch query's
-    * exactly: epoch seconds truncate before the `> gap` comparison.
+    * the event fold into one run). The gap is the batch query's one hour
+    * with its semantics exactly: epoch seconds truncate before the
+    * `> 3600` comparison.
     *
     * State per key is the RUN LIST ONLY — (start, end, count, distinct
     * type set) per session, never the event history: O(sessions/user ×
@@ -619,63 +645,39 @@ object StreamingDownsample {
     * operator keeps the no-arrival-assumptions contract: NoTimeout,
     * state grows with total keys. */
   def sessionizeStream(events: Dataset[Event],
-      gapSeconds: Long = 3600L,
       evictAfterSeconds: Option[Long] = None): Dataset[SessionsOut] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (evictAfterSeconds.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    val gapSeconds = 3600L
     def outOf(userId: Long, s: SessState): SessionsOut =
       SessionsOut(userId, s.nSeen,
         s.startUs.map(tsOfMicros), s.endUs.map(tsOfMicros),
         s.nEvents, s.types.map(_.size.toLong))
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(timeoutConf)(
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessState]) => {
-          if (state.hasTimedOut) {
-            // frontier passed this key's deadline: final emission, evict
-            val out = outOf(userId, state.get)
-            state.remove()
-            out
-          } else {
-            var runs: Seq[(Long, Long, Long, Set[String])] =
-              state.getOption.map(s => s.startUs.indices.map(i =>
-                (s.startUs(i), s.endUs(i), s.nEvents(i), s.types(i).toSet)).toSeq)
-                .getOrElse(Seq.empty)
-            var seen = state.getOption.map(_.nSeen).getOrElse(0L)
-            batch.foreach { e =>
-              seen += 1
-              val us = micros(e.ts)
-              val sec = Math.floorDiv(us, 1000000L)
-              val (joins, rest) = runs.partition { r =>
-                val sSec = Math.floorDiv(r._1, 1000000L)
-                val eSec = Math.floorDiv(r._2, 1000000L)
-                sec >= sSec - gapSeconds && sec <= eSec + gapSeconds
-              }
-              runs = rest :+ ((
-                (us +: joins.map(_._1)).min,
-                (us +: joins.map(_._2)).max,
-                joins.map(_._3).sum + 1L,
-                joins.foldLeft(Set(e.event_type))(_ ++ _._4)))
-            }
-            val sorted = runs.sortBy(r => (r._1, r._2))
-            state.update(SessState(sorted.map(_._1), sorted.map(_._2),
-              sorted.map(_._3), sorted.map(_._4.toSeq.sorted), seen))
-            evictAfterSeconds.foreach { b =>
-              // deadline = latest event absorbed by this key + bound; the
-              // run ends ARE event times, so no extra state field. Clamped
-              // past the current watermark (Spark refuses a deadline the
-              // frontier already passed).
-              val lastUs = sorted.map(_._2).max
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(lastUs, 1000L) + b * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            SessionsOut(userId, seen,
-              sorted.map(r => tsOfMicros(r._1)), sorted.map(r => tsOfMicros(r._2)),
-              sorted.map(_._3), sorted.map(_._4.size.toLong))
-          }
-        })
+    evictingSnapshots[SessState, SessionsOut](events, evictAfterSeconds,
+        _.endUs.max, outOf) { (prior, batch) =>
+      var runs: Seq[(Long, Long, Long, Set[String])] =
+        prior.map(s => s.startUs.indices.map(i =>
+          (s.startUs(i), s.endUs(i), s.nEvents(i), s.types(i).toSet)).toSeq)
+          .getOrElse(Seq.empty)
+      var seen = prior.map(_.nSeen).getOrElse(0L)
+      batch.foreach { e =>
+        seen += 1
+        val us = micros(e.ts)
+        val sec = Math.floorDiv(us, 1000000L)
+        val (joins, rest) = runs.partition { r =>
+          val sSec = Math.floorDiv(r._1, 1000000L)
+          val eSec = Math.floorDiv(r._2, 1000000L)
+          sec >= sSec - gapSeconds && sec <= eSec + gapSeconds
+        }
+        runs = rest :+ ((
+          (us +: joins.map(_._1)).min,
+          (us +: joins.map(_._2)).max,
+          joins.map(_._3).sum + 1L,
+          joins.foldLeft(Set(e.event_type))(_ ++ _._4)))
+      }
+      val sorted = runs.sortBy(r => (r._1, r._2))
+      SessState(sorted.map(_._1), sorted.map(_._2),
+        sorted.map(_._3), sorted.map(_._4.toSeq.sorted), seen)
+    }
   }
 
   final case class FunnelState(views: Seq[Long], clicks: Seq[Long],
@@ -713,14 +715,8 @@ object StreamingDownsample {
     * arrival within the bound, outputs are identical to the unbounded
     * form (spec-pinned). */
   def funnelStream(events: Dataset[Event],
-      stages: Seq[String] = Seq("view", "click", "purchase"),
       evictAfterSeconds: Option[Long] = None): Dataset[FunnelOut] = {
-    require(stages.size == 3, s"funnelStream tracks a 3-stage chain, got $stages")
     import events.sparkSession.implicits._
-    val Seq(s0, s1, s2) = stages
-    val timeoutConf =
-      if (evictAfterSeconds.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
     def outOf(userId: Long, st: FunnelState): FunnelOut = {
       val tv = st.views.minOption
       val tc = tv.flatMap(v => st.clicks.filter(_ > v).minOption)
@@ -728,34 +724,19 @@ object StreamingDownsample {
       FunnelOut(userId, st.nSeen, tv.map(tsOfMicros),
         tc.map(tsOfMicros), tp.map(tsOfMicros))
     }
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(timeoutConf)(
-        (userId: Long, batch: Iterator[Event], state: GroupState[FunnelState]) => {
-          if (state.hasTimedOut) {
-            val out = outOf(userId, state.get)
-            state.remove()
-            out
-          } else {
-            var st = state.getOption.getOrElse(FunnelState(Nil, Nil, Nil, 0L, 0L))
-            batch.foreach { e =>
-              val us = micros(e.ts)
-              st = e.event_type match {
-                case `s0` => st.copy(views = st.views :+ us, nSeen = st.nSeen + 1)
-                case `s1` => st.copy(clicks = st.clicks :+ us, nSeen = st.nSeen + 1)
-                case `s2` => st.copy(purchases = st.purchases :+ us, nSeen = st.nSeen + 1)
-                case _ => st.copy(nSeen = st.nSeen + 1)
-              }
-              st = st.copy(lastUs = math.max(st.lastUs, us))
-            }
-            state.update(st)
-            evictAfterSeconds.foreach { b =>
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(st.lastUs, 1000L) + b * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            outOf(userId, st)
-          }
-        })
+    evictingSnapshots[FunnelState, FunnelOut](events, evictAfterSeconds,
+        _.lastUs, outOf) { (prior, batch) =>
+      batch.foldLeft(prior.getOrElse(FunnelState(Nil, Nil, Nil, 0L, 0L))) { (st, e) =>
+        val us = micros(e.ts)
+        val next = e.event_type match {
+          case "view" => st.copy(views = st.views :+ us)
+          case "click" => st.copy(clicks = st.clicks :+ us)
+          case "purchase" => st.copy(purchases = st.purchases :+ us)
+          case _ => st
+        }
+        next.copy(nSeen = st.nSeen + 1, lastUs = math.max(st.lastUs, us))
+      }
+    }
   }
 
   final case class RetState(days: Seq[Long], nSeen: Long, lastUs: Long)
@@ -799,53 +780,39 @@ object StreamingDownsample {
         .ofEpochSecond(Math.floorDiv(us, 1000000L),
           Math.floorMod(us, 1000000L) * 1000L)
         .atZone(zone).toLocalDate.toEpochDay
-    val timeoutConf =
-      if (evictAfterSeconds.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
     def outOf(userId: Long, s: RetState): RetentionOut = {
       val cohort = s.days.min
       RetentionOut(userId, s.nSeen, cohort,
         s.days.map(d => (d - cohort) / 7).distinct.sorted)
     }
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(timeoutConf)(
-        (userId: Long, batch: Iterator[Event], state: GroupState[RetState]) => {
-          if (state.hasTimedOut) {
-            val out = outOf(userId, state.get)
-            state.remove()
-            out
-          } else {
-            var days = state.getOption.map(_.days.toSet).getOrElse(Set.empty[Long])
-            var seen = state.getOption.map(_.nSeen).getOrElse(0L)
-            var lastUs = state.getOption.map(_.lastUs).getOrElse(0L)
-            batch.foreach { e =>
-              seen += 1
-              val us = micros(e.ts)
-              lastUs = math.max(lastUs, us)
-              days += epochDay(us)
-            }
-            state.update(RetState(days.toSeq.sorted, seen, lastUs))
-            evictAfterSeconds.foreach { b =>
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(lastUs, 1000L) + b * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            val cohort = days.min
-            RetentionOut(userId, seen, cohort,
-              days.map(d => (d - cohort) / 7).toSeq.sorted)
-          }
-        })
+    evictingSnapshots[RetState, RetentionOut](events, evictAfterSeconds,
+        _.lastUs, outOf) { (prior, batch) =>
+      var days = prior.map(_.days.toSet).getOrElse(Set.empty[Long])
+      var seen = prior.map(_.nSeen).getOrElse(0L)
+      var lastUs = prior.map(_.lastUs).getOrElse(0L)
+      batch.foreach { e =>
+        seen += 1
+        val us = micros(e.ts)
+        lastUs = math.max(lastUs, us)
+        days += epochDay(us)
+      }
+      RetState(days.toSeq.sorted, seen, lastUs)
+    }
   }
 
   /** Stateful: the reference's greedy threshold as GroupState. State per
     * key is a single long (the next-emittable instant) — O(1) per key,
     * which is what makes this viable with hundreds of millions of keys:
-    * state size is keys × 8 bytes, not keys × events. */
-  def greedy(events: Dataset[Event],
-      epochMillis: Long = Timestamp.valueOf("2001-01-15 00:00:00").getTime)
-      : Dataset[DayFirst] = {
+    * state size is keys × 8 bytes, not keys × events. The threshold
+    * starts at the reference epoch
+    * ([[graft.operators.Diachronic.DefaultEpoch]]), read as UTC like the
+    * day arithmetic below. */
+  def greedy(events: Dataset[Event]): Dataset[DayFirst] = {
     import events.sparkSession.implicits._
     val dayMs = 24L * 3600 * 1000
+    val epochMillis = java.time.LocalDateTime
+      .parse(graft.operators.Diachronic.DefaultEpoch.replace(' ', 'T'))
+      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
 
     events
       .groupByKey(_.user_id)
@@ -873,6 +840,54 @@ object StreamingDownsample {
     types: Seq[String])
   final case class TransitionOut(user_id: Long, prev_type: String,
     next_type: String, at: Timestamp)
+
+  /** The frontier-window skeleton of [[transitionsStream]] (w = 2) and
+    * [[patternStream]] (w = 3): per user, the event-time-ordered events
+    * not yet final, in append mode. A window of `w` consecutive events
+    * finalizes — goes to `emit`, exactly once — when the watermark
+    * passes its last event; the state then keeps `w − 1` anchors plus the
+    * pending suffix. With `evictAfterSeconds = Some(b)` a key holding
+    * anchors only, idle past b, is removed. The key wakes when the
+    * frontier passes its earliest pending window end, else at the idle
+    * deadline, clamped past the current watermark (Spark rejects a
+    * deadline already passed). Ordering ties break on event_id. */
+  private def frontierWindows[O: Encoder](events: Dataset[Event], w: Int,
+      evictAfterSeconds: Option[Long])(
+      emit: (Long, Seq[(Long, Long, String)]) => Option[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (userId: Long, batch: Iterator[Event], state: GroupState[TransState]) => {
+          var seq: Vector[(Long, Long, String)] =
+            state.getOption.map(s => s.tsUs.indices.map(i =>
+              (s.tsUs(i), s.ids(i), s.types(i))).toVector).getOrElse(Vector.empty)
+          val fresh = batch.toVector.map(e => (micros(e.ts), e.event_id, e.event_type))
+          if (fresh.nonEmpty)
+            seq = (seq ++ fresh).sortBy(t => (t._1, t._2))
+          val wmUs = state.getCurrentWatermarkMs() * 1000L
+          val out = scala.collection.mutable.ArrayBuffer.empty[O]
+          // window seq(j - w + 1 .. j) finalizes when the frontier passes seq(j)
+          var j = w - 1
+          while (j < seq.length && seq(j)._1 < wmUs) {
+            out ++= emit(userId, seq.slice(j - w + 1, j + 1))
+            j += 1
+          }
+          seq = seq.drop(j - (w - 1))
+          def idleDeadline = evictAfterSeconds.map(b => seq.last._1 + b * 1000000L)
+          if (seq.isEmpty || (seq.length < w && idleDeadline.exists(_ < wmUs))) {
+            state.remove()
+          } else {
+            state.update(TransState(seq.map(_._1), seq.map(_._2), seq.map(_._3)))
+            val nextUs = if (seq.length >= w) Some(seq(w - 1)._1) else idleDeadline
+            nextUs.foreach { us =>
+              state.setTimeoutTimestamp(math.max(
+                Math.floorDiv(us, 1000L) + 1L,
+                state.getCurrentWatermarkMs() + 1L))
+            }
+          }
+          out.iterator
+        })
+  }
 
   /** **Streaming transition finalizer** — the append-mode twin of the
     * batch [[graft.queries.Behavioral.eventTransitions]] lag-window:
@@ -905,53 +920,9 @@ object StreamingDownsample {
   def transitionsStream(events: Dataset[Event],
       evictAfterSeconds: Option[Long] = None): Dataset[TransitionOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (userId: Long, batch: Iterator[Event], state: GroupState[TransState]) => {
-          val prior = state.getOption
-          // (tsUs, event_id, type), event-time-ordered; after any pair has
-          // been emitted, index 0 is the anchor (predecessor of the next
-          // unemitted pair)
-          var seq: Vector[(Long, Long, String)] =
-            prior.map(s => s.tsUs.indices.map(i =>
-              (s.tsUs(i), s.ids(i), s.types(i))).toVector).getOrElse(Vector.empty)
-          val fresh = batch.toVector.map(e => (micros(e.ts), e.event_id, e.event_type))
-          if (fresh.nonEmpty)
-            seq = (seq ++ fresh).sortBy(t => (t._1, t._2))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // finalize every pair whose successor is behind the frontier
-          val out = scala.collection.mutable.ArrayBuffer.empty[TransitionOut]
-          var i = 0
-          while (i + 1 < seq.length && seq(i + 1)._1 < wmUs) {
-            out += TransitionOut(userId, seq(i)._3, seq(i + 1)._3,
-              tsOfMicros(seq(i + 1)._1))
-            i += 1
-          }
-          if (i > 0) seq = seq.drop(i)
-          if (seq.isEmpty) {
-            state.remove()
-          } else if (seq.length == 1 &&
-              evictAfterSeconds.exists(b => seq(0)._1 + b * 1000000L < wmUs)) {
-            // idle key past the bound: evict; its era is complete
-            state.remove()
-          } else {
-            state.update(TransState(seq.map(_._1), seq.map(_._2),
-              seq.map(_._3)))
-            // wake when the frontier passes the earliest pending successor
-            // (so its pair finalizes), else — bounded mode — at the idle
-            // deadline; clamped past the current watermark, which Spark
-            // rejects as already-fired.
-            val nextUs: Option[Long] =
-              if (seq.length >= 2) Some(seq(1)._1)
-              else evictAfterSeconds.map(b => seq(0)._1 + b * 1000000L)
-            nextUs.foreach { us =>
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(us, 1000L) + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-          }
-          out.iterator
-        })
+    frontierWindows[TransitionOut](events, 2, evictAfterSeconds) { (userId, win) =>
+      Some(TransitionOut(userId, win(0)._3, win(1)._3, tsOfMicros(win(1)._1)))
+    }
   }
 
   /** **Streaming distribution-drift monitor** — the stream half of the
@@ -1088,8 +1059,9 @@ object StreamingDownsample {
 
   /** **Streaming strict-sequence pattern matcher** — the exactly-once
     * twin of the batch [[graft.queries.Behavioral.patternMatch]]
-    * (MATCH_RECOGNIZE `PATTERN (A B C)` with contiguity and a span
-    * bound), completing the behavioral family's batch↔stream pairing.
+    * (MATCH_RECOGNIZE `PATTERN (A B C)` over view → click → purchase,
+    * with contiguity and a one-day span bound), completing the
+    * behavioral family's batch↔stream pairing.
     * [[transitionsStream]]'s frontier law generalized from pairs to
     * windows of three: a candidate triple ending at event e is
     * immutable once the watermark passes e.ts — any event that could
@@ -1100,58 +1072,17 @@ object StreamingDownsample {
     * finalization (spec pins both), and state keeps only the non-final
     * suffix plus TWO anchors (a pattern ending at the first pending
     * event reaches two events back). Span compares floor-second epochs,
-    * matching the batch query's `cast(ts as long)` arithmetic. */
-  def patternStream(events: Dataset[Event],
-      stages: Seq[String] = Seq("view", "click", "purchase"),
-      withinSeconds: Long = 86400L,
-      evictAfterSeconds: Option[Long] = None): Dataset[PatternOut] = {
-    require(stages.size == 3, s"patternStream matches a 3-stage pattern, got $stages")
+    * matching the batch query's `cast(ts as long)` arithmetic. Keys are
+    * never evicted. */
+  def patternStream(events: Dataset[Event]): Dataset[PatternOut] = {
     import events.sparkSession.implicits._
-    val Seq(s0, s1, s2) = stages
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (userId: Long, batch: Iterator[Event], state: GroupState[TransState]) => {
-          val prior = state.getOption
-          var seq: Vector[(Long, Long, String)] =
-            prior.map(s => s.tsUs.indices.map(i =>
-              (s.tsUs(i), s.ids(i), s.types(i))).toVector).getOrElse(Vector.empty)
-          val fresh = batch.toVector.map(e => (micros(e.ts), e.event_id, e.event_type))
-          if (fresh.nonEmpty)
-            seq = (seq ++ fresh).sortBy(t => (t._1, t._2))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val out = scala.collection.mutable.ArrayBuffer.empty[PatternOut]
-          // a triple ending at index j finalizes when the frontier passes
-          // its END event — contiguity below the frontier is immutable
-          var j = 2
-          while (j < seq.length && seq(j)._1 < wmUs) {
-            val (a, b, c) = (seq(j - 2), seq(j - 1), seq(j))
-            if (a._3 == s0 && b._3 == s1 && c._3 == s2 &&
-                Math.floorDiv(c._1, 1000000L) - Math.floorDiv(a._1, 1000000L)
-                  <= withinSeconds)
-              out += PatternOut(userId, c._2,
-                tsOfMicros(a._1), tsOfMicros(b._1), tsOfMicros(c._1))
-            j += 1
-          }
-          if (j > 2) seq = seq.drop(j - 2) // keep two anchors
-          if (seq.isEmpty) {
-            state.remove()
-          } else if (seq.length <= 2 &&
-              evictAfterSeconds.exists(b => seq.last._1 + b * 1000000L < wmUs)) {
-            state.remove()
-          } else {
-            state.update(TransState(seq.map(_._1), seq.map(_._2),
-              seq.map(_._3)))
-            // wake when the frontier passes the earliest pending END event
-            val nextUs: Option[Long] =
-              if (seq.length >= 3) Some(seq(2)._1)
-              else evictAfterSeconds.map(b => seq.last._1 + b * 1000000L)
-            nextUs.foreach { us =>
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(us, 1000L) + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-          }
-          out.iterator
-        })
+    frontierWindows[PatternOut](events, 3, None) { (userId, win) =>
+      val Seq(a, b, c) = win
+      if (win.map(_._3) == Seq("view", "click", "purchase") &&
+          Math.floorDiv(c._1, 1000000L) - Math.floorDiv(a._1, 1000000L) <= 86400L)
+        Some(PatternOut(userId, c._2,
+          tsOfMicros(a._1), tsOfMicros(b._1), tsOfMicros(c._1)))
+      else None
+    }
   }
 }

@@ -356,7 +356,7 @@ class StreamingSpec extends SparkTestBase {
       .select("event_id", "ts", "user_id", "event_type", "value")
       .as[Event].collect().toSeq
     val mem = MemoryStream[Event]
-    val q = StreamingDownsample.sessions(mem.toDF(), gap = "1 hour", watermark = "0 seconds")
+    val q = StreamingDownsample.sessions(mem.toDF(), watermark = "0 seconds")
       .writeStream.format("memory").queryName("sessions_out")
       .outputMode("append").start()
     val (a, b) = corpus.splitAt(corpus.size / 3)
@@ -546,7 +546,7 @@ class StreamingSpec extends SparkTestBase {
       .select("event_id", "ts", "user_id", "event_type", "value")
       .as[Event].collect().toSeq
     val mem = MemoryStream[Event]
-    val q = StreamingDownsample.purchaseClickJoin(mem.toDF(), lookback = "1 hour")
+    val q = StreamingDownsample.purchaseClickJoin(mem.toDF())
       .writeStream.format("memory").queryName("ssjoin_out")
       .outputMode("append").start()
     val (a, b) = corpus.splitAt(corpus.size / 2)
@@ -1375,7 +1375,7 @@ class StreamingSpec extends SparkTestBase {
       .as[Event].collect().toSeq
     val maxTs = corpus.map(_.ts.getTime).max
     val mem = MemoryStream[Event]
-    val q = StreamingDownsample.purchaseClickJoinOuter(mem.toDF(), lookback = "1 hour")
+    val q = StreamingDownsample.purchaseClickJoinOuter(mem.toDF())
       .writeStream.format("memory").queryName("ssjoin_outer_out")
       .outputMode("append").start()
     val (a, b) = corpus.splitAt(corpus.size / 2)
@@ -1385,16 +1385,36 @@ class StreamingSpec extends SparkTestBase {
     // legs (a far-future click and purchase for an unused user) push the
     // min-watermark past every real purchase's state expiry
     val far = maxTs + 40L * 24 * 3600 * 1000
-    mem.addData(Seq(
+    val sentinels = Seq(
       Event(Long.MaxValue - 1, new Timestamp(far), -1L, "click", 0.0),
-      Event(Long.MaxValue, new Timestamp(far), -1L, "purchase", 0.0)))
+      Event(Long.MaxValue, new Timestamp(far), -1L, "purchase", 0.0))
+    mem.addData(sentinels)
     q.processAllAvailable()
     mem.addData(Seq.empty[Event]); q.processAllAvailable()
     val got = spark.table("ssjoin_outer_out")
       .filter(col("user_id") =!= -1L)
       .select("purchase_id", "click_id")
       .as[(Long, Option[Long])].collect()
+    def joinRows(table: String) = spark.table(table)
+      .filter(col("click_id").isNotNull)
+      .select("purchase_id", "user_id", "p_ts", "click_id", "c_ts")
+      .as[(Long, Long, Timestamp, Long, Timestamp)].collect().toSeq
+      .sortBy(r => (r._1, r._4))
+    val outerMatched = joinRows("ssjoin_outer_out")
     q.stop()
+    // the inner join over the same stream emits exactly the outer rows
+    // that found a click: the two forms differ in join type only
+    val memInner = MemoryStream[Event]
+    val qi = StreamingDownsample.purchaseClickJoin(memInner.toDF())
+      .writeStream.format("memory").queryName("ssjoin_outer_inner_out")
+      .outputMode("append").start()
+    Seq(a, b, sentinels, Seq.empty[Event]).foreach { rows =>
+      memInner.addData(rows); qi.processAllAvailable()
+    }
+    val inner = joinRows("ssjoin_outer_inner_out")
+    qi.stop()
+    assert(inner.nonEmpty && outerMatched == inner,
+      s"outer matched rows=${outerMatched.length} inner rows=${inner.length}")
     val ev = Tables.events(spark, sf0001)
     val batch = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))

@@ -10,8 +10,11 @@ each seed the script runs perfbench/run.py once per side, alternating
 which side goes first (run length from BENCHMARK.json's run_seconds,
 untraced), and prints:
 
-  - each pair's end-to-end metrics, parent -> change;
+  - each pair's end-to-end metrics, parent -> change, and its failed and
+    attempted operations per side, flagged when the change's failed share
+    is larger than the parent's;
   - each side's median and quartiles per metric;
+  - each side's failed and attempted operations summed over all pairs;
   - per metric, the pairs the change won (ties count for neither side),
     whether the gain rule holds (won >= 9/10 of the pairs and the medians
     differ by more than the parent's quartile spread), and whether the
@@ -67,6 +70,10 @@ def value(res, name):
     return None if m is None else m["value"]
 
 
+def failed_share(res):
+    return res["failed"] / res["attempted"] if res["attempted"] else 0.0
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0]
@@ -99,7 +106,10 @@ def main():
             if value(pair["parent"], m["name"]) is not None
             and value(pair["change"], m["name"]) is not None)
         ok = all(pair[s]["correct"] for s in pair)
-        print(f"pair seed={seed} first={order[0]} correct={ok} {shown}", flush=True)
+        failed = "->".join(f"{pair[s]['failed']}/{pair[s]['attempted']}" for s in ("parent", "change"))
+        flag = " MORE-FAILED" if failed_share(pair["change"]) > failed_share(pair["parent"]) else ""
+        print(f"pair seed={seed} first={order[0]} correct={ok} failed={failed}{flag} {shown}",
+              flush=True)
 
     print(f"\n{len(pairs)} pairs, {a.workload}, --seconds {bench['run_seconds']}")
     print(f"{'metric':<40} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28}"
@@ -125,6 +135,10 @@ def main():
         print(f"{name:<40} {pm:>10.4g} [{p1:.4g}, {p3:.4g}]".ljust(69)
               + f" {cm:>10.4g} [{c1:.4g}, {c3:.4g}]".ljust(29)
               + f" {won:>2}/{len(got):<3} {'yes' if gain else 'no':>5} {within:>6}")
+    for side in ("parent", "change"):
+        f = sum(p[side]["failed"] for _, p in pairs)
+        n = sum(p[side]["attempted"] for _, p in pairs)
+        print(f"{side} failed/attempted: {f}/{n}")
     correct = all(p[s]["correct"] for _, p in pairs for s in p)
     print(f"every run correct: {correct}; every bounded metric within its bound: {all_within}")
 
