@@ -185,8 +185,9 @@ object Bench {
     // (queries + samples + errors) goes to a file, and the LAST printed
     // line is guaranteed to fit the tail — with the per-query map if it
     // fits, totals-only with a file pointer otherwise. Either way the
-    // tail parses.
-    val fullPath = "BENCH_FULL.json"
+    // tail parses. The file name carries the thread count, so runs at two
+    // widths (the 8- and 32-cpu scaling pair) keep both artifacts.
+    val fullPath = s"BENCH_FULL_c$nCpusInt.json"
     try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")
       try w.println(full) finally w.close()

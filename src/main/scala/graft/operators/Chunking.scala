@@ -125,15 +125,15 @@ object Chunking {
     * consumable training-shard artifact. Sequences are range-partitioned
     * and sorted by seq_id so each output file holds one contiguous
     * seq_id run (a dataloader can map file → global batch range), and
-    * `maxRecordsPerFile` bounds shard size regardless of executor
+    * a 2²⁰-record cap per file bounds shard size regardless of executor
     * partition sizing. */
   def writePackedShards(df: DataFrame, id: Column, text: Column,
-      seqLen: Int, path: String, maxRecordsPerFile: Long = 1L << 20): Unit =
+      seqLen: Int, path: String): Unit =
     packedSequences(df, id, text, seqLen)
       .repartitionByRange(col("seq_id"))
       .sortWithinPartitions(col("seq_id"))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", 1L << 20)
       .parquet(path)
 
   /** The replaced single-task formulation — ONE global running-sum window

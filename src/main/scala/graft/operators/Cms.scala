@@ -52,13 +52,12 @@ object Cms {
   /** Point estimates for the keys of `keys` (a small frame with a
     * `key`-named column): min over the key's d cells — the 1-row sketch
     * broadcasts, the scalar_subquery shape. */
-  def estimates(sketchRow: DataFrame, keys: DataFrame, keyCol: String,
-      d: Int = D, w: Int = W): DataFrame = {
-    val cells = (0 until d).map { j =>
+  def estimates(sketchRow: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
+    val cells = (0 until D).map { j =>
       // element_at is 1-based; positions are 0-based flat indexes
       element_at(col("cms"),
-        (lit(j.toLong * w) +
-          pmod(Kmv.hash60(col(keyCol), s"graftcms$j"), lit(w.toLong)) + 1L)
+        (lit(j.toLong * W) +
+          pmod(Kmv.hash60(col(keyCol), s"graftcms$j"), lit(W.toLong)) + 1L)
           .cast("int"))
     }
     keys.crossJoin(broadcast(sketchRow))

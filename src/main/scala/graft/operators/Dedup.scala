@@ -14,6 +14,17 @@ import graft.functions.VectorOps
   * and only candidates pay the exact-verification cost. */
 object Dedup {
 
+  /** The MinHash-LSH settings, declared once for the batch kernels, the
+    * signature index (checked by [[requireIndexParams]]), the two stream
+    * forms in `StreamingDownsample` and the `LlmOps` pair stage. */
+  private[graft] object MinHash {
+    val N = 3
+    val K = 64
+    val Bands = 16
+    val Threshold = 0.8
+    val Buckets = 8
+  }
+
   // ----------------------------------------------- persist/memo lifecycle
 
   /** The engine's one cross-query cache: entries keyed by session, a kind
@@ -122,7 +133,7 @@ object Dedup {
     * checkpointing: candidates explode from `sig`, verification joins
     * `hs`, nothing re-touches the corpus. */
   def docSignatures(df: DataFrame, id: Column, text: Column, n: Int,
-      k: Int = 64): DataFrame = {
+      k: Int = MinHash.K): DataFrame = {
     val mins = (0 until k).map(i => min(xxhash64(col("h"), lit(i))).as(s"h$i"))
     hashedShingleStream(df, id, text, n)
       .groupBy(col("doc_id"))
@@ -204,7 +215,7 @@ object Dedup {
   /** Input: hashed shingle set (doc_id, h). Each of the k min-wise
     * functions rehashes the 8-byte base hash with the function index —
     * cheap, deterministic, no string re-hashing inside the aggregate. */
-  def minhashSignatures(hashedShingles: DataFrame, k: Int = 64): DataFrame = {
+  def minhashSignatures(hashedShingles: DataFrame, k: Int = MinHash.K): DataFrame = {
     val mins = (0 until k).map { i =>
       min(xxhash64(col("h"), lit(i))).as(s"h$i")
     }
@@ -218,7 +229,8 @@ object Dedup {
     * each, hash each band, and emit candidate pairs of documents that
     * collide in at least one band. The pair join is an equi-join on
     * (band, bandHash) — shuffle-partitioned by band key, never all-pairs. */
-  def lshCandidatePairs(sig: DataFrame, k: Int = 64, bands: Int = 16): DataFrame = {
+  def lshCandidatePairs(sig: DataFrame, k: Int = MinHash.K,
+      bands: Int = MinHash.Bands): DataFrame = {
     val exploded = bandedSignatures(sig, k, bands)
     exploded.as("x")
       .join(exploded.as("y"),
@@ -543,14 +555,14 @@ object Dedup {
     * candidate join, verify) that round-2 benchmarks put at ~4-6× the
     * naive path when Σdf² is small. So: one cheap aggregate over the
     * (persisted, then reused) shingle set computes Σdf and Σdf² exactly,
-    * and the prefix path engages only when Σdf² > `prefixGate`·Σdf — i.e.
+    * and the prefix path engages only when Σdf² > 16·Σdf — i.e.
     * when the naive join would expand the shuffle by more than the
     * prefix machinery's pass constant. The planning aggregate is an eager
     * construction-time job by design: it chooses between plans whose
     * costs differ by orders of magnitude, and its scan warms the very
     * cache both paths read. */
   def ngramJaccardAuto(df: DataFrame, id: Column, text: Column, n: Int,
-      threshold: Double, prefixGate: Long = 16): DataFrame = {
+      threshold: Double): DataFrame = {
     val sh = memoPersist(hashedShingleSet(df, id, text, n))
     // memoized per (session, shingle-set plan): constructing the same
     // query twice measures once, and the measurement warms the shared
@@ -562,23 +574,24 @@ object Dedup {
         .head()
       if (row.isNullAt(0)) (0L, 0.0) else (row.getLong(0), row.getDouble(1))
     }
-    val heavy = sumdf2 > prefixGate.toDouble * tot.toDouble
+    val heavy = sumdf2 > 16.0 * tot.toDouble
     if (heavy) jaccardPrefixOn(sh, threshold) else jaccardAllPairsOn(sh, threshold)
   }
 
   /** MinHash+LSH near-dedup end to end: signatures → banded candidates →
-    * exact-Jaccard verification at `threshold`. With k=64, 16 bands × 4
+    * exact-Jaccard verification at `threshold`. With [[MinHash]]'s k=64, 16 bands × 4
     * rows, detection probability at j=0.8 is 1-(1-0.8⁴)¹⁶ ≈ 0.9998 and
     * ≈ 1 at j≥0.9, so for corpora whose near-dup pairs sit well above the
     * threshold the verified output equals the exact [[ngramJaccard]]
     * result — which is how the DuckDB oracle checks it. */
-  def minhashDedup(df: DataFrame, id: Column, text: Column, n: Int = 3,
-      k: Int = 64, bands: Int = 16, threshold: Double = 0.8): DataFrame = {
+  def minhashDedup(df: DataFrame, id: Column, text: Column,
+      threshold: Double = MinHash.Threshold): DataFrame = {
     // One shuffle builds the per-doc stage (signature + sorted hash set);
     // banding and verification both read the persisted docs-sized frame —
     // at cluster scale this is the stage you would checkpoint to object
     // storage. (Released by session cache teardown or caller unpersist.)
-    verifiedPairs(memoPersist(docSignatures(df, id, text, n, k)), k, bands, threshold)
+    verifiedPairs(memoPersist(docSignatures(df, id, text, MinHash.N)), MinHash.K,
+      MinHash.Bands, threshold)
   }
 
   /** Verified near-dup pairs within one [[docSignatures]] frame: LSH
@@ -603,10 +616,10 @@ object Dedup {
     * the verification join against candidate ids exchange-free on the
     * index side even when the candidate set outgrows broadcast. */
   def writeSignatureIndex(df: DataFrame, id: Column, text: Column,
-      table: String, n: Int = 3, k: Int = 64, buckets: Int = 8): Unit =
+      table: String): Unit =
     Joins.writeBucketed(
-      docSignatures(df, id, text, n, k).withColumn("shingle_n", lit(n)),
-      table, "doc_id", buckets)
+      docSignatures(df, id, text, MinHash.N).withColumn("shingle_n", lit(MinHash.N)),
+      table, "doc_id", MinHash.Buckets)
 
   /** Stored (k, n) of an index table, from ONE bounded 1-row probe —
     * what every reader/appender must match. None when the table does not
@@ -657,7 +670,7 @@ object Dedup {
     * existing index validate (k, n) BEFORE writing — Parquet would
     * happily interleave incompatible signature rows otherwise. */
   def appendToSignatureIndex(df: DataFrame, id: Column, text: Column,
-      table: String, n: Int = 3, k: Int = 64, buckets: Int = 8): Unit = {
+      table: String, n: Int = MinHash.N, k: Int = MinHash.K): Unit = {
     val spark = df.sparkSession
     val exists = spark.catalog.tableExists(table)
     if (!exists) {
@@ -681,7 +694,7 @@ object Dedup {
     sigs.write
       .mode(org.apache.spark.sql.SaveMode.Append)
       .option("compression", "zstd")
-      .bucketBy(buckets, "doc_id")
+      .bucketBy(MinHash.Buckets, "doc_id")
       .sortBy("doc_id")
       .saveAsTable(table)
   }
@@ -707,8 +720,8 @@ object Dedup {
     *    alone. */
   def incrementalDedup(spark: org.apache.spark.sql.SparkSession,
       indexTable: String, delta: DataFrame, id: Column, text: Column,
-      n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
+      k: Int = MinHash.K): DataFrame = {
+    import MinHash.{Bands => bands, N => n, Threshold => threshold}
     requireIndexParams(spark, indexTable, "incrementalDedup", k, n)
     val deltaSig = memoPersist(docSignatures(delta, id, text, n, k))
     verifiedPairs(deltaSig, k, bands, threshold)
@@ -776,7 +789,8 @@ object Dedup {
     * (hash-partitioned by node); `localCheckpoint` cuts the lineage so
     * plans don't grow with iterations. Deterministic (min label), so the
     * DuckDB oracle checks it with a recursive CTE. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val maxIter = 20
     val edges = pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
@@ -818,8 +832,8 @@ object Dedup {
     * [[ngramJaccardAuto]]: the gate probe is a bounded `head`, not a full
     * count, and output (min-id representative per doc) is identical on
     * both paths. */
-  def connectedComponentsAuto(pairs: DataFrame, driverGate: Int = 1 << 20,
-      maxIter: Int = 20): DataFrame = {
+  def connectedComponentsAuto(pairs: DataFrame,
+      driverGate: Int = 1 << 20): DataFrame = {
     // the driver union-find walks getLong over the ids, so it is only
     // safe for integral id types: a string id would cast to NULL and NPE
     // on the driver. Non-integral ids take the distributed path, which is
@@ -831,19 +845,19 @@ object Dedup {
         case _ => false
       }
     }
-    if (!integralIds) return connectedComponents(pairs, maxIter)
+    if (!integralIds) return connectedComponents(pairs)
     // memoized per (session, pairs plan): the probe (and, on the driver
     // path, the whole union-find labeling) runs once per session even
     // when composed pipelines construct the clustering repeatedly
-    memoGate(pairs)(connectedComponentsAutoImpl(pairs, driverGate, maxIter))
+    memoGate(pairs)(connectedComponentsAutoImpl(pairs, driverGate))
   }
 
-  private def connectedComponentsAutoImpl(pairs: DataFrame, driverGate: Int,
-      maxIter: Int): DataFrame = {
+  private def connectedComponentsAutoImpl(pairs: DataFrame,
+      driverGate: Int): DataFrame = {
     val probe = pairs
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .head(driverGate + 1)
-    if (probe.length > driverGate) connectedComponents(pairs, maxIter)
+    if (probe.length > driverGate) connectedComponents(pairs)
     else {
       // union-find, min root wins → identical min-label output
       val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -1131,7 +1145,7 @@ object Dedup {
     if (threshold >= LshGate) embeddingNearDupLsh(df, id, vec, threshold)
     else embeddingNearDupBlocked(df, id, vec, threshold)
 
-  /** Gate where banded-LSH recall with the default (b=8, L=16) banding is
+  /** Gate where banded-LSH recall with [[embeddingNearDupLsh]]'s (b=8, L=16) banding is
     * ≥ 0.995: p = 1 − arccos(0.9)/π = 0.856, 1 − (1 − p⁸)¹⁶ = 0.996.
     * At cos 0.7 the same banding is only ~0.80 — below the gate, exact
     * pairs are the contract, so the blocked join runs instead. */
@@ -1208,26 +1222,22 @@ object Dedup {
   }
 
   /** Near-dup pairs via **banded random-hyperplane LSH** — the high-
-    * threshold scale path. `tables` independent signatures of
-    * `planesPerTable` sign bits each; vectors equi-join on
-    * (table, signature) — hash-partitionable, never all-pairs — and only
-    * colliding pairs pay the exact cosine verification, so output is
-    * exact-precision with recall 1 − (1 − p^b)^L for per-plane agreement
-    * p = 1 − θ/π. Defaults (b=8, L=16) give ≥ 0.996 at cos 0.9 and
-    * ≈ 1 − 3·10⁻¹⁶ at cos 0.999 — property-tested against the exact
-    * blocked join on planted near-dups. */
+    * threshold scale path. L=16 independent signatures of b=8 sign bits
+    * each; vectors equi-join on (table, signature) — hash-partitionable,
+    * never all-pairs — and only colliding pairs pay the exact cosine
+    * verification, so output is exact-precision with recall
+    * 1 − (1 − p^b)^L for per-plane agreement p = 1 − θ/π: ≥ 0.996 at
+    * cos 0.9 and ≈ 1 − 3·10⁻¹⁶ at cos 0.999 — property-tested against
+    * the exact blocked join on planted near-dups. */
   def embeddingNearDupLsh(df: DataFrame, id: Column, vec: Column,
-      threshold: Double, dim: Int = -1, planesPerTable: Int = 8,
-      tables: Int = 16): DataFrame = {
-    // dim ≤ 0 means "derive from the data": hyperplanes must match the
-    // vector width, and a silently mis-sized default would zero-pad or
-    // truncate every projection. One 1-row limit job at construction.
-    val planeDim =
-      if (dim > 0) dim
-      else df.select(size(vec)).limit(1).collect()
-        .headOption.map(_.getInt(0))
-        .getOrElse(throw new IllegalArgumentException(
-          "embeddingNearDupLsh: empty input and no explicit dim"))
+      threshold: Double): DataFrame = {
+    val (planesPerTable, tables) = (8, 16)
+    // planes take the vector width from the data (a mis-sized plane would
+    // zero-pad or truncate every projection): one 1-row job at construction
+    val planeDim = df.select(size(vec)).limit(1).collect()
+      .headOption.map(_.getInt(0))
+      .getOrElse(throw new IllegalArgumentException(
+        "embeddingNearDupLsh: empty input"))
     require(planeDim > 0, s"embeddingNearDupLsh: bad vector dim $planeDim")
     val rng = new scala.util.Random(4242L)
     val e = df.select(id.as("vid"), vec.as("v"))
@@ -1257,6 +1267,9 @@ object Dedup {
   }
 
   // ------------------------------------------------------- semantic dedup
+
+  /** md5 salt of [[semanticDedup]]'s seed draw (both formulations). */
+  private val SeedSalt = "graft-seed"
 
   /** **Semantic dedup** (the SemDedup shape — Abbas et al. 2023): cluster
     * the embedding space into cells, then within each cell drop every
@@ -1293,15 +1306,14 @@ object Dedup {
     * quadratic work spreads over B(B+1)/2 reducers instead of one. At
     * corpus scale, grow nCells ∝ n so cells stay ~constant-sized. */
   def semanticDedup(df: DataFrame, id: Column, vec: Column,
-      threshold: Double, nCells: Int = 8,
-      seedSalt: String = "graft-seed", blocks: Int = 8): DataFrame = {
+      threshold: Double, nCells: Int = 8): DataFrame = {
     val e = df.select(id.as("vec_id"), vec.as("v"))
       .withColumn("nrm", VectorOps.norm(col("v")))
     // one bounded TakeOrdered plan: the nCells rows with smallest
     // md5(salt||id) — a deterministic uniform draw both engines can rank.
     // Stays lazy: no collect, no driver round-trip.
     val seeds = e
-      .orderBy(md5(concat(lit(seedSalt), col("vec_id").cast("string"))),
+      .orderBy(md5(concat(lit(SeedSalt), col("vec_id").cast("string"))),
         col("vec_id"))
       .limit(nCells)
       .select(col("vec_id").as("sid"), col("v").as("sv"), col("nrm").as("snrm"))
@@ -1328,7 +1340,7 @@ object Dedup {
     val cells = memoPersist(e.join(assign, Seq("vec_id")))
     val dups = blockedCosinePairs(
         cells.select(col("vec_id").as("vid"), col("v"), col("nrm"), col("cell")),
-        keys = Seq("cell"), threshold = threshold, blocks = blocks)
+        keys = Seq("cell"), threshold = threshold, blocks = 8)
       .select(col("id_b").as("vec_id")).distinct()
       .withColumn("__dup", lit(true))
     cells.select(col("vec_id"), col("cell"))
@@ -1346,12 +1358,11 @@ object Dedup {
     * is exactly why the production path above joins a broadcast seeds
     * DataFrame instead. */
   private[graft] def semanticDedupLiteral(df: DataFrame, id: Column,
-      vec: Column, threshold: Double, nCells: Int = 8,
-      seedSalt: String = "graft-seed"): DataFrame = {
+      vec: Column, threshold: Double, nCells: Int = 8): DataFrame = {
     val e = df.select(id.as("vec_id"), vec.as("v"))
       .withColumn("nrm", VectorOps.norm(col("v")))
     val seeds = e
-      .orderBy(md5(concat(lit(seedSalt), col("vec_id").cast("string"))),
+      .orderBy(md5(concat(lit(SeedSalt), col("vec_id").cast("string"))),
         col("vec_id"))
       .limit(nCells)
       .select(col("vec_id"), col("v")).collect()

@@ -93,8 +93,8 @@ object Dsir {
   /** The paper's ACTUAL importance weight, for callers that want it:
     * log w(x) = Σ_f c_f(x) · (ln p̂_t[f] − ln p̂_r[f]) with add-one
     * smoothed ML estimates p̂[f] = (c[f]+1)/(N+V) over the corpus's own
-    * feature space (V = distinct features, so unseen-in-target features
-    * still get mass). Same plan as [[importanceScores]] — one dual-count
+    * unhashed unigram features (V = distinct features, so unseen-in-target
+    * features still get mass). Same plan as [[importanceScores]] — one dual-count
     * vocabulary aggregate, broadcast join-back, per-doc sum — plus a
     * 1-row broadcast of the two normalizer constants. This column is the
     * one place the engine computes `ln`, which is exactly why it is NOT
@@ -105,17 +105,11 @@ object Dsir {
     * induces is what [[selectTopK]] consumes; the surrogate
     * [[importanceScores]] ranking stays the hash-checked twin. */
   def logWeights(docs: DataFrame, id: Column, text: Column,
-      isTarget: Column, hashBuckets: Option[Int] = None,
-      bigrams: Boolean = false): DataFrame = {
-    hashBuckets.foreach(b =>
-      require(b > 0, s"hashBuckets must be positive (got $b)"))
+      isTarget: Column): DataFrame = {
     val toks = docs
       .select(id.as("doc_id"), isTarget.as("is_t"),
-        explode(featureArray(text, bigrams)).as("tok"))
-      .withColumn("feat", hashBuckets match {
-        case Some(b) => pmod(xxhash64(col("tok")), lit(b.toLong))
-        case None => col("tok")
-      })
+        explode(featureArray(text, bigrams = false)).as("tok"))
+      .withColumn("feat", col("tok"))
     val freq = toks.groupBy(col("feat")).agg(
       count(lit(1)).as("c_raw"),
       count(when(col("is_t"), 1)).as("c_tgt"))

@@ -70,10 +70,10 @@ object EmbeddingPca {
 
   /** Power iteration with Gram–Schmidt deflation over a symmetric
     * matrix. Deterministic by construction: fixed ramped init, fixed
-    * iteration count, no randomness — two calls return bit-identical
-    * vectors. */
-  private[graft] def topEigenvectors(c: Array[Array[Double]], k: Int,
-      iters: Int = 300): Array[Array[Double]] = {
+    * iteration count (300), no randomness — two calls return
+    * bit-identical vectors. */
+  private[graft] def topEigenvectors(c: Array[Array[Double]],
+      k: Int): Array[Array[Double]] = {
     val d = c.length
     val ws = Array.ofDim[Double](k, d)
     def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -83,7 +83,7 @@ object EmbeddingPca {
     for (m <- 0 until k) {
       var v = Array.tabulate(d)(i =>
         if (i == m % d) 1.0 else 1e-4 * ((i % 7) + 1))
-      for (_ <- 0 until iters) {
+      for (_ <- 0 until 300) {
         val u = Array.tabulate(d)(i => dot(c(i), v))
         for (p <- 0 until m) {
           val pr = dot(u, ws(p))

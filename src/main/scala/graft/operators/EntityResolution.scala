@@ -89,8 +89,8 @@ object EntityResolution {
   def fuzzyPairs2(df: DataFrame, id: Column, name: Column): DataFrame =
     fuzzyPairsImpl(df, id, name, deletionVariants2, 2)
 
-  /** Per-record k-nearest under Levenshtein ≤ `maxDist` — the
-    * bounded-output form of [[fuzzyPairs]]/[[fuzzyPairs2]] for dense
+  /** Per-record k-nearest under Levenshtein ≤ 2 — the
+    * bounded-output form of [[fuzzyPairs2]] for dense
     * dimensions. The unconditional pair set is a DENSE shape: on a
     * near-duplicate-saturated dimension every record can verify against
     * hundreds of neighbors (the sf1.0 customer table averages ~270),
@@ -107,16 +107,14 @@ object EntityResolution {
     * per-row form. Ranking is total (dist, then id_b), so the kept set
     * is deterministic and the quadratic ROW_NUMBER oracle hash-matches.
     * Output: (id_a, rn, id_b, dist, n_matches), rn = 1..k ascending. */
-  def fuzzyTopK(df: DataFrame, id: Column, name: Column, k: Int,
-      maxDist: Int = 2): DataFrame = {
+  def fuzzyTopK(df: DataFrame, id: Column, name: Column, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // memoPersist: the union below reads the pair frame twice, and
     // without pinning it the whole candidate+verify pipeline would run
     // once per orientation (measured 14.3 s vs fuzzy_match_k2's 6.3 s
     // at sf0.1 before the pin)
     val pairs = Dedup.memoPersist(
-      (if (maxDist <= 1) fuzzyPairs(df, id, name) else fuzzyPairs2(df, id, name))
-        .select(col("id_a"), col("id_b"), col("dist")))
+      fuzzyPairs2(df, id, name).select(col("id_a"), col("id_b"), col("dist")))
     // neighbor lists are directional — each verified pair feeds both
     // endpoints' lists; the union doubles a linear stage, not the output
     val sym = pairs.select(col("id_a"), col("id_b"), col("dist"))

@@ -111,7 +111,8 @@ object Frequent {
     * `approx_count_distinct` pre-pass (HLL — no distinct Expand, one
     * 1-row aggregate memoized by [[Dedup.memoGate]]) estimates the key
     * cardinality, and the summary size becomes
-    * ⌈denom·est·margin/numer⌉ + 1, clamped to `kCap`. Correctness NEVER
+    * ⌈denom·est·margin/numer⌉ + 1, at least 4096 and at most `kCap`.
+    * Correctness NEVER
     * rests on the estimate: the exact `assert_true` guard inside
     * [[heavyKeys]] still certifies the precondition against the true
     * distinct count, so an HLL under-estimate past the margin fails loud
@@ -127,8 +128,7 @@ object Frequent {
       key: Column,
       numer: Int = 3,
       denom: Int = 2,
-      kFloor: Int = 4096,
-      kCap: Int = 1 << 20): DataFrame = {
+      kCap: Int = KCap): DataFrame = {
     require(numer > 0 && denom > 0, s"threshold must be positive: $numer/$denom")
     val est = Dedup.memoGate(df.agg(approx_count_distinct(key).as("est"))) {
       df.agg(approx_count_distinct(key).as("est")).head().getLong(0)
@@ -140,13 +140,17 @@ object Frequent {
       s"heavyKeysAuto: ~$est distinct keys need a $need-entry summary, over the " +
         s"$kCap cap — no mean-relative heavy hitters worth that memory; use " +
         "heavyKeysFraction or raise kCap")
-    val k = math.max(need, kFloor.toLong).toInt
-    if (k > kFloor) {
+    val k = math.max(need, KFloor.toLong).toInt
+    if (k > KFloor) {
       System.err.println(
         s"[graft] heavyKeysAuto: sized summary to $k entries for ~$est distinct keys")
     }
     heavyKeys(df, key, k, numer, denom)
   }
+
+  /** Smallest and largest (~50 MB) summary the auto-sized forms build. */
+  private val KFloor = 4096
+  private val KCap = 1 << 20
 
   /** [[heavyKeysPerGroup]] auto-sized like [[heavyKeysAuto]]: the
     * pre-pass estimates the per-group key cardinality and the summary is
@@ -160,20 +164,18 @@ object Frequent {
       group: Column,
       key: Column,
       numer: Int = 3,
-      denom: Int = 2,
-      kFloor: Int = 4096,
-      kCap: Int = 1 << 20): DataFrame = {
+      denom: Int = 2): DataFrame = {
     require(numer > 0 && denom > 0, s"threshold must be positive: $numer/$denom")
     val pre = df.groupBy(group.as("grp")).agg(approx_count_distinct(key).as("est"))
     val est = Dedup.memoGate(pre) {
       pre.select(max(col("est"))).head().getLong(0)
     }
     val need = math.ceil(denom.toDouble * est * 1.2 / numer).toLong + 1
-    require(need <= kCap,
+    require(need <= KCap,
       s"heavyKeysPerGroupAuto: largest group has ~$est distinct keys, needing a " +
-        s"$need-entry summary over the $kCap cap")
-    val k = math.max(need, kFloor.toLong).toInt
-    if (k > kFloor) {
+        s"$need-entry summary over the $KCap cap")
+    val k = math.max(need, KFloor.toLong).toInt
+    if (k > KFloor) {
       System.err.println(
         s"[graft] heavyKeysPerGroupAuto: sized summary to $k entries for ~$est keys in the largest group")
     }

@@ -22,13 +22,14 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** Weighted PageRank over `edges` (src, dst, weight), `iters` rounds
-    * at damping `d`. Returns (node, rank); nodes = every src or dst.
+    * at damping 0.85. Returns (node, rank); nodes = every src or dst.
     * Float determinism: per-run deterministic plans, but rank VALUES are
     * float sums over shuffled partitions — registered queries emit
     * ranks' ORDER, not the doubles (SURVEY §7 rule 5), or go rows-only. */
   def pageRank(edges: DataFrame, src: Column, dst: Column, weight: Column,
-      iters: Int = 10, d: Double = 0.85): DataFrame = {
+      iters: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
+    val d = 0.85
     val spark = edges.sparkSession
     val e0 = edges.select(src.as("src"), dst.as("dst"),
       weight.cast("double").as("w"))
@@ -105,7 +106,8 @@ object Graph {
   /** **Fixed-point PageRank**: the same per-round shape as [[pageRank]]
     * — ranks ⋈ edges on the source key, groupBy destination, dangling
     * mass as a 1-row broadcast — but every quantity is an INTEGER
-    * multiple of 1/`scale`, and every division is integer division. That
+    * multiple of 1/scale (scale = 10¹²), and every division is integer
+    * division. That
     * buys two things float ranks cannot have:
     *
     *  - a full DuckDB hash oracle: integer `+`/`*`/`div` are exact and
@@ -122,17 +124,16 @@ object Graph {
     * Per round, node i receives Σ_in (rank_src · w) div wout — each
     * edge's term truncated independently, so the sum is order-free —
     * then rank' = (1000−dNum)·scale div (1000·n) + dNum·(in + dang div n)
-    * div 1000. Truncation loses ≤ 1/scale per edge per round: at
-    * scale = 10¹² the registered 25-node ranks are exact to ~10⁻¹⁰,
+    * div 1000, with damping dNum/1000 = 0.85. Truncation loses ≤ 1/scale
+    * per edge per round: the registered 25-node ranks are exact to ~10⁻¹⁰,
     * while rank·w stays < 2⁶³ for edge weights up to ~9·10⁶ (require'd).
     * Weights must be positive integers (counts, cents — quantize
     * upstream); the early-stop probe is one bounded `limit(1)` job per
     * round over the node-sized frame. */
   def pageRankFixedPoint(edges: DataFrame, src: Column, dst: Column,
-      weight: Column, iters: Int = 20, dNum: Int = 850,
-      scale: Long = 1000000000000L, earlyStop: Boolean = true): DataFrame = {
+      weight: Column, iters: Int = 20, earlyStop: Boolean = true): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(dNum > 0 && dNum < 1000, s"dNum must be in (0, 1000) (got $dNum)")
+    val (dNum, scale) = (850, 1000000000000L)
     val e0 = Dedup.memoPersist(
       edges.select(src.as("src"), dst.as("dst"), weight.cast("long").as("w")))
     // positive-weight guard (the float operator routes wout<=0 through
@@ -140,8 +141,7 @@ object Graph {
     // skipped quantization — fail loudly): one bounded 1-row probe.
     // rank can reach ~scale (all mass on one node), so rank*w must stay
     // under Long.MaxValue — the admissible weight ceiling is
-    // Long.MaxValue/scale (~9.2e6 at the default scale), tracked from
-    // the scale parameter rather than hard-coded.
+    // Long.MaxValue/scale (~9.2e6).
     val wMax = Long.MaxValue / scale
     val bad = e0.filter(col("w").isNull || col("w") <= 0 ||
       col("w") > wMax).limit(1).collect()
@@ -340,13 +340,13 @@ object Graph {
     * round ONE equi-join of the CURRENT FRONTIER (not the visited set)
     * against the edge list + an anti join against visited — work per
     * round ∝ frontier out-degree mass, rounds = eccentricity of the
-    * seed set, `localCheckpoint` per round keeps the plan linear
+    * seed set (at most 20), `localCheckpoint` per round keeps the plan linear
     * (the [[pageRankFixedPoint]] discipline). Hop counts are exact
     * integers under a deterministic expansion, so the recursive-CTE
     * oracle hash-matches. */
   def bfsHops(edges: DataFrame, a: Column, b: Column,
-      seeds: DataFrame, seedCol: Column, maxHops: Int = 20): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0 (got $maxHops)")
+      seeds: DataFrame, seedCol: Column): DataFrame = {
+    val maxHops = 20
     // undirected: keep both directions for the frontier join; filter
     // AFTER the union so dirty edges (null endpoint / self-loop) are
     // dropped from BOTH orientations, not just the forward one

@@ -58,13 +58,13 @@ object Joins {
 
   /** [[saltedJoin]] with the salt width MEASURED, not guessed: a
     * Misra–Gries probe over the big side's key column finds the hot
-    * keys cheaply (≤ `kProbe` rows/task shuffle — never a full per-key
+    * keys cheaply (≤ 4096 rows/task shuffle — never a full per-key
     * count), an exact recount of just those candidates gives the true
     * max-per-key, and the salt becomes the smallest s with
-    * max/s ≤ 8 × mean (clamped to `maxSalt`). No key above the mean
+    * max/s ≤ 8 × mean (clamped to 64). No key above the mean
     * can hide from the probe: MG guarantees every key with share
-    * > n/(kProbe+1) of rows surfaces, and a key below 1/(kProbe+1)
-    * (0.02% at the default 4096) cannot melt a task at any realistic
+    * > n/4097 of rows surfaces, and a key below 1/4097
+    * (0.02%) cannot melt a task at any realistic
     * partition count. When the measured skew needs no salting (s = 1)
     * the plain join is returned untouched — the probe is the only cost.
     * Decision is logged; measurement is [[Dedup.memoGate]]-memoized per
@@ -76,9 +76,8 @@ object Joins {
     * engine. */
   def saltedJoinAuto(
       big: DataFrame, small: DataFrame,
-      bigKey: Column, smallKey: Column,
-      joinType: String = "inner",
-      kProbe: Int = 4096, maxSalt: Int = 64): DataFrame = {
+      bigKey: Column, smallKey: Column): DataFrame = {
+    val (kProbe, maxSalt) = (4096, 64)
     val pre = big.select(bigKey.as("__k"))
     val probe = pre.agg(
       graft.functions.FrequentItems(col("__k"), kProbe).as("cands"),
@@ -100,12 +99,8 @@ object Joins {
     }
     if (salt > 1) {
       System.err.println(s"[graft] saltedJoinAuto: measured hot-key skew, salting $salt ways")
-      saltedJoin(big, small, bigKey, smallKey, salt, joinType)
-    } else {
-      require(saltableJoinTypes.contains(joinType.toLowerCase.replace(" ", "")),
-        s"saltedJoinAuto supports (${saltableJoinTypes.mkString(", ")}); got '$joinType'")
-      big.join(small, bigKey === smallKey, joinType)
-    }
+      saltedJoin(big, small, bigKey, smallKey, salt)
+    } else big.join(small, bigKey === smallKey)
   }
 
   /** Write both sides bucketed+sorted by the join key. Subsequent joins
@@ -148,8 +143,8 @@ object Joins {
 
   /** Join two bucketed tables on their bucket key. */
   def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      key: String, joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key), joinType)
+      key: String): DataFrame =
+    spark.table(leftTable).join(spark.table(rightTable), Seq(key))
 
   /** Pure **band join** — all (left, right) pairs whose timestamps lie
     * within `epsMicros` of each other, with NO equi key to ride on (the

@@ -58,15 +58,14 @@ object Kmv {
     * is the adjudication twin, not the product: at 100 TB drop it and
     * the sketch folds map-side straight to ≤ k values per group per
     * task, one group-keyed shuffle total. */
-  def sketch(df: DataFrame, group: Column, key: Column, k: Int,
-      salt: String = "graftkmv"): DataFrame = {
+  def sketch(df: DataFrame, group: Column, key: Column, k: Int): DataFrame = {
     require(k > 1, s"KMV needs k > 1 (got $k)")
     // NULL keys hash to NULL and are EXCLUDED on both sides of the
     // contract (the aggregate skips them; the filter keeps n_exact
     // consistent with the oracle's null-free hash set — without it the
     // engine's countDistinct and an oracle COUNT(*) over a
     // DISTINCT-kept (g, NULL) row would differ by one)
-    df.select(group.as("g"), hash60(key, salt).as("h"))
+    df.select(group.as("g"), hash60(key).as("h"))
       .filter(col("h").isNotNull)
       .groupBy(col("g"))
       .agg(

@@ -25,8 +25,8 @@ object Retrieval {
     *  - a DENSE ranking — exact cosine over the paired embeddings
     *    ([[Similarity.bruteForceTopK]]; float, rank-only — the proven
     *    gate shape),
-    * each cut to its top-`poolK`, then RRF-fused:
-    * `rrf = Σ_present 10⁹ div (κ + rank)`, top-`k` by (rrf desc, id).
+    * each cut to its top-20, then RRF-fused:
+    * `rrf = Σ_present 10⁹ div (60 + rank)`, top-10 by (rrf desc, id).
     *
     * Scale shape: the sparse side is classic impact-ordered retrieval —
     * distinct-token postings join the (tiny, broadcast) query token
@@ -37,8 +37,8 @@ object Retrieval {
     * when the query batch outgrows broadcast). The fusion join is
     * queries×poolK rows per side — negligible at any SF. */
   def hybridRrf(docs: DataFrame, embeddings: DataFrame,
-      isQuery: Column => Column, k: Int = 10, poolK: Int = 20,
-      kappa: Int = 60): DataFrame = {
+      isQuery: Column => Column): DataFrame = {
+    val (k, poolK, kappa) = (10, 20, 60)
     val toks = docs
       .select(col("doc_id"),
         explode(array_distinct(TextOps.tokens(col("text")))).as("term"))

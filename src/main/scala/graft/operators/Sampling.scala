@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions._
   * check exact membership, not just counts. */
 object Sampling {
 
+  /** The md5 salt of the samplers below, where a caller names no other. */
+  private val Salt = "graft"
+
   /** The 32-hex-digit threshold for a fraction: ⌊frac · 16³²⌋, zero-padded
     * — md5 hex below it ⇔ the key falls in the sample. fraction = 1.0
     * returns "g", which every 32-char hex string sorts strictly below
@@ -40,7 +43,7 @@ object Sampling {
 
   /** Deterministic Bernoulli(fraction) membership for a key column. */
   def hashSample(df: DataFrame, key: Column, fraction: Double,
-      salt: String = "graft"): DataFrame =
+      salt: String = Salt): DataFrame =
     df.filter(md5(concat(lit(salt), key.cast("string"))) < lit(thresholdHex(fraction)))
 
   /** Deterministic disjoint split (train/val/test): the md5 keyspace is
@@ -48,14 +51,13 @@ object Sampling {
     * to exactly one split, assignments never migrate between splits when
     * run again (or on another engine), and growing one split's fraction
     * only moves keys across the adjacent boundary. Fractions must sum to
-    * ≤ 1; the remainder maps to `otherwise`. */
-  def splitColumn(key: Column, splits: Seq[(String, Double)],
-      salt: String = "graft", otherwise: String = "rest"): Column = {
+    * ≤ 1; the remainder maps to "rest". */
+  def splitColumn(key: Column, splits: Seq[(String, Double)]): Column = {
     require(splits.nonEmpty && splits.map(_._2).sum <= 1.0 + 1e-9,
       "split fractions must be non-empty and sum to <= 1")
-    val h = md5(concat(lit(salt), key.cast("string")))
+    val h = md5(concat(lit(Salt), key.cast("string")))
     splits.map(_._1).zip(splitThresholds(splits.map(_._2))).reverse
-      .foldLeft(lit(otherwise)) { case (acc, (name, hex)) =>
+      .foldLeft(lit("rest")) { case (acc, (name, hex)) =>
         when(h < lit(hex), lit(name)).otherwise(acc)
       }
   }
@@ -68,14 +70,13 @@ object Sampling {
     fractions.scanLeft(0.0)(_ + _).tail.map(c => thresholdHex(math.min(c, 1.0)))
 
   /** Per-stratum fractions (e.g. language-balanced training mixes):
-    * strata absent from the map get `defaultFraction`. */
+    * strata absent from the map are not sampled. */
   def stratifiedSample(df: DataFrame, key: Column, strata: Column,
-      fractions: Map[String, Double], defaultFraction: Double = 0.0,
-      salt: String = "graft"): DataFrame = {
-    val threshold = fractions.foldLeft(lit(thresholdHex(defaultFraction))) {
+      fractions: Map[String, Double]): DataFrame = {
+    val threshold = fractions.foldLeft(lit(thresholdHex(0.0))) {
       case (acc, (s, f)) => when(strata === s, lit(thresholdHex(f))).otherwise(acc)
     }
-    df.filter(md5(concat(lit(salt), key.cast("string"))) < threshold)
+    df.filter(md5(concat(lit(Salt), key.cast("string"))) < threshold)
   }
 
   /** **Exact-n stratified sample**: the n lexicographically-smallest
@@ -92,10 +93,10 @@ object Sampling {
     * through one task (the `row_number()` window formulation would: one
     * sort task per stratum, unusable when a stratum is half the corpus).
     * Emits (stratum, key, rn) with rn ∈ [1, n] in hash order. */
-  def exactNPerStratum(df: DataFrame, key: Column, strata: Column, n: Int,
-      salt: String = "graft"): DataFrame = {
+  def exactNPerStratum(df: DataFrame, key: Column, strata: Column,
+      n: Int): DataFrame = {
     require(n > 0, s"per-stratum sample size must be positive (got $n)")
-    val h = md5(concat(lit(salt), key.cast("string")))
+    val h = md5(concat(lit(Salt), key.cast("string")))
     df.select(strata.as("stratum"), key.as("key"), h.as("h"))
       .groupBy(col("stratum"))
       .agg(graft.functions.BoundedTopK(
@@ -128,7 +129,7 @@ object Sampling {
     * sampling is without replacement; epoch-level repetition of small
     * strata is the dataloader's knob, not the selector's. */
   def temperatureMix(df: DataFrame, key: Column, strata: Column,
-      totalDocs: Long, salt: String = "graft"): DataFrame = {
+      totalDocs: Long): DataFrame = {
     require(totalDocs > 0 && totalDocs <= Int.MaxValue,
       s"totalDocs must be in [1, 2^31) (got $totalDocs)")
     // stratum keys fold as STRINGS (sorted-name order is the oracle's
@@ -145,7 +146,7 @@ object Sampling {
     val maxQ = math.max(quotas.map(_._2).max, 1L).toInt
     val qDf = df.sparkSession.createDataFrame(quotas.toSeq)
       .toDF("stratum", "quota")
-    exactNPerStratum(df, key, strata.cast("string"), maxQ, salt)
+    exactNPerStratum(df, key, strata.cast("string"), maxQ)
       .join(broadcast(qDf), "stratum")
       .filter(col("rn") <= col("quota"))
       .select(col("stratum"), col("key"), col("rn"))
@@ -228,13 +229,13 @@ object Sampling {
     * upper quantile: sample value at rank ⌈q·n_s⌉ — integer index
     * arithmetic, value a pass-through double (determinism rules 2/4). */
   def sampleQuantiles(df: DataFrame, group: Column, key: Column,
-      value: Column, k: Int, quantilesPermille: Seq[Int] = Seq(500, 900, 990),
-      salt: String = "graft"): DataFrame = {
+      value: Column, k: Int,
+      quantilesPermille: Seq[Int] = Seq(500, 900, 990)): DataFrame = {
     require(k > 0, s"sample size must be positive (got $k)")
     require(quantilesPermille.nonEmpty &&
       quantilesPermille.forall(q => q > 0 && q <= 1000),
       s"quantiles must be permille in (0, 1000]: $quantilesPermille")
-    val h = md5(concat(lit(salt), key.cast("string")))
+    val h = md5(concat(lit(Salt), key.cast("string")))
     val qCols = quantilesPermille.map { q =>
       element_at(col("vs"),
         greatest(lit(1), expr(s"($q * size(vs) + 999) div 1000")).cast("int"))
@@ -271,10 +272,10 @@ object Sampling {
     * every map task keeps ≤ k rows, the driver merges bounded heaps;
     * no global sort, no full shuffle, same shape at 100 TB. */
   def weightedPriorityTopK(df: DataFrame, key: Column, weight: Column,
-      k: Int, salt: String = "graftws"): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"sample size must be positive (got $k)")
     val h = element_at(graft.functions.Md5Bits60(
-      concat(lit(salt), key.cast("string"))), 1)
+      concat(lit("graftws"), key.cast("string"))), 1)
     df.filter(weight > 0)
       .select(key.as("key"), weight.as("weight"),
         (h.cast("double") / weight.cast("double")).as("priority"))
@@ -304,8 +305,8 @@ object Sampling {
     * groups are unbounded). Returns (g, q, v): the smallest v in the
     * group with at least ⌈q·n⌉ values ≤ it — `percentile_disc`
     * semantics, always an existing value. */
-  def quantilesBySearch(base0: DataFrame, qs: Seq[Double],
-      maxIter: Int = 64): DataFrame = {
+  def quantilesBySearch(base0: DataFrame, qs: Seq[Double]): DataFrame = {
+    val maxIter = 64
     require(qs.nonEmpty, "quantilesBySearch needs at least one quantile")
     val spark = base0.sparkSession
     import spark.implicits._

@@ -14,12 +14,38 @@ import graft.functions.VectorOps
   *    the ground truth for recall tests. Linear in |candidates|.
   *  - [[annTopK]]: random-hyperplane LSH bucketing. Candidates and
   *    queries hash to sign-pattern buckets; only same-bucket pairs are
-  *    scored, with `probes` extra query-directed multi-probe buckets
+  *    scored, with 24 extra query-directed multi-probe buckets
   *    (smallest-margin plane flips) to trade compute for recall. The
   *    bucket join is an equi-join on the bucket key —
   *    hash-partitionable, no broadcast of the full corpus — which
   *    is the 100 TB shape (IVF-style: route, then score within cell). */
 object Similarity {
+
+  /** The fixed-point ANN geometry, declared once: the fp kernels below and
+    * the `LlmOps` oracle builders that replay them both read it, so no
+    * value can change on one side only and fail the hash check unexplained. */
+  private[graft] object FpGeometry {
+    val Cells = 16          // k-means cells of the coarse quantizer
+    val Iters = 10          // unrolled integer Lloyd rounds
+    val SampleCap = 4096    // md5-rank training sample
+    val NProbe = 4          // probed cells per query
+    val FilteredNProbe = 8  // the filtered serve over-probes 2×
+    val PqM = 4             // PQ subspaces
+    val PqKSub = 16         // codes per PQ subspace codebook
+    val PqSubIters = 5      // Lloyd rounds per PQ codebook
+    val PqRefine = 8        // PQ shortlist = k · refine
+    val SqRefine = 8        // SQ shortlist = k · refine
+    val PcaDims = 2         // PCA-route reduced dimensions
+    val PcaPowerIters = 8   // power-iteration rounds per component
+    val PcaShortlist = 50   // PCA-route shortlist per query
+    val BqRefine = 16       // BQ shortlist = k · refine
+  }
+
+  /** Embedding width the LSH planes and PQ subspaces are cut for, and
+    * [[annTopK]]'s plane count and probe budget (its oracle reads them). */
+  private[graft] val Dim = 64
+  private[graft] val AnnPlanes = 6
+  private[graft] val AnnProbes = 24
 
   /** Exact cosine top-k for each query vector. Output ranks are
     * deterministic: ties broken by candidate id. */
@@ -127,26 +153,24 @@ object Similarity {
     }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed approximate top-k with **query-directed multi-probe**
-    * (Lv et al. 2007, "Multi-Probe LSH"): `nPlanes` sign bits → 2^nPlanes
-    * buckets, and each query additionally probes the `probes` buckets
+    * (Lv et al. 2007, "Multi-Probe LSH"): 6 sign bits → 2⁶ buckets, and
+    * each query additionally probes the 24 buckets
     * reached by flipping SUBSETS OF ITS SMALLEST-MARGIN planes — a true
     * neighbor that landed in another bucket almost certainly differs in
     * exactly the bits whose projections sit near zero. The round-5
     * formulation probed only single-bit flips, hard-capping probes at
     * nPlanes (recall plateaued at 0.22 on the near-uniform sf0.001
     * corpus, the hardest case for hyperplane LSH); subset perturbations
-    * keep scaling past that — measured 0.58 at the probes=24 default,
-    * and clustered corpora (real embeddings) do far better still.
+    * keep scaling past that — measured 0.58 at 24 probes ([[AnnProbes]]
+    * over [[AnnPlanes]] = 6 planes), and clustered corpora (real
+    * embeddings) do far better still.
     * Perturbation order is binary counting over the margin-ranked
     * planes: {1},{2},{1,2},{3},… — sizes grow as probes do, and every
     * subset is distinct, so probed buckets never repeat. Probing stays
     * per-row expression work feeding the same bucket equi-join — the
     * scale shape is unchanged. */
-  def annTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nPlanes: Int = 6, probes: Int = 24, dim: Int = 64): DataFrame = {
-    require(probes < (1 << nPlanes),
-      s"annTopK: probes=$probes must be < 2^nPlanes=${1 << nPlanes}")
-    val planes = hyperplanes(nPlanes, dim)
+  def annTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    val planes = hyperplanes(AnnPlanes, Dim)
     val c = candidates
       .select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
       .withColumn("cn", VectorOps.norm(col("cv")))
@@ -167,11 +191,11 @@ object Similarity {
     // perturbation k (1-based) flips the ranked planes named by k's set
     // bits; distinct bits make the XOR a plain sum of single-bit masks
     def mask(k: Int): Column =
-      (0 until nPlanes).filter(j => ((k >> j) & 1) == 1)
+      (0 until AnnPlanes).filter(j => ((k >> j) & 1) == 1)
         .map(j => expr(s"shiftleft(bigint(1), ranked[$j])"))
         .reduce(_ + _)
     val probeBuckets = array(
-      (col("bucket0") +: (1 to probes).map(k =>
+      (col("bucket0") +: (1 to AnnProbes).map(k =>
         col("bucket0").bitwiseXOR(mask(k)))): _*)
     val q = qb.select(col("query_id"), col("qv"), col("qn"),
       explode(probeBuckets).as("bucket"))
@@ -257,24 +281,23 @@ object Similarity {
     * ([[ivfFpCentroids]] training + this integer argmin) is exact
     * arithmetic a DuckDB oracle replays, so downstream mixture reports
     * gate fully instead of rows-only. */
-  def assignCellsFp(df: DataFrame, nCells: Int = 16, iters: Int = 10,
-      sampleCap: Int = 4096): DataFrame = {
-    val cents = ivfFpCentroids(df, nCells, iters, sampleCap)
+  def assignCellsFp(df: DataFrame): DataFrame = {
+    val cents = ivfFpCentroids(df)
     df.select(col("vec_id"), quantized(col("embedding")).as("__qv"))
       .select(col("vec_id"),
         fpCellScores(cents)(col("__qv")).getItem(0).getField("cell").as("cell"))
   }
 
   /** The deterministic, oracle-replayable training sample every fp
-    * trainer shares: the bottom-`cap` quantized vectors by
+    * trainer shares: the bottom-[[FpGeometry.SampleCap]] quantized vectors by
     * (md5("graftivffp"‖id) rank, id). ONE definition — the coarse
     * quantizer, the fp index builders, and the PQ subspace codebooks
     * must all draw the SAME sample or their oracles silently drift
     * apart (the `smpi` CTE is this method, verbatim, in SQL). */
-  private def fpSample(c0: DataFrame, cap: Int): Array[Array[Long]] =
+  private def fpSample(c0: DataFrame): Array[Array[Long]] =
     c0.orderBy(md5(concat(lit("graftivffp"), col("cand_id").cast("string"))),
         col("cand_id"))
-      .limit(cap)
+      .limit(FpGeometry.SampleCap)
       .select(col("qv")).collect()
       .map(_.getSeq[Long](0).toArray)
 
@@ -284,34 +307,39 @@ object Similarity {
     * Data-adaptive (unlike random hyperplanes), so recall holds even on
     * near-uniform corpora; the cell join is an equi-join on cell id —
     * hash-partitionable, with the centroid matrix (nCells × dim longs)
-    * riding as one literal. Training sample (md5-rank bottom-`sampleCap`
-    * ids, one TakeOrdered pass), seeds (the sample's first `nCells`
-    * vectors), the unrolled integer Lloyd ([[kMeansFp]]), corpus cell
+    * riding as one literal. Training sample (md5-rank bottom-4096 ids,
+    * one TakeOrdered pass), seeds (the sample's first 16 vectors), the
+    * unrolled integer Lloyd ([[kMeansFp]]), corpus cell
     * assignment and query probe routing are ALL exact integer arithmetic
     * a DuckDB oracle replays; only the final rank-only cosine re-rank is
     * float, the long-proven `vector_topk` gate shape. At nprobe 8 of 16
     * cells the recall against exact top-5 is 0.82 on sf0.001 and 0.84 on
-    * sf0.01 (20 queries); the default nprobe 4 is the gated geometry
-    * every `vector_ivf*_fp` oracle replays. The persisted form is
+    * sf0.01 (20 queries); nprobe defaults to [[FpGeometry]]'s 4, the
+    * gated geometry every `vector_ivf*_fp` oracle replays. The persisted form is
     * [[writeIvfIndexFp]] → [[ivfTopKIndexedFp]]. */
   def ivfFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 4, iters: Int = 10,
-      sampleCap: Int = 4096): DataFrame = {
-    require(nprobe <= nCells, s"nprobe=$nprobe must be <= nCells=$nCells")
-    val c0 = candidates.select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"), quantized(col("embedding")).as("qv"))
-    val sample = fpSample(c0, sampleCap)
-    val cents = kMeansFp(sample, sample.take(nCells), iters)
-    def cellScores(qv: Column): Column = fpCellScores(cents)(qv)
-    val cAssigned = c0.select(col("cand_id"), col("cv"),
-        cellScores(col("qv")).getItem(0).getField("cell").as("cell"))
+      nprobe: Int = FpGeometry.NProbe): DataFrame =
+    ivfFpServe(queries, candidates, None, k, nprobe)
+
+  /** The inline fp-IVF serve of [[ivfFpTopK]] and [[ivfFpTopKFiltered]]:
+    * cells trained on the whole corpus, candidates failing `keep` dropped
+    * after assignment, each query routed to its `nprobe` nearest cells. */
+  private def ivfFpServe(queries: DataFrame, candidates: DataFrame,
+      keep: Option[Column], k: Int, nprobe: Int): DataFrame = {
+    require(nprobe <= FpGeometry.Cells, s"nprobe=$nprobe must be <= ${FpGeometry.Cells} cells")
+    val c0 = candidates.select(Seq(col("vec_id").as("cand_id"), col("embedding").as("cv"),
+      quantized(col("embedding")).as("qv")) ++ keep.map(_.as("__keep")): _*)
+    val cents = ivfFpCentroids(candidates)
+    val cAssigned = (if (keep.isDefined) c0.filter(col("__keep")) else c0)
+      .select(col("cand_id"), col("cv"),
+        fpCellScores(cents)(col("qv")).getItem(0).getField("cell").as("cell"))
       .withColumn("cn", VectorOps.norm(col("cv")))
     val qAssigned = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qvf"),
         quantized(col("embedding")).as("qq"))
       .withColumn("qn", VectorOps.norm(col("qvf")))
       .select(col("query_id"), col("qvf").as("qv"), col("qn"),
-        explode(transform(slice(cellScores(col("qq")), 1, nprobe),
+        explode(transform(slice(fpCellScores(cents)(col("qq")), 1, nprobe),
           s => s.getField("cell"))).as("cell"))
     scoreCells(qAssigned, cAssigned, k)
   }
@@ -319,11 +347,10 @@ object Similarity {
   /** The trained fixed-point centroids, exposed for spec adjudication
     * (engine cells ≡ an independent driver recompute). */
   private[graft] def ivfFpCentroids(candidates: DataFrame,
-      nCells: Int = 16, iters: Int = 10,
-      sampleCap: Int = 4096): Array[Array[Long]] = {
+      nCells: Int = FpGeometry.Cells): Array[Array[Long]] = {
     val sample = fpSample(candidates.select(col("vec_id").as("cand_id"),
-      quantized(col("embedding")).as("qv")), sampleCap)
-    kMeansFp(sample, sample.take(nCells), iters)
+      quantized(col("embedding")).as("qv")))
+    kMeansFp(sample, sample.take(nCells), FpGeometry.Iters)
   }
 
   /** Max vectors the float k-means trainer of [[ivfPqTopK]] sees:
@@ -533,10 +560,9 @@ object Similarity {
     * unrolls, so "served from the persisted index ≡ inline
     * [[ivfFpTopK]]" is a driver hash equality. */
   def writeIvfIndexFp(candidates: DataFrame, table: String,
-      nCells: Int = 16, buckets: Int = 8, iters: Int = 10,
-      sampleCap: Int = 4096): Unit = {
+      nCells: Int = FpGeometry.Cells, buckets: Int = 8): Unit = {
     val spark = candidates.sparkSession
-    val cents = ivfFpCentroids(candidates, nCells, iters, sampleCap)
+    val cents = ivfFpCentroids(candidates, nCells)
     val c0 = candidates.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv"))
     Joins.writeBucketed(
@@ -667,10 +693,10 @@ object Similarity {
     * cells collapse to an `IN` filter (bucket pruning — only the probed
     * cells' buckets are read), float cosine only in the final rank-only
     * re-rank (the proven `vector_topk` gate shape). nprobe defaults to
-    * [[ivfFpTopK]]'s 4 so the served result IS the inline fp result. */
+    * [[ivfFpTopK]]'s so the served result IS the inline fp result. */
   def ivfTopKIndexedFp(queries: DataFrame,
       spark: org.apache.spark.sql.SparkSession, table: String, k: Int,
-      nprobe: Int = 4): DataFrame = {
+      nprobe: Int = FpGeometry.NProbe): DataFrame = {
     val cents = readCentroidsFp(spark, table)
     require(cents.nonEmpty,
       s"ivfTopKIndexedFp: empty centroid table for '$table'")
@@ -713,11 +739,9 @@ object Similarity {
     * Plan shape: cell equi-join + id equi-join, codebooks and LUTs
     * broadcast with the (tiny) query side — no corpus broadcast, no
     * nested loop, hash-partitionable at any corpus size. */
-  def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 8, m: Int = 8, kSub: Int = 32,
-      dim: Int = 64, refine: Int = 8): DataFrame = {
-    require(dim % m == 0, s"PQ: dim $dim not divisible by m $m")
-    val d = dim / m
+  def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    val (nCells, nprobe, m, kSub, refine) = (16, 8, 8, 32, 8)
+    val d = Dim / m
     val c0 = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
     val sample = trainSample(c0)
     val coarse = KMeansLite.fit(sample, nCells, iters = 10, seed = 42L)
@@ -804,19 +828,16 @@ object Similarity {
     * vs 8×8 of 32): the twin gates the PQ SHAPE — train → encode → ADC
     * shortlist → exact refine — not the production tuning, and the
     * smaller unroll keeps the oracle's 60 Lloyd CTEs tractable. */
-  def ivfPqFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 4, m: Int = 4, kSub: Int = 16,
-      dim: Int = 64, refine: Int = 8, iters: Int = 10, subIters: Int = 5,
-      sampleCap: Int = 4096): DataFrame = {
-    require(dim % m == 0, s"PQ: dim $dim not divisible by m $m")
-    val d = dim / m
+  def ivfPqFpTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    import FpGeometry.{PqM => m}
+    val d = Dim / m
     val c0 = candidates.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv"), quantized(col("embedding")).as("qv"))
-    val sample = fpSample(c0, sampleCap)
-    val coarse = kMeansFp(sample, sample.take(nCells), iters)
+    val sample = fpSample(c0)
+    val coarse = kMeansFp(sample, sample.take(FpGeometry.Cells), FpGeometry.Iters)
     val books: Array[Array[Array[Long]]] = Array.tabulate(m) { s =>
       val slices = sample.map(_.slice(s * d, (s + 1) * d))
-      kMeansFp(slices, slices.take(kSub), subIters)
+      kMeansFp(slices, slices.take(FpGeometry.PqKSub), FpGeometry.PqSubIters)
     }
     def sliceOf(v: Column, s: Int): Column = slice(v, s * d + 1, d)
     // one transform over the codebook matrix per subspace (the
@@ -835,7 +856,7 @@ object Similarity {
         quantized(col("embedding")).as("qq"))
       .withColumn("qn", VectorOps.norm(col("qvf")))
       .withColumn("cell", explode(transform(
-        slice(fpCellScores(coarse)(col("qq")), 1, nprobe),
+        slice(fpCellScores(coarse)(col("qq")), 1, FpGeometry.NProbe),
         s => s.getField("cell"))))
     // integer ADC: per subspace, L2 between the query's quantized slice
     // and the codebook row the candidate's code names (typedlit 2-D
@@ -852,7 +873,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"), col("qvf").as("qv"),
         col("qn"), adc.as("adc"))
       .withColumn("rank_adc", row_number().over(wAdc))
-      .filter(col("rank_adc") <= k * refine)
+      .filter(col("rank_adc") <= k * FpGeometry.PqRefine)
     val raw = c0.select(col("cand_id"), col("cv"))
       .withColumn("cn", VectorOps.norm(col("cv")))
     val w = Window.partitionBy(col("query_id"))
@@ -892,14 +913,10 @@ object Similarity {
     * ~8× vs the quantized longs. Stats/codes never broadcast the
     * corpus; the 64-row min/max collect is a bounded driver artifact
     * (the [[pcaRouteFpTopK]] Gram precedent, 32× smaller). */
-  def ivfSqFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 4, refine: Int = 8, iters: Int = 10,
-      sampleCap: Int = 4096): DataFrame = {
-    require(nprobe <= nCells, s"nprobe=$nprobe must be <= nCells=$nCells")
+  def ivfSqFpTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
     val c0 = candidates.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv"), quantized(col("embedding")).as("qv"))
-    val sample = fpSample(c0, sampleCap)
-    val cents = kMeansFp(sample, sample.take(nCells), iters)
+    val cents = ivfFpCentroids(candidates)
     // bounded collect: 64 (lo, hi) pairs — the per-dimension range the
     // scalar quantizer maps onto [0, 255]
     val stats = c0.select(posexplode(col("qv")).as(Seq("dim", "v")))
@@ -922,7 +939,7 @@ object Similarity {
       .withColumn("qn", VectorOps.norm(col("qvf")))
       .withColumn("qcd", codesOf(col("qq")))
       .withColumn("cell", explode(transform(
-        slice(fpCellScores(cents)(col("qq")), 1, nprobe),
+        slice(fpCellScores(cents)(col("qq")), 1, FpGeometry.NProbe),
         s => s.getField("cell"))))
     val sqDist = graft.functions.LongVecL2(col("qcd"), col("cd"))
     val wSq = Window.partitionBy(col("query_id"))
@@ -934,7 +951,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"), col("qvf").as("qv"),
         col("qn"), sqDist.as("sqd"))
       .withColumn("rank_sq", row_number().over(wSq))
-      .filter(col("rank_sq") <= k * refine)
+      .filter(col("rank_sq") <= k * FpGeometry.SqRefine)
     val raw = c0.select(col("cand_id"), col("cv"))
       .withColumn("cn", VectorOps.norm(col("cv")))
     val w = Window.partitionBy(col("query_id"))
@@ -1015,8 +1032,9 @@ object Similarity {
     * fixed-point power iteration trades eigen accuracy for
     * replayability, which only costs shortlist recall, and the gate is
     * engine≡oracle, not eigen-optimality. */
-  def pcaRouteFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      kDims: Int = 2, powerIters: Int = 8, shortlist: Int = 50): DataFrame = {
+  def pcaRouteFpTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    import FpGeometry.{PcaDims => kDims, PcaPowerIters => powerIters,
+      PcaShortlist => shortlist}
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     // bounded collect: the 64×64 upper-triangle integer Gram (2,080 rows)
     val gramRows = EmbeddingPca
@@ -1246,36 +1264,17 @@ object Similarity {
     * is applied to probed-cell candidates BEFORE ranking (post-filter
     * semantics — filtering commutes with cell assignment, so applying
     * it at the scan is plan-optimal and result-identical), and the
-    * caller over-probes (`nprobe` defaults to 2× the unfiltered
-    * serve's) to compensate the selectivity thinning each cell's
-    * match count below k. At scale the predicate is an ordinary
+    * caller over-probes (`nprobe` defaults to [[FpGeometry.FilteredNProbe]],
+    * 2× the unfiltered serve's) to compensate the selectivity thinning each
+    * cell's match count below k. At scale the predicate is an ordinary
     * pushed parquet filter on the bucket-pruned index scan (metadata
     * rides the index as plain columns), so post-filtering costs zero
     * extra I/O — the exact reason this beats the "pre-filter then
     * brute-force" plan once the filtered set outgrows a broadcast
     * ([[hardNegatives]] covers that regime). */
   def ivfFpTopKFiltered(queries: DataFrame, candidates: DataFrame,
-      pred: Column, k: Int, nCells: Int = 16, nprobe: Int = 8,
-      iters: Int = 10, sampleCap: Int = 4096): DataFrame = {
-    require(nprobe <= nCells, s"nprobe=$nprobe must be <= nCells=$nCells")
-    val c0 = candidates.select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"), quantized(col("embedding")).as("qv"),
-      pred.as("__keep"))
-    val sample = fpSample(c0, sampleCap)
-    val cents = kMeansFp(sample, sample.take(nCells), iters)
-    val cAssigned = c0.filter(col("__keep"))
-      .select(col("cand_id"), col("cv"),
-        fpCellScores(cents)(col("qv")).getItem(0).getField("cell").as("cell"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    val qAssigned = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvf"),
-        quantized(col("embedding")).as("qq"))
-      .withColumn("qn", VectorOps.norm(col("qvf")))
-      .select(col("query_id"), col("qvf").as("qv"), col("qn"),
-        explode(transform(slice(fpCellScores(cents)(col("qq")), 1, nprobe),
-          s => s.getField("cell"))).as("cell"))
-    scoreCells(qAssigned, cAssigned, k)
-  }
+      pred: Column, k: Int, nprobe: Int = FpGeometry.FilteredNProbe): DataFrame =
+    ivfFpServe(queries, candidates, Some(pred), k, nprobe)
 
   // -------------------------------------------------- binary quantization
 
@@ -1374,7 +1373,7 @@ object Similarity {
   }
 
   def bqFpTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      refine: Int = 16): DataFrame = {
+      refine: Int = FpGeometry.BqRefine): DataFrame = {
     val c0 = candidates.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv"), quantized(col("embedding")).as("qv"))
     val thr = bqThresholds(c0)
@@ -1424,8 +1423,7 @@ object Similarity {
     * the persisted thresholds, Hamming shortlist over the column-pruned
     * (cand_id, clo, chi) scan, exact refine joined back by id. */
   def bqTopKIndexedFp(queries: DataFrame,
-      spark: org.apache.spark.sql.SparkSession, table: String, k: Int,
-      refine: Int = 16): DataFrame = {
+      spark: org.apache.spark.sql.SparkSession, table: String, k: Int): DataFrame = {
     val thr = spark.table(s"${table}__thresholds")
       .select(col("dim"), col("thr")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).map(_._2)
@@ -1433,6 +1431,6 @@ object Similarity {
       s"bqTopKIndexedFp: expected 64 thresholds for '$table', got ${thr.length}")
     val cCoded = spark.table(table).select(col("cand_id"), col("clo"), col("chi"))
     val raw = spark.table(table).select(col("cand_id"), col("cv"), col("cn"))
-    bqServe(bqQuerySide(queries, thr), cCoded, raw, k, refine)
+    bqServe(bqQuerySide(queries, thr), cCoded, raw, k, FpGeometry.BqRefine)
   }
 }

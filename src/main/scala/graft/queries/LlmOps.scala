@@ -145,9 +145,10 @@ object LlmOps {
     * cluster-scale analogue is checkpointing this stage to object
     * storage. */
   private def verifiedMinhashPairs(spark: SparkSession, dir: String): DataFrame = {
+    import Dedup.MinHash
     val stage = Dedup.docSignatures(Tables.documents(spark, dir),
-      col("doc_id"), col("text"), 3, 64)
-    val pairs = Dedup.verifiedPairs(stage, 64, 16, 0.8)
+      col("doc_id"), col("text"), MinHash.N, MinHash.K)
+    val pairs = Dedup.verifiedPairs(stage, MinHash.K, MinHash.Bands, MinHash.Threshold)
     // Staged build with explicit lifecycle: ONE shuffle computes the
     // per-doc stage (MinHash signature + sorted hash set); banding and
     // verification read it from cache for the one eager materialization,
@@ -651,12 +652,12 @@ object LlmOps {
       .orderBy("query_id")
   }
 
-  /** Shared CTE prefix replaying [[Similarity.annTopK]] (nPlanes=6,
-    * probes=24, k=5, dim=64) in DuckDB: `annk` = the ANN top-5 pairs,
+  /** Shared CTE prefix replaying [[Similarity.annTopK]] (its 6 planes
+    * and 24 probes, k=5) in DuckDB: `annk` = the ANN top-5 pairs,
     * `qry`/`cand` expose norms for the exact twin. Left-associative
     * explicit dot chains mirror FloatVecDot's summation order exactly. */
   private lazy val annReplayCtes: String = {
-    val planes = Similarity.hyperplanes(6, 64)
+    val planes = Similarity.hyperplanes(Similarity.AnnPlanes, Similarity.Dim)
     // elem -> SQL for Σ elem[j]·plane[j], left-assoc (DuckDB lists are 1-based)
     def projChain(arr: String, p: Array[Float]): String =
       (0 until 64).map(j =>
@@ -674,13 +675,13 @@ object LlmOps {
     def maskExpr(k: Int): String =
       (0 until 6).filter(j => ((k >> j) & 1) == 1)
         .map(j => s"(CAST(1 AS BIGINT) << r.ranked[${j + 1}])").mkString(" + ")
-    val candProjs = (0 until 6)
+    val candProjs = (0 until Similarity.AnnPlanes)
       .map(i => s"    ${projChain("embedding", planes(i).toArray)} AS p$i")
       .mkString(",\n")
-    val qryProjs = (0 until 6)
+    val qryProjs = (0 until Similarity.AnnPlanes)
       .map(i => s"    ${projChain("embedding", planes(i).toArray)} AS m$i")
       .mkString(",\n")
-    val probeSelects = (1 to 24).map(k =>
+    val probeSelects = (1 to Similarity.AnnProbes).map(k =>
       s"  SELECT q.query_id, xor(q.bucket0, ${maskExpr(k)}) AS bucket\n" +
         "  FROM qry q JOIN rk r ON r.query_id = q.query_id")
       .mkString("\n  UNION ALL\n")
@@ -798,11 +799,11 @@ object LlmOps {
     s"list_sum(list_transform(range(1, ${d + 1}), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
 
   /** Shared oracle prefix replaying [[Similarity.kMeansFp]] (quantize →
-    * md5-rank sample/seeds → `iters` unrolled Lloyd rounds → corpus cell
-    * assignment `ca(cand_id, cell)`), used by both fixed-point-routed
-    * queries so the Lloyd replay cannot drift between them. */
-  private def ivfFpLloydCtes(iters: Int = 10, nCells: Int = 16,
-      cap: Int = 4096, sampleWhere: String = ""): String = {
+    * md5-rank sample/seeds → unrolled Lloyd rounds → corpus cell
+    * assignment `ca(cand_id, cell)`, at [[Similarity.FpGeometry]]), used
+    * by every fixed-point-routed query so the Lloyd replay cannot drift. */
+  private def ivfFpLloydCtes(sampleWhere: String = ""): String = {
+    import Similarity.FpGeometry.{Cells => nCells, Iters => iters, SampleCap => cap}
     val rounds = (1 to iters).map { t =>
       s"""a$t AS MATERIALIZED (
          |  SELECT rn, qv, cell FROM (
@@ -852,8 +853,8 @@ object LlmOps {
     * inline, from a persisted index, or from a compacted one — that
     * equality is exactly the maintenance law under gate. */
   private def ivfFpServeSql(sampleWhere: String = ""): String = {
-    val (iters, nprobe) = (10, 4)
-    s"""WITH ${ivfFpLloydCtes(iters, sampleWhere = sampleWhere)},
+    import Similarity.FpGeometry.{Iters => iters, NProbe => nprobe}
+    s"""WITH ${ivfFpLloydCtes(sampleWhere)},
        |qp AS MATERIALIZED (
        |  SELECT query_id, cell FROM (
        |    SELECT q.vec_id AS query_id, c.cell,
@@ -942,7 +943,7 @@ object LlmOps {
   }
 
   private lazy val vectorIndexStatsSql: String =
-    s"""WITH ${ivfFpLloydCtes(10, sampleWhere = " WHERE vec_id % 10 <> 0")},
+    s"""WITH ${ivfFpLloydCtes(" WHERE vec_id % 10 <> 0")},
        |sizes AS MATERIALIZED (
        |  SELECT cell, COUNT(*) AS n_rows FROM ca GROUP BY cell),
        |frame AS MATERIALIZED (
@@ -999,7 +1000,9 @@ object LlmOps {
   }
 
   private lazy val vectorPqFpSql: String = {
-    val (iters, nprobe, m, kSub, d, refine, subIters) = (10, 4, 4, 16, 16, 8, 5)
+    import Similarity.FpGeometry.{Iters => iters, NProbe => nprobe, PqM => m,
+      PqKSub => kSub, PqRefine => refine, PqSubIters => subIters}
+    val d = Similarity.Dim / m
     def sliceExpr(base: String): Int => String =
       s => s"($base[${s * d + 1}:${s * d + d}])"
     // per-subspace codebook Lloyd replay: slices of the SAME smpi sample,
@@ -1043,7 +1046,7 @@ object LlmOps {
       s"  JOIN e$s ON e$s.cand_id = c.cand_id\n" +
         s"  JOIN b$s$subIters bb$s ON bb$s.cell = e$s.code"
     }.mkString("\n")
-    s"""WITH ${ivfFpLloydCtes(iters)},
+    s"""WITH ${ivfFpLloydCtes()},
        |$bookCtes,
        |$encCtes,
        |qp AS MATERIALIZED (
@@ -1101,7 +1104,8 @@ object LlmOps {
   }
 
   private lazy val vectorPcaRouteFpSql: String = {
-    val (kDims, powerIters, shortlist) = (2, 8, 50)
+    import Similarity.FpGeometry.{PcaDims => kDims, PcaPowerIters => powerIters,
+      PcaShortlist => shortlist}
     // DuckDB BIGINT `//` truncates toward zero exactly like Java `/`
     // and Spark `div` (verified: (−7)//2 = −3), so plain `//` is the
     // mirror for every division here, negative numerators included.
@@ -1211,8 +1215,8 @@ object LlmOps {
   }
 
   private lazy val vectorSqFpSql: String = {
-    val (iters, nprobe, refine) = (10, 4, 8)
-    s"""WITH ${ivfFpLloydCtes(iters)},
+    import Similarity.FpGeometry.{Iters => iters, NProbe => nprobe, SqRefine => refine}
+    s"""WITH ${ivfFpLloydCtes()},
        |mm AS MATERIALIZED (
        |  SELECT t.i AS dim, MIN(qv[CAST(t.i AS INT)]) AS lo,
        |    ((MAX(qv[CAST(t.i AS INT)]) - MIN(qv[CAST(t.i AS INT)])) // 255) + 1 AS sc
@@ -1421,8 +1425,8 @@ object LlmOps {
   }
 
   private lazy val vectorAnnFilteredFpSql: String = {
-    val (iters, nprobe) = (10, 8)
-    s"""WITH ${ivfFpLloydCtes(iters)},
+    import Similarity.FpGeometry.{Iters => iters, FilteredNProbe => nprobe}
+    s"""WITH ${ivfFpLloydCtes()},
        |qp AS MATERIALIZED (
        |  SELECT query_id, cell FROM (
        |    SELECT q.vec_id AS query_id, c.cell,
@@ -1477,7 +1481,7 @@ object LlmOps {
   }
 
   private lazy val vectorBqFpSql: String = {
-    val shortlist = 5 * 16
+    val shortlist = 5 * Similarity.FpGeometry.BqRefine
     s"""WITH qd AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    list_transform(embedding,

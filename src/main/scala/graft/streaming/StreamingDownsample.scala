@@ -268,27 +268,23 @@ object StreamingDownsample {
     * projection, so append mode, no watermark, no state store.
     * Downstream, threshold on `score` to gate ingest toward the target
     * domain — the streaming complement of the batch
-    * [[graft.operators.Dsir.selectTopK]] ranking. */
-  def dsirScoreStream(docs: DataFrame, cTgt: Seq[Long], cRaw: Seq[Long],
-      bigrams: Boolean = false): DataFrame =
+    * [[graft.operators.Dsir.selectTopK]] ranking. Unigram features only,
+    * as [[graft.operators.Dsir.hashedFreq]] collects them by default. */
+  def dsirScoreStream(docs: DataFrame, cTgt: Seq[Long], cRaw: Seq[Long]): DataFrame =
     graft.operators.Dsir.scoreWithFreq(docs, col("doc_id"), col("text"),
-      cTgt, cRaw, bigrams)
+      cTgt, cRaw)
 
   /** Stateless **PCA-projection stage**: embed-then-reduce at ingest —
-    * W (and optionally λ for whitening) fitted batch-side by
+    * W and the eigenvalues λ for whitening, fitted batch-side by
     * [[graft.operators.EmbeddingPca.fitProjectionWithVariance]], the
     * rows travelling as array literals inside k per-row codegen'd dot
     * products; append mode, no watermark, no state store — the same
     * train-batch/serve-stream split as [[scoreStream]] and
     * [[dsirScoreStream]]. */
   def pcaProjectStream(vecs: DataFrame, w: Seq[Seq[Float]],
-      lambdas: Option[Seq[Double]] = None): DataFrame =
-    lambdas match {
-      case Some(l) => graft.operators.EmbeddingPca.projectWhitened(
-        vecs, col("vec_id"), col("embedding"), w, l)
-      case None => graft.operators.EmbeddingPca.project(
-        vecs, col("vec_id"), col("embedding"), w)
-    }
+      lambdas: Seq[Double]): DataFrame =
+    graft.operators.EmbeddingPca.projectWhitened(
+      vecs, col("vec_id"), col("embedding"), w, lambdas)
 
   /** Stateless **classifier-serving stage**: score each streamed doc
     * under weights trained batch-side by
@@ -385,9 +381,10 @@ object StreamingDownsample {
     * is the batch step of the loop (dedupe the accumulated batch, then
     * [[graft.operators.Dedup.appendToSignatureIndex]] folds it in). */
   def nearDupStream(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
-      indexTable: String, n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
+      indexTable: String, k: Int = graft.operators.Dedup.MinHash.K,
+      bands: Int = graft.operators.Dedup.MinHash.Bands): DataFrame = {
     import graft.operators.Dedup
+    import Dedup.MinHash.{N => n}
     val index = spark.table(indexTable)
     // Guard (round-5 advice): (k, n) must match the stored index
     // parameters — see [[Dedup.requireIndexParams]] for why a mismatch
@@ -432,7 +429,7 @@ object StreamingDownsample {
     val cand = streamBands.join(idxBands, Seq("band", "bh"))
       .filter(col("band") === minCollidingBand)
       .select(col("delta_id"), col("idx_id"), col("hss").as("hs_d"))
-    Dedup.verifyIndexPairs(index, cand, threshold)
+    Dedup.verifyIndexPairs(index, cand, Dedup.MinHash.Threshold)
   }
 
   /** `foreachBatch` sink body for the same check: each micro-batch is an
@@ -445,10 +442,10 @@ object StreamingDownsample {
     * batch's signatures are persisted for that batch only and released
     * before the next one. */
   def nearDupForeachBatch(spark: org.apache.spark.sql.SparkSession,
-      indexTable: String, outPath: String, n: Int = 3, k: Int = 64,
-      bands: Int = 16, threshold: Double = 0.8): (DataFrame, Long) => Unit =
+      indexTable: String, outPath: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       import graft.operators.Dedup
+      import Dedup.MinHash.{Bands => bands, K => k, N => n, Threshold => threshold}
       Dedup.requireIndexParams(spark, indexTable, "nearDupForeachBatch", k, n)
       val sigs = Dedup.docSignatures(batch, col("doc_id"), col("text"), n, k).persist()
       try Dedup.indexPairs(spark.table(indexTable), sigs, k, bands, threshold)

@@ -1009,7 +1009,7 @@ class StreamingSpec extends SparkTestBase {
       k = 3)
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = StreamingDownsample.pcaProjectStream(
-        mem.toDF().toDF("vec_id", "embedding"), w, Some(l))
+        mem.toDF().toDF("vec_id", "embedding"), w, l)
       .writeStream.format("memory").queryName("pca_out")
       .outputMode("append").start()
     mem.addData(vecs)
@@ -1018,7 +1018,7 @@ class StreamingSpec extends SparkTestBase {
       .as[(Long, Double, Double, Double)].collect().toSet
     q.stop()
     val batch = StreamingDownsample.pcaProjectStream(
-        vecs.toDF("vec_id", "embedding"), w, Some(l))
+        vecs.toDF("vec_id", "embedding"), w, l)
       .as[(Long, Double, Double, Double)].collect().toSet
     assert(streamed == batch && batch.size == vecs.size)
   }
@@ -1038,6 +1038,17 @@ class StreamingSpec extends SparkTestBase {
         k = 32, bands = 16)
     }
     assert(err.getMessage.contains("signatures of length 64"))
+    // the foreachBatch body has no k of its own: its fixed k = 64 must be
+    // refused by an index whose stored signatures have length 32
+    spark.sql("DROP TABLE IF EXISTS graft_sig_index_k32")
+    graft.operators.Dedup.appendToSignatureIndex(docs.limit(10), col("doc_id"),
+      col("text"), "graft_sig_index_k32", k = 32)
+    val out = java.nio.file.Files.createTempDirectory("graftndk32").toString + "/pairs"
+    val errBatch = intercept[IllegalArgumentException] {
+      StreamingDownsample.nearDupForeachBatch(spark, "graft_sig_index_k32", out)(
+        docs.limit(5), 0L)
+    }
+    assert(errBatch.getMessage.contains("signatures of length 32"))
   }
 
   test("stream-static decontamination flags exactly the batch contamination set") {

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Spread- and CPU-aware comparison of two BENCH_FULL.json artifacts.
+"""Spread- and CPU-aware comparison of two Bench full artifacts
+(`BENCH_FULL_c<cpus>.json`, or the older `BENCH_FULL.json`).
 
 Usage: tools/benchdiff.py <old.json> <new.json> [threshold]
 
